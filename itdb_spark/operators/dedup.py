@@ -25,6 +25,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -442,6 +444,14 @@ def ngram_decontam(
     )
 
 
+def _folded(sh: DataFrame) -> DataFrame:
+    """(doc, w) with string shingles folded to xxhash64 longs; a frame
+    the caller already folded to bigint passes through unhashed."""
+    if dict(sh.dtypes)["w"] == "bigint":
+        return sh.select("doc", "w")
+    return sh.select("doc", F.xxhash64("w").alias("w"))
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str,
@@ -470,7 +480,8 @@ def ngram_jaccard_pairs(
     ``shingle_frame``) only when the caller is ALREADY amortizing the
     explode across another consumer; the self-built candidates path
     computes per-doc shingle arrays in-row instead (shingle_set_col — no
-    explode, no groupBy(doc) exchange, r15)."""
+    explode, no groupBy(doc) exchange, r15). ``shingles`` may carry string
+    shingles or ones already folded to bigint (``_folded``)."""
     from itdb_spark.plans.library import materialized, truncate_lineage
 
     if candidates is not None:
@@ -485,11 +496,11 @@ def ngram_jaccard_pairs(
         # shingle plus an aggregation.
         if shingles is not None:
             # caller-shared cached explode: fold + collect per doc (the
-            # pre-r15 shape; the caller is amortizing the explode across
-            # the candidate stage, so consume it rather than re-shingle)
-            arrs = shingles.select(
-                "doc", F.xxhash64("w").alias("w")
-            ).groupBy("doc").agg(F.collect_list("w").alias("ws"))
+            # caller is amortizing the explode across the candidate
+            # stage, so consume it rather than re-shingle)
+            arrs = _folded(shingles).groupBy("doc").agg(
+                F.collect_list("w").alias("ws")
+            )
         else:
             # r15: the shingle-hash array is a PER-ROW fact, so the
             # self-built path computes it in-row (shingle_set_col — no
@@ -535,7 +546,7 @@ def ngram_jaccard_pairs(
         base = (
             shingles if shingles is not None else shingle_frame(docs, id_col, text_col)
         )
-        words = truncate_lineage(base.select("doc", F.xxhash64("w").alias("w")))
+        words = truncate_lineage(_folded(base))
         sizes = words.groupBy("doc").agg(F.count("*").alias("sz"))
         a = words.alias("a")
         b = words.alias("b")
@@ -560,78 +571,266 @@ def ngram_jaccard_pairs(
     return materialized(verified)
 
 
-def containment_candidates(
-    sh: DataFrame, t_num: int = 8, t_den: int = 10, materialize: bool = False
-) -> DataFrame:
-    """Small-side prefix-filter candidate pairs (id1 < id2) for
-    ``containment_join`` from a (doc, w) shingle frame — exposed
-    separately so the Zipf-fixture invariant test and the bench tooling
-    can pin the candidate FRACTION (the quantity the sub-quadratic claim
-    rides on) without paying for verification.
+# --- containment family --------------------------------------------------
+#
+# Five heads share one spine over DISTINCT shingle sets:
+#   _canon → _rank → _candidates → _verify → _expand / _same_set_pairs
+# containment_join and containment_join_incremental rebuild the corpus
+# ranks per call; persist_containment_index writes them once and
+# containment_probe_persisted / append_containment_index read them.
+#
+# Eager points: a frame referenced more than once downstream is
+# materialized with truncate_lineage (an eager localCheckpoint), not
+# .cache(). Every reference to a cached frame re-analyzes its whole
+# logical subtree, and with each later frame containing the earlier ones
+# the composed plan grows near-exponentially (measured at 1.5 s of driver
+# planning per probe call); a checkpoint is the same single
+# materialization but leaves a leaf scan behind. Each checkpointed frame
+# is bounded by distinct content, the batch or the candidate set.
 
-    ``materialize=True`` (the owning containment_join path) eagerly
-    checkpoints the ranked frame: it feeds the candidate join on BOTH
-    sides (prefix + index), so unmaterialized the join+two-windows
-    subtree is planned and executed twice — ReuseExchange shares only
-    the shuffle below the windows, not the sort+window above it. The
-    default stays lazy for the plan-audit/invariant-test callers."""
-    df_ = sh.groupBy("w").agg(F.count("*").alias("df"))
-    ranked = (
-        sh.join(df_, "w")
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("doc").orderBy("df", "w")),
-        )
-        .withColumn("nt", F.count("*").over(Window.partitionBy("doc")))
+
+def _canon(doc_sets: DataFrame) -> DataFrame:
+    """(doc, ts, *flags) → (ts, sid, members): one row per DISTINCT
+    shingle set, sid = min(doc), members = the doc-sorted array of
+    struct(doc, *flags). Candidates and verification then run per set,
+    not per doc, so work scales with distinct content rather than
+    duplication depth (crawls are commonly 30-50% exact-duplicate
+    content; the per-doc form over-spilled the host disk at sf10). The
+    group key is the exact sorted shingle array, no hash involved."""
+    member = F.struct(*[c for c in doc_sets.columns if c != "ts"])
+    return doc_sets.groupBy("ts").agg(
+        F.min("doc").alias("sid"),
+        F.sort_array(F.collect_list(member)).alias("members"),
     )
-    if materialize:
-        from itdb_spark.plans.library import truncate_lineage
 
-        ranked = truncate_lineage(ranked)
-    # prefix length |S| - ceil(t|S|) + 1; integer ceil = (t_num*n + t_den-1) DIV t_den
-    prefix = ranked.where(
-        F.col("rn")
-        <= F.col("nt") - F.expr(f"({t_num} * nt + {t_den - 1}) DIV {t_den}") + 1
-    ).select("doc", "w", "nt", "rn")
-    index = ranked.select("doc", "w", "nt", "rn")
-    # PPJoin positional filter (Xiao/Wang/Lin/Yu WWW 2008 §3.2, adapted
-    # to the containment measure; round 11 — the sf10 second-decade
-    # point measured the UNfiltered candidate set at ~1.2% of quadratic
-    # on the saturated synthetic vocabulary, which fed ~83 GB of
-    # array-carrying rows into the verification join and over-spilled
-    # the host disk): for any common shingle at ranks (rn_a, rn_b),
-    # every OTHER common shingle of the pair sits after SOME common
-    # shingle, so at the pair's first common shingle
-    # |A∩B| <= 1 + min(nt_a - rn_a, nt_b - rn_b). The max of that bound
-    # over the matched prefix shingles is >= the bound at the first
-    # common shingle (remaining counts shrink with rank), hence pruning
-    # pairs whose max bound misses ceil(t*min(nt)) is LOSSLESS — the
-    # recall pins (tests/test_wave10.py) and the exhaustive oracle gate
-    # it. The groupBy REPLACES the old .distinct() (same shuffle, two
-    # extra int columns), so the filter is structurally free.
+
+def _members(canon: DataFrame) -> DataFrame:
+    """(sid, m): one row per member struct of each canonical set."""
+    return canon.select("sid", F.explode("members").alias("m"))
+
+
+def _ceil_t(nt: str, t_num: int, t_den: int) -> Column:
+    """ceil(t * nt) in integers: the overlap a set of size nt must reach
+    with its partner. Prefix length is nt - ceil(t * nt) + 1."""
+    return F.expr(f"({t_num} * {nt} + {t_den - 1}) DIV {t_den}")
+
+
+def _rank(post: DataFrame, t_num: int, t_den: int) -> DataFrame:
+    """Rank a (sid, w, df) posting frame rarest-first: rn = rank of w in
+    its set under (df, w), nt = set size, pfx = w lies in the set's
+    prefix.
+
+    Prefix-filter theorem (Bayardo/Ma/Srikant WWW 2007 §4, specialized
+    to C(A,B) = |A∩B| / min(|A|,|B|)): under any global total order of
+    shingles, a qualifying pair's SMALLER set S shares >= ceil(t|S|)
+    shingles with the other set, so S's first |S| - ceil(t|S|) + 1
+    shingles cannot all miss it. Candidate generation therefore joins
+    only small-side prefixes against the full posting index. The order
+    needs only to be total and shared, so a frozen persisted df (0 for
+    never-indexed shingles) is as lossless as a recomputed one;
+    rarest-first is for pruning (prefix shingles are the globally
+    rarest, so candidate cost is sum over prefix shingles of df, which
+    is sub-quadratic on Zipfian df). Ranking by the xxhash64 fold of
+    the shingle instead of its string only changes which candidates are
+    probed, never which pairs verify."""
+    by_set = Window.partitionBy("sid")
     return (
+        post.withColumn("rn", F.row_number().over(by_set.orderBy("df", "w")))
+        .withColumn("nt", F.count("*").over(by_set))
+        .withColumn("pfx", F.col("rn") <= F.col("nt") - _ceil_t("nt", t_num, t_den) + 1)
+    )
+
+
+def _with_df(post: DataFrame) -> DataFrame:
+    """Attach each shingle's df, counted over the (sid, w) postings."""
+    return post.join(post.groupBy("w").agg(F.count("*").alias("df")), "w")
+
+
+def _frozen_df(post: DataFrame, vocab: DataFrame) -> DataFrame:
+    """Attach the persisted df to (sid, w) postings from the index's
+    kind='vocab' rows: the postings' own keys broadcast into the vocab
+    scan, and never-indexed shingles take df = 0."""
+    seen = vocab.join(F.broadcast(post.select("w").distinct()), "w")
+    return post.join(F.broadcast(seen), "w", "left").na.fill(0, ["df"])
+
+
+def _candidates(
+    probes: list[tuple[DataFrame, DataFrame]], t_num: int, t_den: int
+) -> DataFrame:
+    """Candidate set pairs (id1 < id2) from (prefix, index) probe pairs of
+    ranked (sid, w, nt, rn) postings. A prefix row probes index rows of
+    the same shingle whose set is at least as large (ties: larger sid),
+    so each pair is generated from its small side only.
+
+    PPJoin positional filter (Xiao/Wang/Lin/Yu WWW 2008 §3.2, adapted to
+    containment): for a common shingle at ranks (rn_a, rn_b), every
+    later common shingle sits after it in both sets, so at the pair's
+    FIRST common shingle |A∩B| <= 1 + min(nt_a - rn_a, nt_b - rn_b).
+    The max of that bound over all matched prefix shingles (and over
+    every probe, so a pair found twice is judged on its best bound) is
+    >= the bound at the first common one, hence dropping pairs whose max
+    misses ceil(t * nt_small) is lossless. Without it, the sf10 candidate
+    set fed ~83 GB of array rows into verification."""
+    small_side = (F.col("a.nt") < F.col("b.nt")) | (
+        (F.col("a.nt") == F.col("b.nt")) & (F.col("a.sid") < F.col("b.sid"))
+    )
+    pairs = [
         prefix.alias("a")
         .join(index.alias("b"), "w")
-        .where(
-            (F.col("a.nt") < F.col("b.nt"))
-            | ((F.col("a.nt") == F.col("b.nt")) & (F.col("a.doc") < F.col("b.doc")))
-        )
+        .where(small_side)
         .select(
-            F.least(F.col("a.doc"), F.col("b.doc")).alias("id1"),
-            F.greatest(F.col("a.doc"), F.col("b.doc")).alias("id2"),
+            F.least("a.sid", "b.sid").alias("id1"),
+            F.greatest("a.sid", "b.sid").alias("id2"),
             (
                 F.lit(1)
-                + F.least(
-                    F.col("a.nt") - F.col("a.rn"), F.col("b.nt") - F.col("b.rn")
-                )
+                + F.least(F.col("a.nt") - F.col("a.rn"), F.col("b.nt") - F.col("b.rn"))
             ).alias("ub"),
-            F.expr(f"({t_num} * a.nt + {t_den - 1}) DIV {t_den}").alias("req"),
+            _ceil_t("a.nt", t_num, t_den).alias("req"),
         )
+        for prefix, index in probes
+    ]
+    return (
+        reduce(DataFrame.unionByName, pairs)
         .groupBy("id1", "id2")
         .agg(F.max("ub").alias("ub"), F.max("req").alias("req"))
         .where(F.col("ub") >= F.col("req"))
         .select("id1", "id2")
     )
+
+
+def _verify(cand: DataFrame, sets: DataFrame, t_num: int, t_den: int) -> DataFrame:
+    """Exact check of candidate set pairs against the (sid, ts) arrays:
+    (id1, id2, inter, small) where t_den * inter >= t_num * small, the
+    threshold in cleared-denominator integers."""
+
+    def side(k: int) -> DataFrame:
+        return sets.select(F.col("sid").alias(f"id{k}"), F.col("ts").alias(f"ts{k}"))
+
+    return (
+        cand.join(side(1), "id1")
+        .join(side(2), "id2")
+        .select(
+            "id1",
+            "id2",
+            F.size(F.array_intersect("ts1", "ts2")).cast("long").alias("inter"),
+            F.least(F.size("ts1"), F.size("ts2")).cast("long").alias("small"),
+        )
+        .where(t_den * F.col("inter") >= t_num * F.col("small"))
+    )
+
+
+def _expand(qual: DataFrame, members: DataFrame) -> DataFrame:
+    """Qualifying set pairs → member pairs (m1, m2, inter, small) through
+    a (sid, m) member map."""
+
+    def side(k: int) -> DataFrame:
+        return members.select(F.col("sid").alias(f"id{k}"), F.col("m").alias(f"m{k}"))
+
+    return (
+        qual.join(side(1), "id1")
+        .join(side(2), "id2")
+        .select("m1", "m2", "inter", "small")
+    )
+
+
+def _same_set_pairs(canon: DataFrame) -> DataFrame:
+    """Member pairs inside one canonical set, containment 1 by definition,
+    emitted in-row over the doc-sorted members without reaching the
+    verifier: (m1, m2, inter, small) with m1 before m2."""
+    n = F.size("ts").cast("long")
+    pairs = F.expr(
+        "flatten(transform(members, (m1, i) -> "
+        "transform(slice(members, i + 2, size(members)), m2 -> struct(m1, m2))))"
+    )
+    return (
+        canon.where(F.size("members") >= 2)
+        .select(n.alias("inter"), n.alias("small"), F.explode(pairs).alias("p"))
+        .select(F.col("p.m1").alias("m1"), F.col("p.m2").alias("m2"), "inter", "small")
+    )
+
+
+def _doc_pairs(cross: DataFrame, same: DataFrame, keep: Column) -> DataFrame:
+    """The containment output (id1 < id2, inter, small, contain_milli)
+    from the expanded and same-set member pairs that satisfy ``keep``."""
+    return (
+        cross.unionByName(same)
+        .where(keep)
+        .select(
+            F.least("m1.doc", "m2.doc").alias("id1"),
+            F.greatest("m1.doc", "m2.doc").alias("id2"),
+            "inter",
+            "small",
+            F.expr("CAST(1000 * inter DIV small AS BIGINT)").alias("contain_milli"),
+        )
+    )
+
+
+def containment_candidates(
+    sh: DataFrame, t_num: int = 8, t_den: int = 10, materialize: bool = False
+) -> DataFrame:
+    """Small-side prefix-filter candidate pairs (id1 < id2) from a
+    (doc, w) shingle frame, without verification: exposed so the
+    Zipf-fixture invariant test and the bench tooling can pin the
+    candidate fraction, the quantity the sub-quadratic claim rides on.
+    ``materialize=True`` checkpoints the ranked frame, which feeds both
+    join sides; the default stays lazy for plan audits."""
+    from itdb_spark.plans.library import truncate_lineage
+
+    post = sh.select(F.col("doc").alias("sid"), "w")
+    ranked = _rank(_with_df(post), t_num, t_den)
+    if materialize:
+        ranked = truncate_lineage(ranked)
+    return _candidates([(ranked.where("pfx"), ranked)], t_num, t_den)
+
+
+def _containment_self_join(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    t_num: int,
+    t_den: int,
+    new_col: str | None,
+    materialize: bool,
+) -> DataFrame:
+    """The rebuild head behind containment_join (no ``new_col``: one
+    probe, every pair kept) and containment_join_incremental (the
+    two-probe case split, pairs touching the increment kept). df is
+    counted over distinct sets per call."""
+    from itdb_spark.plans.library import materialized, truncate_lineage
+
+    flags = [F.col(new_col).alias("is_new")] if new_col else []
+    # NULL-text guard on the text column (see doc_shingle_sets)
+    doc_sets = docs.where(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("doc"), shingle_set_col(text_col).alias("ts"), *flags
+    )
+    canon = _canon(doc_sets)
+    if materialize:
+        canon = truncate_lineage(canon)
+    touch = (
+        [
+            F.exists("members", lambda m: m["is_new"]).alias("has_new"),
+            F.exists("members", lambda m: ~m["is_new"]).alias("has_old"),
+        ]
+        if new_col
+        else []
+    )
+    ranked = _rank(
+        _with_df(canon.select("sid", *touch, F.explode("ts").alias("w"))), t_num, t_den
+    )
+    if materialize:
+        ranked = truncate_lineage(ranked)
+    prefix = ranked.where("pfx")
+    if new_col:
+        probes = [
+            (prefix.where("has_new"), ranked),
+            (prefix.where("has_old"), ranked.where("has_new")),
+        ]
+        keep = F.col("m1.is_new") | F.col("m2.is_new")
+    else:
+        probes, keep = [(prefix, ranked)], F.lit(True)
+    qual = _verify(_candidates(probes, t_num, t_den), canon, t_num, t_den)
+    out = _doc_pairs(_expand(qual, _members(canon)), _same_set_pairs(canon), keep)
+    return materialized(out, canon) if materialize else out
 
 
 def containment_join_incremental(
@@ -642,223 +841,21 @@ def containment_join_incremental(
     t_num: int = 8,
     t_den: int = 10,
 ) -> DataFrame:
-    """Incremental form of ``containment_join``: EXACTLY the pairs at
-    containment >= t that TOUCH the increment (``new_col`` boolean marks
-    the newly-ingested docs) — the append-only production shape: a batch
-    lands, screen it for subsumption against the whole corpus WITHOUT
-    regenerating the old×old pair space.
+    """Incremental form of ``containment_join``: exactly the pairs at
+    containment >= t that TOUCH the increment (``new_col`` marks the
+    newly ingested docs), without regenerating the old×old pair space.
 
-    Still lossless, by splitting the small-side prefix probe on which
-    side is new. For a qualifying pair (A small, B other):
-    * A new  → probe 1 covers it: prefixes of NEW docs join the FULL
-      inverted index (old ∪ new);
-    * A old, B new → probe 2 covers it: prefixes of OLD docs join the
-      index restricted to NEW docs' shingles only.
-    Old×old pairs are generated by NEITHER probe — that is the whole
-    saving: probe 2's index side is increment-sized, probe 1's prefix
-    side is increment-sized, so pair-generation work is bounded by the
-    batch, never the corpus². Document frequencies (the rarest-first
-    prefix order) are recomputed over the UNION — one cheap groupBy
-    pass, the exactness price: stale df could reorder prefixes and
-    break the theorem. (A FROZEN hash order would avoid even that pass
-    and stay lossless — any fixed total order satisfies the theorem —
-    but gives up rarest-first pruning; measured on the Zipf fixture the
-    df order keeps ~100x fewer candidates, so the union-df recompute is
-    the right trade.) Verification is the same exact intersection over
-    candidates; output schema matches containment_join.
-    """
-    from itdb_spark.plans.library import materialized, truncate_lineage
-
-    # canonicalize over the UNION (the containment_join discipline,
-    # extended with the increment class): docs group by exact shingle
-    # set; a set is new-touched / old-touched from its members, the
-    # case-split probes run at SET level, and qualifying set pairs
-    # expand back to doc pairs filtered to those touching the increment.
-    # r15: the shingle set AND the is_new flag are both per-row facts,
-    # so doc_sets is ONE in-row projection (shingle_set_col) — the old
-    # explode→groupBy(doc)→join(flags) shape paid a corpus-scale
-    # exchange plus a join to reassemble columns that never left the row.
-    # NULL-text guard on the TEXT column (ts is NULL iff text is NULL;
-    # a ts filter would re-evaluate the shingle expression — see
-    # doc_shingle_sets)
-    doc_sets = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc"),
-        shingle_set_col(text_col).alias("ts"),
-        F.col(new_col).alias("is_new"),
-    )
-    # eager lineage truncation instead of .cache(): canon is referenced
-    # 5x below (rep / reps twice / members twice / same) and every
-    # reference to a CACHED frame re-analyzes its full logical subtree —
-    # the same near-exponential plan-composition cost measured at 1.5 s
-    # driver wall per call on containment_probe_persisted (guide §3.3 /
-    # §7.3: materialize to truncate the plan). The checkpoint is one
-    # materialization of the same distinct-content-bounded frame the
-    # cache held, so the 100 TB shape is unchanged.
-    canon = truncate_lineage(
-        doc_sets.groupBy("ts")
-        .agg(
-            F.min("doc").alias("sid"),
-            F.sort_array(F.collect_list(F.struct("doc", "is_new"))).alias(
-                "members"
-            ),
-            F.max(F.col("is_new").cast("int")).alias("has_new"),
-            F.max((~F.col("is_new")).cast("int")).alias("has_old"),
-        )
-        .select(
-            "sid",
-            "ts",
-            "members",
-            F.size("ts").cast("long").alias("n"),
-            (F.col("has_new") == 1).alias("has_new"),
-            (F.col("has_old") == 1).alias("has_old"),
-        )
-    )
-    rep = canon.select(
-        F.col("sid").alias("doc"),
-        "has_new",
-        "has_old",
-        F.explode("ts").alias("w"),
-    )
-    df_ = rep.groupBy("w").agg(F.count("*").alias("df"))
-    # ranked feeds BOTH probes on BOTH sides (prefix in probe1+probe2,
-    # index in probe1+probe2) — unmaterialized, the join+two-windows
-    # subtree is planned 4x and executed up to 4x (ReuseExchange only
-    # shares the shuffle below the windows, not the sort+window work
-    # above it); one eager checkpoint runs it once and keeps the four
-    # references leaf-sized in the composed candidate plan
-    ranked = truncate_lineage(
-        rep.join(df_, "w")
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("doc").orderBy("df", "w")),
-        )
-        .withColumn("nt", F.count("*").over(Window.partitionBy("doc")))
-    )
-    prefix = ranked.where(
-        F.col("rn")
-        <= F.col("nt") - F.expr(f"({t_num} * nt + {t_den - 1}) DIV {t_den}") + 1
-    ).select("doc", "w", "nt", "rn", "has_new", "has_old")
-    index = ranked.select("doc", "w", "nt", "rn", "has_new", "has_old")
-    small_side = (F.col("a.nt") < F.col("b.nt")) | (
-        (F.col("a.nt") == F.col("b.nt")) & (F.col("a.doc") < F.col("b.doc"))
-    )
-    # same PPJoin positional bound as containment_candidates — the max
-    # over matched prefix shingles dominates the bound at the pair's
-    # first common shingle, so the prune is lossless (see the filter
-    # comment there); applied over the UNION of both probes so a pair
-    # surfaced by both is judged on its best bound.
-    pair_cols = [
-        F.least(F.col("a.doc"), F.col("b.doc")).alias("id1"),
-        F.greatest(F.col("a.doc"), F.col("b.doc")).alias("id2"),
-        (
-            F.lit(1)
-            + F.least(F.col("a.nt") - F.col("a.rn"), F.col("b.nt") - F.col("b.rn"))
-        ).alias("ub"),
-        F.expr(f"({t_num} * a.nt + {t_den - 1}) DIV {t_den}").alias("req"),
-    ]
-    probe1 = (
-        prefix.where("has_new").alias("a")
-        .join(index.alias("b"), "w")
-        .where(small_side)
-        .select(*pair_cols)
-    )
-    probe2 = (
-        prefix.where("has_old").alias("a")
-        .join(index.where("has_new").alias("b"), "w")
-        .where(small_side)
-        .select(*pair_cols)
-    )
-    cand = (
-        probe1.unionByName(probe2)
-        .groupBy("id1", "id2")
-        .agg(F.max("ub").alias("ub"), F.max("req").alias("req"))
-        .where(F.col("ub") >= F.col("req"))
-        .select("id1", "id2")
-    )
-    reps = canon.select("sid", "ts", "n")
-    qual = (
-        cand.join(
-            reps.select(
-                F.col("sid").alias("id1"),
-                F.col("ts").alias("ts1"),
-                F.col("n").alias("n1"),
-            ),
-            "id1",
-        )
-        .join(
-            reps.select(
-                F.col("sid").alias("id2"),
-                F.col("ts").alias("ts2"),
-                F.col("n").alias("n2"),
-            ),
-            "id2",
-        )
-        .select(
-            "id1",
-            "id2",
-            F.size(F.array_intersect("ts1", "ts2")).cast("long").alias("inter"),
-            F.least("n1", "n2").alias("small"),
-        )
-        .where(t_den * F.col("inter") >= t_num * F.col("small"))
-    )
-    members = canon.select("sid", F.explode("members").alias("m")).select(
-        "sid", F.col("m.doc").alias("doc"), F.col("m.is_new").alias("mnew")
-    )
-    cross = (
-        qual.join(
-            members.select(
-                F.col("sid").alias("id1"),
-                F.col("doc").alias("d1"),
-                F.col("mnew").alias("new1"),
-            ),
-            "id1",
-        )
-        .join(
-            members.select(
-                F.col("sid").alias("id2"),
-                F.col("doc").alias("d2"),
-                F.col("mnew").alias("new2"),
-            ),
-            "id2",
-        )
-        .where(F.col("new1") | F.col("new2"))
-        .select(
-            F.least("d1", "d2").alias("id1"),
-            F.greatest("d1", "d2").alias("id2"),
-            "inter",
-            "small",
-        )
-    )
-    # identical-set pairs touching the increment, in-row over the
-    # doc-sorted member structs
-    same = (
-        canon.where(F.size("members") >= 2)
-        .select(
-            "n",
-            F.explode(
-                F.expr(
-                    "flatten(transform(members, (m1, i) -> "
-                    "transform(slice(members, i + 2, size(members)), "
-                    "m2 -> struct(m1, m2))))"
-                )
-            ).alias("p"),
-        )
-        .where(F.col("p.m1.is_new") | F.col("p.m2.is_new"))
-        .select(
-            F.col("p.m1.doc").alias("id1"),
-            F.col("p.m2.doc").alias("id2"),
-            F.col("n").alias("inter"),
-            F.col("n").alias("small"),
-        )
-    )
-    out = cross.unionByName(same).select(
-        "id1",
-        "id2",
-        "inter",
-        "small",
-        F.expr("CAST(1000 * inter DIV small AS BIGINT)").alias("contain_milli"),
-    )
-    return materialized(out, canon)
+    Case split on the small side A of a qualifying pair (A, B), at set
+    level (a set is new-touched / old-touched from its members):
+    * A new-touched → probe 1: its prefix joins the full index;
+    * A old-touched, B new-touched → probe 2: its prefix joins the index
+      restricted to new-touched sets.
+    Old×old pairs come from neither probe, so pair generation is bounded
+    by the batch. df is recomputed over the union (one groupBy): stale df
+    would still be lossless but prunes worse, and a frozen hash order
+    measured ~100x more candidates on the Zipf fixture. Output schema
+    matches containment_join."""
+    return _containment_self_join(docs, id_col, text_col, t_num, t_den, new_col, True)
 
 
 def containment_join(
@@ -867,180 +864,27 @@ def containment_join(
     text_col: str,
     t_num: int = 8,
     t_den: int = 10,
-    shingles: DataFrame | None = None,
     materialize: bool = True,
 ) -> DataFrame:
     """EXACT containment self-join at C(A,B) = |A∩B| / min(|A|,|B|) >=
-    t_num/t_den over word-3-gram shingle sets, via SMALL-SIDE prefix
-    filtering — the lossless route to quote/boilerplate subsumption that
-    the LSH candidate stage structurally misses: a short document quoted
-    wholesale inside a long one has containment ~1 but Jaccard ~0.1, and
-    MinHash bands tuned for the Jaccard threshold surface 1% of such
-    planted pairs (measured, SCALE.md §round-9 boundary; the recall test
-    in tests/test_wave10.py pins THIS operator at 100% on that corpus,
-    which lossless candidate generation guarantees by construction).
-
-    Filter theorem (the dedup-allpairs prefix bound specialized to the
-    asymmetric overlap measure, after Bayardo/Ma/Srikant WWW 2007 §4):
-    order shingles globally rarest-first by (df, w). A qualifying pair's
-    SMALLER set S shares >= ceil(t·|S|) shingles with the other set, so
-    S's first |S| - ceil(t·|S|) + 1 shingles under that order cannot all
-    miss — if they did, the overlap would fit inside the remaining
-    ceil(t·|S|) - 1. Candidate generation therefore joins only the small
-    side's PREFIX against the full inverted index; prefix shingles are
-    the globally rarest by construction, so candidate cost is
-    sum_docs sum_{w in prefix(d)} df(w) — sub-quadratic on Zipfian df.
-    The containment bound depends only on the small set, so no
-    index-side prefix exists to exploit (the structural asymmetry vs the
-    symmetric Jaccard AllPairs join — one side of the join is the whole
-    shingle frame, which is why this costs more than dedup-allpairs at
-    equal thresholds and why the LSH family remains the probabilistic
-    scale route when losslessness isn't required).
-
-    When |A| = |B| either side is "small" and either prefix works; the
-    pair is generated exactly once, from the lexicographically smaller
-    doc id. Verification is exact sorted-array intersection confined to
-    candidates. Generalizes the reference's bounded candidate probe
+    t_num/t_den over word-3-gram shingle sets → (id1, id2, inter, small,
+    contain_milli). The lossless route to quote/boilerplate subsumption
+    that the LSH candidate stage structurally misses: a short document
+    quoted wholesale inside a long one has containment ~1 but Jaccard
+    ~0.1, and MinHash bands tuned for Jaccard surfaced 1% of such planted
+    pairs (SCALE.md §round-9; tests/test_wave10.py pins this operator at
+    100% on that corpus). Small-side prefix filter, PPJoin bound and
+    exact verification as in ``_rank`` / ``_candidates`` / ``_verify``;
+    the containment bound depends only on the small set, so unlike the
+    symmetric Jaccard AllPairs join no index-side prefix exists.
+    Generalizes the reference's bounded candidate probe
     (dupes/dedup.py:146-171) from filename prefixes to content shingles.
 
-    Shingles are folded to ``xxhash64`` longs before everything (the
-    ngram_jaccard_pairs discipline: ~10x fewer shuffle/array bytes than
-    the ~25-char strings; a 64-bit collision, P ~ n²/2⁶⁵, perturbs one
-    pair's intersection by 1 — negligible, and the result set is
-    join-key-agnostic anyway: the prefix theorem needs only SOME global
-    total order, so ranking by (df, hash) instead of (df, string)
-    changes which candidates are probed, never which pairs verify.
-    Measured 7.9 s -> 4.9 s at sf0.1 (same session, warm).
-    """
-    from itdb_spark.plans.library import materialized
-
-    sh = shingles
-    if sh is not None and dict(sh.dtypes).get("w") != "bigint":
-        # accept a pre-folded (doc, bigint w) frame — callers that cache
-        # the shingle explode should cache the FOLDED form (16 B/row vs
-        # the ~60 B string rows; the sf10 heap lesson), skip the re-fold
-        sh = sh.select("doc", F.xxhash64("w").alias("w"))
-    # --- canonicalize: candidates + verification per DISTINCT shingle
-    # set, not per doc (round 11 — the sf10 second-decade point killed
-    # the per-doc form: 164M candidate pairs x two ~300 B shingle
-    # arrays over-spilled the measurement host's disk; this corpus is
-    # ~3x exact-duplicate content, real crawls commonly 30-50%). Docs
-    # group by their EXACT sorted shingle array (no hash involved —
-    # groupBy on the array value), one representative set id (min doc)
-    # enters candidate generation and array verification, and
-    # qualifying SET pairs expand back to doc pairs at the end —
-    # work scales with distinct content, never with duplication depth.
-    # Identical-set doc pairs never reach the verifier at all: their
-    # containment is 1 by definition (emitted arithmetically below).
-    # The prefix theorem is unaffected: it needs only a global total
-    # order over shingles, and distinct-set df is one.
-    # r15: the self-built path computes the shingle-set array IN-ROW
-    # (shingle_set_col — no explode, no groupBy(doc) exchange); the
-    # explode→groupBy form survives only for caller-provided shingle
-    # frames, whose explode the caller is sharing deliberately.
-    doc_sets = (
-        sh.groupBy("doc").agg(F.sort_array(F.collect_list("w")).alias("ts"))
-        if sh is not None
-        else doc_shingle_sets(docs, id_col, text_col)
+    ``materialize=False`` returns the lazy composed frame with no eager
+    job (the plan-audit hook, tests/test_plan_audit.py)."""
+    return _containment_self_join(
+        docs, id_col, text_col, t_num, t_den, None, materialize
     )
-    canon = (
-        doc_sets.groupBy("ts")
-        .agg(
-            F.min("doc").alias("sid"),
-            F.sort_array(F.collect_list("doc")).alias("members"),
-        )
-        .select("sid", "ts", "members", F.size("ts").cast("long").alias("n"))
-    )
-    if materialize:
-        # eager lineage truncation on the owning path (was .cache() —
-        # canon is referenced 4x below and each reference to a cached
-        # frame re-analyzes its full subtree; the checkpoint is the same
-        # single materialization with leaf-sized references, the fix
-        # measured at ~2x on containment_probe_persisted). The lazy
-        # (materialize=False) form is a plan-audit hook and stays fully
-        # lazy (tests/test_plan_audit.py explains the composed plan).
-        from itdb_spark.plans.library import truncate_lineage
-
-        canon = truncate_lineage(canon)
-    rep_sh = canon.select(F.col("sid").alias("doc"), F.explode("ts").alias("w"))
-    cand = containment_candidates(rep_sh, t_num, t_den, materialize=materialize)
-    reps = canon.select("sid", "ts", "n")
-    qual = (
-        cand.join(
-            reps.select(
-                F.col("sid").alias("id1"),
-                F.col("ts").alias("ts1"),
-                F.col("n").alias("n1"),
-            ),
-            "id1",
-        )
-        .join(
-            reps.select(
-                F.col("sid").alias("id2"),
-                F.col("ts").alias("ts2"),
-                F.col("n").alias("n2"),
-            ),
-            "id2",
-        )
-        .select(
-            "id1",
-            "id2",
-            F.size(F.array_intersect("ts1", "ts2")).cast("long").alias("inter"),
-            F.least("n1", "n2").alias("small"),
-        )
-        .where(t_den * F.col("inter") >= t_num * F.col("small"))
-    )
-    members = canon.select("sid", F.explode("members").alias("doc"))
-    cross = (
-        qual.join(
-            members.select(F.col("sid").alias("id1"), F.col("doc").alias("d1")),
-            "id1",
-        )
-        .join(
-            members.select(F.col("sid").alias("id2"), F.col("doc").alias("d2")),
-            "id2",
-        )
-        .select(
-            F.least("d1", "d2").alias("id1"),
-            F.greatest("d1", "d2").alias("id2"),
-            "inter",
-            "small",
-        )
-    )
-    # identical-set pairs: every (d1 < d2) inside a member list, in-row
-    # (members is sorted, so the nested transform emits ordered pairs)
-    same = (
-        canon.where(F.size("members") >= 2)
-        .select(
-            "n",
-            F.explode(
-                F.expr(
-                    "flatten(transform(members, (d1, i) -> "
-                    "transform(slice(members, i + 2, size(members)), "
-                    "d2 -> struct(d1, d2))))"
-                )
-            ).alias("p"),
-        )
-        .select(
-            F.col("p.d1").alias("id1"),
-            F.col("p.d2").alias("id2"),
-            F.col("n").alias("inter"),
-            F.col("n").alias("small"),
-        )
-    )
-    out = cross.unionByName(same).select(
-        "id1",
-        "id2",
-        "inter",
-        "small",
-        F.expr("CAST(1000 * inter DIV small AS BIGINT)").alias("contain_milli"),
-    )
-    if not materialize:
-        # plan-audit hook: hand back the LAZY frame — no cache was
-        # attached on this path (see above), so even an executing
-        # caller leaks nothing
-        return out
-    return materialized(out, canon)
 
 
 def simhash(
@@ -1426,6 +1270,36 @@ def append_band_index(
     return v
 
 
+# Row layout of the persisted containment index: every kind carries all
+# columns, NULL where the kind has none.
+_INDEX_COLS = {
+    "w": "bigint", "df": "bigint", "nt": "bigint", "rn": "int",
+    "pfx": "boolean", "doc": "bigint", "ts": "array<bigint>",
+    "sid": "bigint", "kh": "bigint",
+}
+
+
+def _index_rows(**kinds: DataFrame) -> DataFrame:
+    """Union one frame per ``kind`` into the index's row layout."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            df.select(
+                F.lit(kind).alias("kind"),
+                *[
+                    (F.col(c) if c in df.columns else F.lit(None).cast(t)).alias(c)
+                    for c, t in _INDEX_COLS.items()
+                ],
+            )
+            for kind, df in kinds.items()
+        ],
+    )
+
+
+def _kind(table: DataFrame, kind: str) -> DataFrame:
+    return table.where(F.col("kind") == kind)
+
+
 def persist_containment_index(
     docs: DataFrame,
     id_col: str,
@@ -1434,129 +1308,52 @@ def persist_containment_index(
     t_num: int = 8,
     t_den: int = 10,
 ) -> str:
-    """Build + publish the corpus CONTAINMENT serving index (round 12,
-    VERDICT r11 #2 — the build-once/probe-many split dedup-incr-persist
-    already gives the MinHash family, now for the lossless prefix-filter
-    family): one versioned table, hive-partitioned by ``kind``, holding
-    the corpus CANONICALIZED to distinct shingle sets (hazard class 3 —
-    an index stored per-doc would multiply every future probe's
-    candidate space by the corpus's duplication depth squared; measured
-    7.1 s vs the rebuild's 5.0 s at sf0.1 before this canonicalization,
-    2.0 s after):
+    """Build + publish the corpus CONTAINMENT serving index: one
+    versioned table, hive-partitioned by ``kind``, holding the corpus
+    canonicalized to distinct shingle sets (a per-doc index multiplies
+    every probe's candidate space by the duplication depth squared):
 
       kind='post':   (sid, w BIGINT, df, nt, rn, pfx) — one row per
-                     (distinct set, shingle), ranked under the corpus's
-                     own frozen (df, w) rarest-first order, where df is
-                     the shingle's DISTINCT-SET frequency (the
-                     containment_join convention), rn the set's rank of
-                     w under (df, w), nt the set size, pfx the prefix
-                     marker (rn <= nt - ceil(t*nt) + 1);
-      kind='member': (sid, doc) — the set → document expansion map;
+                     (set, shingle), ranked by ``_rank`` under the
+                     corpus's own (df, w) order, df counted over
+                     distinct sets;
+      kind='member': (sid, doc) — the set → document map;
       kind='vocab':  (w, df) — one row per distinct shingle, so a probe
-                     ranks its batch with one map-side key join instead
-                     of deduplicating posting rows per call;
-      kind='set':    (sid, ts ARRAY<BIGINT>, kh BIGINT) — each set's
-                     sorted shingle array plus its STORED content hash
-                     kh = xxhash64(ts), so verification READS candidate
-                     arrays (map-side semi-restricted) instead of
-                     re-collecting them from postings with a per-call
-                     shuffle, and the APPEND path matches batch content
-                     against the chain by pushing the batch's kh keys
-                     into the parquet scan instead of re-hashing every
-                     corpus set array per refresh (r12 VERDICT #4). The
-                     version is written repartitionByRange(kind, kh) +
-                     sortWithinPartitions(kh): each set-partition file
-                     covers a narrow kh band, so row-group min/max
-                     stats bound the append's IO by the batch's touched
-                     files, not the corpus.
+                     ranks its batch with one map-side key join;
+      kind='set':    (sid, ts ARRAY<BIGINT>, kh BIGINT) — the sorted
+                     shingle array plus its stored content hash
+                     kh = xxhash64(ts), so verification reads candidate
+                     arrays and the append matches content by pushing
+                     batch kh keys into the scan.
 
-    Persisting the RANKS — not just the shingles — is what makes the
-    probe batch-bounded: the rebuild form (containment_join_incremental)
-    recomputes the union shingle frame and global df-order per call, a
-    corpus-scale shuffle regardless of batch size (its 3.7x second
-    decade was the round-11 SCALE table's worst row).
+    The order is FROZEN at this build: probes and appends rank new sets
+    under the stored df (0 for unseen shingles), a fixed total order, so
+    the prefix theorem keeps every later probe lossless (``_rank``);
+    batch-era df drift costs pruning, never recall. Persisting the ranks
+    is what makes the probe batch-bounded, where the rebuild form
+    recomputes the union df per call.
 
-    The frozen order stays LOSSLESS for any future batch because the
-    prefix theorem needs only SOME shared global total order: (df, w)
-    with df := 0 for never-indexed shingles is a fixed total order that
-    probe-time ranking reproduces exactly (index rows' ranks depend only
-    on their own shingles, all present at build time). Freezing trades
-    a little pruning quality — batch-era df drift doesn't reorder
-    prefixes — for corpus-free probes.
-
-    Published via the sinks/versioned.py atomic-manifest kernel — both
-    kinds land in ONE version directory behind ONE atomic pointer swap
-    (readers partition-prune on kind); refresh after accepting a batch =
-    rebuild over the union + write_version (snapshot-isolated; pinned
-    readers keep their version until vacuum). Returns the version name.
-    """
+    The table is written range-partitioned by (kind, coalesce(kh, sid,
+    w)) and sorted by kh: each set-partition file covers a narrow kh
+    band, so row-group stats bound the append's IO by the batch, and the
+    secondary key keeps the NULL-kh kinds spread over many files (ranging
+    on kh alone put every post/member/vocab row in one reader task).
+    All kinds land in ONE version behind one atomic pointer swap
+    (sinks/versioned.py); refresh = rebuild + write_version, or
+    ``append_containment_index``. Returns the version name."""
     from itdb_spark.sinks.versioned import write_version
 
-    # r15: in-row shingle-set build (shingle_set_col) — one less
-    # corpus-scale exchange per index build
-    doc_sets = doc_shingle_sets(docs, id_col, text_col)
-    # canon feeds post/member/set and (via rep_sh) vocab — cache for the
-    # build's one write action, released right after
-    canon = (
-        doc_sets.groupBy("ts")
-        .agg(F.min("doc").alias("sid"), F.collect_list("doc").alias("members"))
-        .cache()
-    )
-    rep_sh = canon.select("sid", F.explode("ts").alias("w"))
-    df_ = rep_sh.groupBy("w").agg(F.count("*").alias("df"))
-    post = (
-        rep_sh.join(df_, "w")
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("sid").orderBy("df", "w")),
-        )
-        .withColumn("nt", F.count("*").over(Window.partitionBy("sid")))
-        .withColumn(
-            "pfx",
-            F.col("rn")
-            <= F.col("nt")
-            - F.expr(f"({t_num} * nt + {t_den - 1}) DIV {t_den}")
-            + 1,
-        )
-        .select("sid", "w", "df", "nt", "rn", "pfx", F.lit("post").alias("kind"))
-    )
-    nulls = {
-        "w": "bigint", "df": "bigint", "nt": "bigint", "rn": "int",
-        "pfx": "boolean", "doc": "bigint", "ts": "array<bigint>",
-        "sid": "bigint", "kh": "bigint",
-    }
-
-    def shaped(df: DataFrame, kind: str) -> DataFrame:
-        cols = [
-            (F.col(c) if c in df.columns else F.lit(None).cast(t)).alias(c)
-            for c, t in nulls.items()
-        ]
-        return df.select(F.lit(kind).alias("kind"), *cols)
-
-    member = shaped(
-        canon.select("sid", F.explode("members").alias("doc")), "member"
-    )
-    vocab = shaped(df_, "vocab")
-    sets = shaped(
-        canon.select("sid", "ts", F.xxhash64("ts").alias("kh")), "set"
-    )
+    canon = _canon(doc_shingle_sets(docs, id_col, text_col)).cache()
+    post = canon.select("sid", F.explode("ts").alias("w"))
+    df_ = post.groupBy("w").agg(F.count("*").alias("df"))
     table = (
-        shaped(post.drop("kind"), "post")
-        .unionByName(member)
-        .unionByName(vocab)
-        .unionByName(sets)
-        # kh-clustered layout (r12 VERDICT #4): range-partition within
-        # each kind by the stored content hash and sort files by it, so
-        # the append path's pushed-down batch-key filter prunes the set
-        # partition on row-group min/max stats. The SECONDARY range key
-        # coalesces to each kind's natural id: non-set kinds carry
-        # kh = NULL, and ranging on (kind, kh) alone sent every
-        # post/member/vocab row into ONE slice — one file, one reader
-        # task (measured: the persisted probe's sf10 wall regressed
-        # 17.4 → 23.6 s before the coalesce; re-measured at par after)
-        .repartitionByRange(
-            F.col("kind"), F.coalesce("kh", "sid", "w")
+        _index_rows(
+            post=_rank(post.join(df_, "w"), t_num, t_den),
+            member=_members(canon).select("sid", "m.doc"),
+            vocab=df_,
+            set=canon.withColumn("kh", F.xxhash64("ts")),
         )
+        .repartitionByRange(F.col("kind"), F.coalesce("kh", "sid", "w"))
         .sortWithinPartitions("kh")
     )
     try:
@@ -1573,8 +1370,7 @@ def persist_containment_index(
 # too coarse for a micro-batch's pushed-down key filter to prune
 # (SCALE.md §r13). 4 MB groups measured the append's restriction stage
 # 0.481 -> 0.185 s at sf10 (92 keys) with the probe itself unregressed
-# (5.42 -> 5.12 s) — a pure win at the measured point, the deployment
-# lever the switch-point table promised.
+# (5.42 -> 5.12 s).
 _INDEX_BLOCK_BYTES = str(1 << 22)
 
 
@@ -1583,10 +1379,10 @@ _INDEX_BLOCK_BYTES = str(1 << 22)
 # batch — the streaming micro-batch shape) to a broadcast join on the
 # stored kh (one full 8-byte-column scan, no re-hash — the bulk-ingest
 # shape): a plan carrying tens of thousands of literals costs more to
-# build and evaluate than the pruning saves (measured at sf10 with the
-# shipped 4 MB row groups: 92-key batch's restriction stage 0.185 s vs
-# the re-hash's 0.63 s — 3.4x, re-hash-free; 21k-key batch 2.3x SLOWER
-# end-to-end — SCALE.md §r13).
+# build and evaluate than the pruning saves (measured at sf10 with 4 MB
+# row groups: a 92-key batch's restriction stage 0.185 s vs the
+# re-hash's 0.63 s; a 21k-key batch 2.3x SLOWER end-to-end — SCALE.md
+# §r13).
 _KH_PUSHDOWN_MAX = 4096
 
 
@@ -1601,209 +1397,80 @@ def append_containment_index(
     tag: str | None = None,
     use_stored_kh: bool = True,
 ) -> str:
-    """BATCH-BOUNDED refresh of a ``persist_containment_index`` table
-    (round 12 — completes the amortization story: the probe was already
-    batch-bounded, but refresh-by-rebuild re-ranked and REWROTE the
-    whole corpus per accepted batch): publish a DELTA version
-    (sinks/versioned.py::append_version — new files + one atomic
-    pointer swap; the write cost is the delta, never the table) that
+    """BATCH-BOUNDED refresh of a ``persist_containment_index`` table:
+    publish a DELTA version (sinks/versioned.py::append_version — new
+    files + one atomic pointer swap) that adds the batch's genuinely new
+    distinct sets, their postings ranked under the index's frozen order
+    (the vocab partition is never extended), and maps EVERY batch doc
+    into the member partition — docs whose exact shingle array already
+    exists in the chain join that set's sid. Nothing corpus-scale is
+    shuffled, ranked or rewritten. Returns the published version name.
 
-    * adds the batch's genuinely NEW distinct shingle sets, their
-      postings ranked under the index's PERMANENTLY FROZEN v1 (df, w)
-      order (the vocab partition is never extended — unseen shingles
-      rank at df = 0 forever, which is a fixed total order, so the
-      prefix theorem keeps every FUTURE probe lossless; pruning quality
-      drifts with corpus drift, losslessness does not);
-    * maps EVERY batch doc into the member partition — docs whose exact
-      shingle array already exists anywhere in the chain join that
-      existing sid (content dedup at the index itself), the rest join
-      their new set.
+    Content match (the ``kh`` pushdown): the batch's distinct content
+    hashes are pushed into the set-partition scan as a literal IN filter
+    (up to ``_KH_PUSHDOWN_MAX`` keys, else a broadcast join on the stored
+    kh), so with the kh-clustered layout the scan reads only the row
+    groups the batch touches and no corpus array is re-hashed. Set rows
+    with a NULL stored kh (a pre-kh dir, or a fold that merged one) are
+    re-hashed on a side branch, which parquet null-count stats prune to
+    nothing on a kh-native chain; the min-esid fold keeps a chain that
+    holds the same content under two sids deterministic.
+    ``use_stored_kh=False`` forces the re-hash of every set row (the
+    reference twin for chains without ``kh``); results are identical.
 
-    Work audit: batch canonicalization (batch-bounded groupBy), one
-    ts-equality join against the chain's SET partition (set-count
-    postings never rescanned), frozen-df lookup for the new sets' keys
-    (broadcast-semi-restricted vocab scan), rank windows over new-set
-    postings only. Nothing corpus-scale is shuffled, ranked, or
-    rewritten. Returns the published version name.
-
-    ``tag`` (optional) is published atomically with the delta
-    (sinks/versioned.py chain_tags) — an at-least-once caller (e.g.
-    foreachBatch, ADVICE r12) keys acceptance on its batch id and
-    skips replays whose tag is already on the chain.
-
-    ``use_stored_kh=False`` forces the legacy full-scan content match
-    (the r12 shape) even on a kh-native chain — the A/B lever for the
-    r12 VERDICT #4 measurement; results are identical either way."""
+    ``tag`` is published atomically with the delta (chain_tags), so an
+    at-least-once caller can key acceptance on its batch id."""
     from itdb_spark.plans.library import truncate_lineage
-    from itdb_spark.sinks.versioned import (
-        append_version,
-        read_current_chain,
-    )
+    from itdb_spark.sinks.versioned import append_version, read_current_chain
 
     table = read_current_chain(spark, root)
-    idx_vocab = table.where(F.col("kind") == "vocab").select("w", "df")
-    # eager lineage truncation instead of .cache() (r14, the probe's
-    # convention applied to the append leg): braw/bcanon are nested,
-    # multiply-referenced, batch-bounded intermediates — the cached
-    # form re-analyzed the whole composed subtree per reference
-    # (interleaved A/B over lockstep chains: append wall medians
-    # 3.88 → 3.62 s at sf0.1, every round after warmup faster).
-    # r15: batch shingle sets built in-row (shingle_set_col), no
-    # explode→groupBy(doc) exchange per micro-batch.
     braw = truncate_lineage(
-        doc_shingle_sets(batch, id_col, text_col)
-        .groupBy("ts")
-        .agg(F.min("doc").alias("bsid"), F.collect_list("doc").alias("members"))
-        .withColumn("kh", F.xxhash64("ts")),
-        eager=True,
+        _canon(doc_shingle_sets(batch, id_col, text_col)).withColumn(
+            "kh", F.xxhash64("ts")
+        )
     )
-    # ts-equality match against the chain's sets, batch-bounded on BOTH
-    # join sides (matched rows ⊆ batch sets up to 2^-64 kh collisions,
-    # which the full-ts equi-join below eliminates exactly — a naive
-    # join on the array key would shuffle every set's shingle array per
-    # append). r12 VERDICT #4: when a chain dir STORES kh, the batch's
-    # distinct content hashes — a batch-bounded driver list — are
-    # pushed into the parquet scan as a literal IN filter: with the
-    # kh-clustered layout the scan's IO is bounded by the row groups
-    # the batch actually touches, and the corpus's ts arrays are
-    # neither read nor re-hashed.
-    #
-    # r13 ADVICE (medium): set rows whose STORED kh is NULL — a pre-kh
-    # dir surfacing through allowMissingColumns, or a compact_chain
-    # fold that merged a legacy base under a kh-bearing schema — would
-    # never match the IN pushdown or the kh broadcast join, so
-    # content-identical batch sets would be misclassified is_new_set
-    # and republished under new sids. The hybrid below matches stored
-    # (non-NULL) kh on the fast path and re-hashes ONLY the NULL-kh
-    # rows; on a fully-native chain the NULL branch's IsNull(kh)
-    # filter prunes every row group via parquet null_count stats, so
-    # the hybrid costs nothing where the hazard is absent. The gate is
-    # the union schema read_current_chain already computed — no
-    # per-dir footer reads (r13 ADVICE, low: the old all-dirs schema
-    # walk opened O(chain) parquet readers per micro-batch).
-    native_kh = use_stored_kh and "kh" in table.columns
-    if native_kh:
-        stored = table.where(
-            (F.col("kind") == "set") & F.col("kh").isNotNull()
+    sets = _kind(table, "set")
+
+    def rehashed(rows: DataFrame) -> DataFrame:
+        return rows.select(
+            F.col("sid").alias("esid"), "ts", F.xxhash64("ts").alias("kh")
+        ).join(F.broadcast(braw.select("kh").distinct()), "kh")
+
+    if use_stored_kh and "kh" in table.columns:
+        stored = sets.where(F.col("kh").isNotNull()).select(
+            F.col("sid").alias("esid"), "ts", "kh"
         )
         bkh = [r["kh"] for r in braw.select("kh").distinct().collect()]
         if len(bkh) <= _KH_PUSHDOWN_MAX:
-            # micro-batch shape: literal IN filter reaches the parquet
-            # scan (PushedFilters: In(kh, ...)), so with the
-            # kh-clustered 4 MB-row-group layout the scan decodes only
-            # the batch's row groups and nothing is re-hashed
-            # (restriction stage measured 0.185 s vs the re-hash's
-            # 0.63 s at sf10 — SCALE.md §r13)
-            kh_pred = F.col("kh").isin(bkh) if bkh else F.lit(False)
-            matched = stored.where(kh_pred).select(
-                F.col("sid").alias("esid"), "ts", "kh"
-            )
+            matched = stored.where(F.col("kh").isin(bkh) if bkh else F.lit(False))
         else:
-            # bulk-batch shape: a 21k-literal plan costs more than it
-            # prunes (measured 2.3x WORSE end-to-end at sf10);
-            # broadcast-join on the STORED kh instead — same full
-            # set-partition read as the legacy path but no per-row
-            # re-hash of the corpus's shingle arrays
-            matched = stored.select(
-                F.col("sid").alias("esid"), "ts", "kh"
-            ).join(F.broadcast(braw.select("kh").distinct()), "kh")
-        legacy_rows = (
-            table.where((F.col("kind") == "set") & F.col("kh").isNull())
-            .select(F.col("sid").alias("esid"), "ts")
-            .withColumn("kh", F.xxhash64("ts"))
-            .join(F.broadcast(braw.select("kh").distinct()), "kh")
-            .select("esid", "ts", "kh")
-        )
-        # one esid per content (min over the union): on a healthy chain
-        # each (kh, ts) has exactly one set row so this is a no-op, but
-        # a chain DAMAGED by the pre-hybrid gate (the same ts published
-        # under both a NULL-kh legacy sid and a misclassified kh-bearing
-        # sid) would otherwise match BOTH esids and fan each batch doc
-        # out to two member rows — the min-esid fold makes recovery
-        # deterministic instead of amplifying the damage
-        idx_restricted = (
-            matched.select("esid", "ts", "kh")
-            .unionByName(legacy_rows)
-            .groupBy("kh", "ts")
-            .agg(F.min("esid").alias("esid"))
-        )
+            matched = stored.join(F.broadcast(braw.select("kh").distinct()), "kh")
+        found = matched.unionByName(rehashed(sets.where(F.col("kh").isNull())))
     else:
-        idx_sets = table.where(F.col("kind") == "set").select(
-            F.col("sid").alias("esid"), "ts"
-        )
-        idx_restricted = (
-            idx_sets.withColumn("kh", F.xxhash64("ts"))
-            .join(F.broadcast(braw.select("kh").distinct()), "kh")
-            # same min-esid fold as the hybrid path, so the forced
-            # legacy twin stays row-identical on damaged chains too
-            .groupBy("kh", "ts")
-            .agg(F.min("esid").alias("esid"))
-        )
+        found = rehashed(sets)
+    found = found.groupBy("kh", "ts").agg(F.min("esid").alias("esid"))
     bcanon = truncate_lineage(
-        braw.join(idx_restricted, ["kh", "ts"], "left")
-        .select(
-            F.coalesce("esid", "bsid").alias("sid"),
+        braw.join(found, ["kh", "ts"], "left").select(
+            F.coalesce("esid", "sid").alias("sid"),
             F.col("esid").isNull().alias("is_new_set"),
             "ts",
             "members",
             "kh",
-        ),
-        eager=True,
+        )
     )
     new_sets = bcanon.where("is_new_set")
-    n_sh = new_sets.select("sid", F.explode("ts").alias("w"))
-    nkeys = n_sh.select("w").distinct()
-    ndf = idx_vocab.join(F.broadcast(nkeys), "w")
-    post = (
-        n_sh.join(F.broadcast(ndf), "w", "left")
-        .na.fill(0, ["df"])
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("sid").orderBy("df", "w")),
-        )
-        .withColumn("nt", F.count("*").over(Window.partitionBy("sid")))
-        .withColumn(
-            "pfx",
-            F.col("rn")
-            <= F.col("nt")
-            - F.expr(f"({t_num} * nt + {t_den - 1}) DIV {t_den}")
-            + 1,
-        )
+    post = _frozen_df(
+        new_sets.select("sid", F.explode("ts").alias("w")),
+        _kind(table, "vocab").select("w", "df"),
     )
-    nulls = {
-        "w": "bigint", "df": "bigint", "nt": "bigint", "rn": "int",
-        "pfx": "boolean", "doc": "bigint", "ts": "array<bigint>",
-        "sid": "bigint", "kh": "bigint",
-    }
-
-    def shaped(df: DataFrame, kind: str) -> DataFrame:
-        cols = [
-            (F.col(c) if c in df.columns else F.lit(None).cast(t)).alias(c)
-            for c, t in nulls.items()
-        ]
-        return df.select(F.lit(kind).alias("kind"), *cols)
-
-    delta = (
-        shaped(post, "post")
-        .unionByName(
-            shaped(
-                bcanon.select("sid", F.explode("members").alias("doc")),
-                "member",
-            )
-        )
-        # the delta's set rows carry their stored kh too, so every
-        # future append keeps the pushed-down fast path (native_kh)
-        .unionByName(shaped(new_sets.select("sid", "ts", "kh"), "set"))
-        .sortWithinPartitions("kh")
-    )
-    # braw/bcanon are checkpoint leaves now — nothing to unpersist;
-    # their blocks are reclaimed by the ContextCleaner once the frames
-    # (and `delta`, which references them) are GC'd after the publish
-    # below returns. r14 ADVICE flagged possible accumulation between
-    # GC cycles in 100+-query sessions; LEAKCHECK has shown 0 growth
-    # across the full single-session gate, so deterministic cleanup is
-    # deliberately not re-added (an explicit unpersist before the
-    # publish would recompute the delta).
+    delta = _index_rows(
+        post=_rank(post, t_num, t_den),
+        member=_members(bcanon).select("sid", "m.doc"),
+        set=new_sets,
+    ).sortWithinPartitions("kh")
+    # braw/bcanon are checkpoint leaves, reclaimed by the ContextCleaner
+    # once `delta` is dropped; an unpersist before the publish would
+    # recompute the delta
     return append_version(
         delta, root, partition_by=["kind"], tag=tag,
         writer_options={"parquet.block.size": _INDEX_BLOCK_BYTES},
@@ -1822,247 +1489,63 @@ def containment_probe_persisted(
     """``containment_join_incremental`` against a
     ``persist_containment_index`` table: exactly the containment >= t
     pairs touching ``batch`` over (index corpus ∪ batch), with per-call
-    work bounded by the BATCH — the amortized serving shape. Batch doc
-    ids must be disjoint from the indexed corpus's (the incremental
-    ingest convention).
+    work bounded by the BATCH. Batch doc ids must be disjoint from the
+    indexed corpus's.
 
-    The whole probe runs at DISTINCT-SET level on both sides — the
-    index is persisted canonicalized, the batch canonicalizes itself
-    per call (batch-bounded groupBy) — so candidate volume scales with
-    distinct content, never duplication depth (hazard class 3; the
-    per-doc draft of this probe measured SLOWER than the rebuild at
-    sf0.1, 7.1 s vs 5.0 s, because the corpus's ~3x duplication
-    multiplied pair generation ~9x).
-
-    Per-call cost audit (the 100 TB claim): batch sets rank themselves
-    under the index's frozen order (df looked up by counting index
-    postings of the batch's OWN shingle keys — a broadcast-semi-
-    restricted scan, no corpus shuffle; unseen shingles take df = 0);
-    probe 1 joins batch-set prefixes against the full posting index,
-    probe 2 joins the index's PERSISTED prefix rows against the batch's
-    postings (batch side broadcasts, index side streams map-side — no
-    corpus-scale exchange); the PPJoin positional bound prunes with the
-    persisted (nt, rn); verification reconstructs shingle arrays for
-    CANDIDATE index sets only (broadcast-semi-restricted) and runs once
-    per qualifying SET pair; member expansion joins the kind='member'
-    partition semi-restricted to qualifying sids. Old x old pairs are
-    generated by neither probe (the containment_join_incremental case
-    split); identical-content batch pairs are emitted arithmetically
-    from the batch's own canon members, and batch sets identical to an
-    index set flow through the candidate machinery (a shared prefix
-    shingle always exists). Losslessness under the frozen order is
-    argued at ``persist_containment_index``; the output is therefore
-    SET-identical to the rebuild form (gated in tests/test_wave12.py).
-    """
+    The batch canonicalizes itself and ranks under the index's frozen
+    order (``_frozen_df``). Probe 1 joins batch-set prefixes against the
+    stored postings ∪ the batch's; probe 2 joins the stored prefix rows
+    against the batch postings. The batch side broadcasts in both, so
+    the corpus-scale posting partition streams map-side with no
+    corpus-sized exchange. Verification reads candidate index sets'
+    arrays off the 'set' partition and member expansion reads the
+    'member' partition, both map-side restricted to the broadcast
+    candidate sids. Every cross pair has a batch side, and only the
+    batch's own identical-content pairs are emitted in-row, so no
+    old×old pair appears. Output is set-identical to the rebuild form
+    (tests/test_wave12.py)."""
     from itdb_spark.plans.library import materialized, truncate_lineage
     from itdb_spark.sinks.versioned import read_current_chain
 
     table = read_current_chain(spark, index_root)
-    idx = table.where(F.col("kind") == "post").select(
-        "sid", "w", "df", "nt", "rn", "pfx"
+    bcanon = truncate_lineage(_canon(doc_shingle_sets(batch, id_col, text_col)))
+    post = _frozen_df(
+        bcanon.select("sid", F.explode("ts").alias("w")),
+        _kind(table, "vocab").select("w", "df"),
     )
-    idx_members = table.where(F.col("kind") == "member").select("sid", "doc")
-    idx_vocab = table.where(F.col("kind") == "vocab").select("w", "df")
-    idx_sets = table.where(F.col("kind") == "set").select("sid", "ts")
-    # Batch-bounded intermediates TRUNCATE LINEAGE (eager localCheckpoint)
-    # instead of .cache(): a cached frame's full logical subtree is
-    # re-analyzed at every reference, and this probe references bcanon /
-    # branked / cand / all_ts 3-6 times each with each later frame
-    # CONTAINING the earlier ones — the composed tree grows near-
-    # exponentially and the r14 stage profile measured a 1.5 s driver
-    # planning gap per call (the bulk of the fixed-batch table's ~1.6 s
-    # empty-batch constant). Checkpointing makes each intermediate a leaf
-    # scan: small trees to plan, same single materialization per frame,
-    # and every checkpointed frame is batch/candidate-bounded — the
-    # corpus-scale posting/member partitions still stream map-side, so
-    # the 100 TB shape is unchanged (guide §1.2: fix the constant only
-    # after the dataflow is right; §3.3: materialize to truncate plans).
-    # r15: batch shingle sets built in-row (shingle_set_col), no
-    # explode→groupBy(doc) exchange per probe.
-    bcanon = truncate_lineage(
-        doc_shingle_sets(batch, id_col, text_col)
-        .groupBy("ts")
-        .agg(
-            F.min("doc").alias("sid"),
-            F.sort_array(F.collect_list("doc")).alias("members"),
-        )
-    )
-    b_sh = bcanon.select("sid", "ts", F.explode("ts").alias("w"))
-    # batch ranks under the index's frozen order: df(w) := the PERSISTED
-    # distinct-set frequency, read off the vocab partition with one
-    # map-side key join (batch keys broadcast); LEFT join so
-    # never-indexed shingles take df = 0
-    bkeys = b_sh.select("w").distinct()
-    bdf = idx_vocab.join(F.broadcast(bkeys), "w")
-    branked = (
-        b_sh.select("sid", "w")
-        .join(F.broadcast(bdf), "w", "left")
-        .na.fill(0, ["df"])
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("sid").orderBy("df", "w")),
-        )
-        .withColumn("nt", F.count("*").over(Window.partitionBy("sid")))
-        .withColumn(
-            "pfx",
-            F.col("rn")
-            <= F.col("nt")
-            - F.expr(f"({t_num} * nt + {t_den - 1}) DIV {t_den}")
-            + 1,
-        )
-    )
-    # three appearances in the candidate plan (probe1's prefix side,
-    # probe1's index side via the union, probe2's batch side) — the
-    # checkpoint both materializes the rank windows once and keeps the
-    # three references leaf-sized in the composed plan
-    branked = truncate_lineage(branked)
-    small_side = (F.col("a.nt") < F.col("b.nt")) | (
-        (F.col("a.nt") == F.col("b.nt")) & (F.col("a.sid") < F.col("b.sid"))
-    )
-    pair_cols = [
-        F.least(F.col("a.sid"), F.col("b.sid")).alias("s1"),
-        F.greatest(F.col("a.sid"), F.col("b.sid")).alias("s2"),
+    branked = truncate_lineage(_rank(post, t_num, t_den))
+    posting = ["sid", "w", "nt", "rn"]
+    idx = _kind(table, "post")
+    b_post = branked.select(*posting)
+    probes = [
+        # batch prefixes x (stored ∪ batch) postings: small side new
         (
-            F.lit(1)
-            + F.least(F.col("a.nt") - F.col("a.rn"), F.col("b.nt") - F.col("b.rn"))
-        ).alias("ub"),
-        F.expr(f"({t_num} * a.nt + {t_den - 1}) DIV {t_den}").alias("req"),
+            F.broadcast(branked.where("pfx")),
+            idx.select(*posting).unionByName(b_post),
+        ),
+        # stored prefixes x batch postings: small side old, partner new
+        (idx.where("pfx").select(*posting), F.broadcast(b_post)),
     ]
-    idx_posting = idx.select("sid", "w", "nt", "rn")
-    b_posting = branked.select("sid", "w", "nt", "rn")
-    # probe 1: batch-set prefixes x full posting index (old ∪ batch) —
-    # covers every qualifying set pair whose SMALL side is new (incl.
-    # new x new); probe 2: persisted old prefixes x batch postings —
-    # covers small-old x new. Old x old pairs arise from neither. The
-    # batch side BROADCASTS in both probes, so the corpus-scale posting
-    # partition streams map-side — candidate generation has no
-    # corpus-sized exchange at all (a giant batch sub-batches, the
-    # standard serving split).
-    probe1 = (
-        F.broadcast(branked.where("pfx")).alias("a")
-        .join(idx_posting.unionByName(b_posting).alias("b"), "w")
-        .where(small_side)
-        .select(*pair_cols)
+    cand = truncate_lineage(_candidates(probes, t_num, t_den))
+    cand_sids = F.broadcast(
+        cand.select(F.explode(F.array("id1", "id2")).alias("sid")).distinct()
     )
-    probe2 = (
-        idx.where("pfx").select("sid", "w", "nt", "rn").alias("a")
-        .join(F.broadcast(b_posting).alias("b"), "w")
-        .where(small_side)
-        .select(*pair_cols)
-    )
-    cand = (
-        probe1.unionByName(probe2)
-        .groupBy("s1", "s2")
-        .agg(F.max("ub").alias("ub"), F.max("req").alias("req"))
-        .where(F.col("ub") >= F.col("req"))
-        .select("s1", "s2")
-    )
-    # three consumers below (sid extraction + two verification joins) —
-    # unmaterialized, the whole candidate-generation subtree would
-    # execute three times (measured +3 s at sf0.1)
-    cand = truncate_lineage(cand)
-    # verification: candidate INDEX sets' arrays are READ off the 'set'
-    # partition, map-side semi-restricted by the broadcast sid set — no
-    # reconstruction shuffle (batch sets carry their arrays already);
-    # exact intersection once per candidate set pair.
-    cand_sids = (
-        cand.select(F.explode(F.array("s1", "s2")).alias("sid")).distinct()
-    )
+    # two verification joins read it; candidate-set-bounded, so it
+    # broadcasts and the candidate pairs never shuffle with arrays
     all_ts = (
-        idx_sets.join(F.broadcast(cand_sids), "sid")
+        _kind(table, "set").select("sid", "ts").join(cand_sids, "sid")
         .unionByName(bcanon.select("sid", "ts"))
-        .select("sid", "ts", F.size("ts").cast("long").alias("n"))
-        # two verification joins consume it — cache so the scan + union
-        # computes once
         .cache()
     )
-    # all_ts is candidate-SET-bounded (arrays for ~2 sets per pair max)
-    # — broadcast it so the 100x-larger candidate-pair frame never
-    # shuffles its rows (with arrays attached) through two joins
-    qual = (
-        cand.join(
-            F.broadcast(
-                all_ts.select(
-                    F.col("sid").alias("s1"), F.col("ts").alias("ts1"),
-                    F.col("n").alias("n1"),
-                )
-            ),
-            "s1",
-        )
-        .join(
-            F.broadcast(
-                all_ts.select(
-                    F.col("sid").alias("s2"), F.col("ts").alias("ts2"),
-                    F.col("n").alias("n2"),
-                )
-            ),
-            "s2",
-        )
-        .select(
-            "s1",
-            "s2",
-            F.size(F.array_intersect("ts1", "ts2")).cast("long").alias("inter"),
-            F.least("n1", "n2").alias("small"),
-        )
-        .where(t_den * F.col("inter") >= t_num * F.col("small"))
+    qual = _verify(cand, F.broadcast(all_ts), t_num, t_den)
+    members = (
+        _kind(table, "member").select("sid", F.struct("doc").alias("m"))
+        .unionByName(_members(bcanon))
+        .join(cand_sids, "sid")
     )
-    # member expansion: every cross pair has one side in the batch
-    # (probe construction) and batch/index doc ids are disjoint, so all
-    # cross pairs touch the increment by construction. The member map is
-    # corpus-scale — restrict it to candidate sids FIRST (map-side, via
-    # the broadcast sid set) so the expansion joins shuffle
-    # candidate-bounded rows, never the whole corpus's membership.
-    b_members = bcanon.select("sid", F.explode("members").alias("doc"))
-    members = idx_members.unionByName(b_members).join(
-        F.broadcast(cand_sids), "sid"
-    )
-    cross = (
-        qual.join(
-            members.select(F.col("sid").alias("s1"), F.col("doc").alias("d1")),
-            "s1",
-        )
-        .join(
-            members.select(F.col("sid").alias("s2"), F.col("doc").alias("d2")),
-            "s2",
-        )
-        .select(
-            F.least("d1", "d2").alias("id1"),
-            F.greatest("d1", "d2").alias("id2"),
-            "inter",
-            "small",
-        )
-    )
-    # identical-content pairs INSIDE one batch canon set (new x new,
-    # containment 1 by definition), emitted arithmetically in-row over
-    # the doc-sorted members (ordered pairs for free); the index's
-    # internal same-set pairs are old x old and excluded.
-    same = (
-        bcanon.where(F.size("members") >= 2)
-        .select(
-            F.size("ts").cast("long").alias("n"),
-            F.explode(
-                F.expr(
-                    "flatten(transform(members, (d1, i) -> "
-                    "transform(slice(members, i + 2, size(members)), "
-                    "d2 -> struct(d1, d2))))"
-                )
-            ).alias("p"),
-        )
-        .select(
-            F.col("p.d1").alias("id1"),
-            F.col("p.d2").alias("id2"),
-            F.col("n").alias("inter"),
-            F.col("n").alias("small"),
-        )
-    )
-    out = cross.unionByName(same).select(
-        "id1",
-        "id2",
-        "inter",
-        "small",
-        F.expr("CAST(1000 * inter DIV small AS BIGINT)").alias("contain_milli"),
-    )
+    out = _doc_pairs(_expand(qual, members), _same_set_pairs(bcanon), F.lit(True))
     return materialized(out, bcanon, branked, cand, all_ts)
+
 
 def duplicate_spans(
     docs: DataFrame,

@@ -9306,25 +9306,19 @@ def agg_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     "C-contains-B does not reattribute A to C. n_containers counts "
     "direct containers. Scale shape = dedup-contain-exact (candidate-"
     "bounded) + one grouped argmax over the PAIR frame, never the "
-    "corpus; the shingle explode is built once and shared by the "
-    "candidate and size stages.",
+    "corpus; set sizes are size(ts) of the same in-row shingle sets "
+    "the join builds.",
 )
 def dedup_contain_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from itdb_spark.operators.dedup import shingle_frame
+    from itdb_spark.operators.dedup import doc_shingle_sets
     from itdb_spark.plans.library import materialized
 
     c = corpus(spark, sf_dir)
-    # shared cached explode for the join and the size frame — cached in
-    # the FOLDED 16 B/row form (the sf10 heap lesson: the string form of
-    # this cache was multi-GB and pinned the heap); shingle identity is
-    # hash-invariant for both consumers (set sizes and intersections).
-    sh = (
-        shingle_frame(c, "doc_id", "text")
-        .select("doc", F.xxhash64("w").alias("w"))
-        .cache()
+    pairs = containment_join(c, "doc_id", "text")
+    # set size = size(ts), the in-row shingle set the join itself uses
+    sizes = doc_shingle_sets(c, "doc_id", "text").select(
+        "doc", F.size("ts").cast("long").alias("n")
     )
-    pairs = containment_join(c, "doc_id", "text", shingles=sh)
-    sizes = sh.groupBy("doc").agg(F.count("*").cast("long").alias("n"))
     j = (
         pairs.join(
             sizes.select(F.col("doc").alias("id1"), F.col("n").alias("n1")),
@@ -9357,7 +9351,7 @@ def dedup_contain_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("keeper"),
         F.count("*").cast("long").alias("n_containers"),
     )
-    return materialized(elected, sh)
+    return materialized(elected)
 
 
 @register(
