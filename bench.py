@@ -61,51 +61,6 @@ CANARY_REFS = {  # BENCH_r10 record walls, sf0.1, local[32]
 CANARY_REF_RECORD = "BENCH_r10"
 CANARY_REF_SF = 0.1
 
-# Per-shape normalization (r13 VERDICT #3): ambient load on this host
-# is measurably NON-uniform across execution shapes (BENCH_r13's canary
-# spread [0.774, 1.134] — shuffle+UDF plans ran ~25% over their r12
-# loadnorm while scan/join plans ran under, on byte-identical plans),
-# so dividing every wall by the MEDIAN shape's ratio over-corrects some
-# shapes and under-corrects others. ``queries_shapenorm`` divides each
-# headline wall by ITS OWN shape class's canary ratio instead. The
-# class assignment is by dominant execution shape of the measured plan
-# (PLANS.md): scan-agg = one-table scan + hash aggregate; join =
-# shuffle join (+agg); window = window function / stateful streaming
-# micro-batch; udf = shuffle + Arrow-batched Python kernel; eval =
-# broadcast grid + higher-order expressions. RAW walls remain the
-# record; loadnorm (median) stays for cross-round continuity; shapenorm
-# is the finer adjudication aid.
-SHAPE_CLASS = {
-    "agg-hist-genre": "agg-hist-genre",  # scan-agg (canary)
-    "api-sql": "agg-hist-genre",  # one-table SQL scan+agg
-    "dedup-exact": "agg-hist-genre",  # one-table groupBy content hash
-    "agg-pl-stats": "join-pt",  # shuffle join + agg
-    "join-pt": "join-pt",  # shuffle join (canary)
-    "graph-kcore": "join-pt",  # iterative self-joins
-    "dedup-contain-exact": "join-pt",  # shingle joins + aggs
-    "dedup-contain-incr": "join-pt",
-    "dedup-contain-incr-persist": "join-pt",  # persisted-index joins
-    "win-topk-group": "win-topk-group",  # window (canary)
-    "stream-window": "win-topk-group",  # micro-batch windowed agg
-    "stream-session": "win-topk-group",
-    "dedup-minhash": "dedup-minhash",  # shuffle+Arrow-UDF (canary)
-    "dedup-jaccard": "dedup-minhash",
-    "pipe-curate": "dedup-minhash",
-    "dedup-incremental": "dedup-minhash",
-    "dedup-incr-persist": "dedup-minhash",
-    "fn-bpe-train": "dedup-minhash",
-    "emb-cov": "dedup-minhash",  # Arrow GEMM kernel
-    "mm-pixeldedup": "dedup-minhash",  # Arrow codec kernel
-    "eval-chrf": "eval-chrf",  # broadcast grid + HOF exprs (canary)
-    "sim-knn-brute": "eval-chrf",
-    "sim-knn-ivfpq": "eval-chrf",
-    "sim-knn-ivfpq-res": "eval-chrf",
-    "sim-range-brute": "eval-chrf",
-    "sim-range-ivf": "eval-chrf",
-    "dedup-exactspan": "eval-chrf",  # higher-order token exprs
-}
-
-
 def run_action(df) -> int:
     # noop sink: full computation, zero driver materialization
     df.write.format("noop").mode("overwrite").save()
@@ -198,15 +153,6 @@ def main() -> None:
             qid: round(w / lf, 3) for qid, w in timings.items()
         }
         out["value_loadnorm"] = round(sum(timings.values()) / lf, 3)
-        # per-shape normalization (SHAPE_CLASS comment): each wall
-        # divided by ITS shape's canary ratio; unmapped future queries
-        # fall back to the median
-        shapenorm = {
-            qid: round(w / (ratios.get(SHAPE_CLASS.get(qid, ""), lf) or lf), 3)
-            for qid, w in timings.items()
-        }
-        out["queries_shapenorm"] = shapenorm
-        out["value_shapenorm"] = round(sum(shapenorm.values()), 3)
 
     print(json.dumps(out))
     spark.stop()

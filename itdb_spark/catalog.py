@@ -57,6 +57,19 @@ EVENTS_RAW_SCHEMA = T.StructType(
     ]
 )
 
+# Explicit reader schema for the documents table's readStream twins and
+# the batch reads beside them (load_table still infers documents from the
+# footer).
+DOCUMENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("lang", T.StringType(), True),
+        T.StructField("source", T.StringType(), True),
+        T.StructField("n_chars", T.LongType(), True),
+    ]
+)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan — Catalyst handles column pruning + predicate pushdown.

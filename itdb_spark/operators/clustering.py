@@ -3,7 +3,7 @@ graph, then keeper election per cluster — the step after LSH/Jaccard that
 turns pairs into a dedup decision (drop all but the canonical doc).
 
 Algorithm: iterative min-label propagation over the undirected pair graph,
-escalating to POINTER DOUBLING — from round ``doubling_from`` on, each
+escalating to POINTER DOUBLING — from round ``DOUBLING_FROM`` on, each
 round takes the min of (own label, the label OF the label node, neighbors'
 labels). The label-of-label hop halves pointer-chain depth every round, so
 convergence is O(log diameter) rounds instead of O(diameter): a 1000-link
@@ -22,22 +22,29 @@ from pyspark.sql import functions as F
 
 from itdb_spark.plans.library import truncate_lineage
 
+# Round budget and the round the label-of-label hop starts at. 12 rounds
+# settle near-dup components in the plain prefix and chains of ~1000
+# links (module docstring); a longer chain (5000 links leaves 905 labels
+# unsettled) exhausts the budget and raises instead of returning
+# partial labels.
+MAX_ITER = 12
+DOUBLING_FROM = 3
+
 
 def connected_components(
     pairs: DataFrame,
     id1: str = "id1",
     id2: str = "id2",
-    max_iter: int = 12,
-    doubling_from: int = 3,
     stats: dict | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``; component =
     min node id reachable. Converges when a full round changes no label
     (checked with a count — one action per round). Rounds before
-    ``doubling_from`` use plain neighbor-min propagation (one join); later
+    ``DOUBLING_FROM`` use plain neighbor-min propagation (one join); later
     rounds add the label-of-label hop (two joins, halves chain depth).
-    Pass ``stats`` to get ``stats["rounds"]`` back — the convergence-round
-    count the pointer-doubling test asserts on.
+    Raises RuntimeError when ``MAX_ITER`` rounds end with labels still
+    changing. Pass ``stats`` to get ``stats["rounds"]`` back — the
+    convergence-round count the pointer-doubling test asserts on.
     """
     # The edge union scans `pairs` twice (forward + reversed) — cache
     # pairs so the candidate pipeline runs once. No distinct() anywhere:
@@ -101,9 +108,9 @@ def connected_components(
     # instead of eager-checkpoint + count (two full passes).
     labels = truncate_lineage(labels, eager=False)
     rounds = 0
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         rounds += 1
-        if rounds >= doubling_from:
+        if rounds >= DOUBLING_FROM:
             # Pointer-doubling hop: my component's OWN label is at least
             # as small as my component (labels only decrease), so
             # following one extra pointer per round halves chain depth —
@@ -145,6 +152,11 @@ def connected_components(
         labels = new_labels.select("node", F.col("new_component").alias("component"))
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: {changed} labels still changing after "
+            f"{MAX_ITER} rounds"
+        )
     # The convergence count just materialized the final round's (lazy)
     # checkpoint, so the returned frame reads checkpoint blocks; the
     # edge checkpoint's blocks are reclaimed by the ContextCleaner once

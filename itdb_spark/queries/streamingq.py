@@ -1,15 +1,23 @@
 """Streaming-shaped queries — SURVEY.md §2.9. Each streaming operator has a
 batch twin (window(), lag-based sessionization — identical semantics,
 DuckDB-reproducible) AND a `-live` form that runs a REAL readStream to
-completion inside the oracle gate (memory sink, processAllAvailable);
-further readStream paths are exercised in tests/test_streaming.py."""
+completion inside the oracle gate. The live forms share three drivers in
+streaming/events.py: `table_stream` (the events/documents readStream),
+`run_available_now` (drain into a memory sink in complete, update or
+append mode) and `run_staged_batches` (stage slices as files, one
+micro-batch per file, per-batch result dirs — the ingest and serving
+loops). Further readStream paths are exercised in
+tests/test_streaming.py."""
 
 from __future__ import annotations
+
+import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from itdb_spark.catalog import Tables
+from itdb_spark.catalog import DOCUMENTS_SCHEMA, Tables
 from itdb_spark.queries import register
 from itdb_spark.queries.pipeline import (
     _BLOOM_ORACLE,
@@ -18,23 +26,12 @@ from itdb_spark.queries.pipeline import (
     _minhash_bands_ctes,
     ORACLE_CORPUS,
 )
-
-
-def _docs_schema():
-    """Pinned documents reader schema for the streaming twins — ONE home
-    (three byte-identical locals predated it; a future column change
-    edits here and catalog.py only). Built lazily: StructType is cheap
-    but keeping the factory form matches the module's no-module-level-
-    Column rule."""
-    from pyspark.sql import types as T
-
-    return T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
+from itdb_spark.streaming.events import (
+    run_available_now,
+    run_staged_batches,
+    table_stream,
+    windowed_counts_stream,
+)
 
 
 @register(
@@ -88,8 +85,6 @@ _STREAM_WINDOW_ORACLE = """
     "execution inside the oracle gate (stream-window is the batch twin).",
 )
 def stream_window_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from itdb_spark.streaming.events import run_available_now, windowed_counts_stream
-
     stream_df = windowed_counts_stream(spark, sf_dir, window="1 hour")
     return run_available_now(stream_df, "stream_window_live_sink")
 
@@ -104,16 +99,14 @@ def stream_window_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Streaming ingest dedup executed for REAL: the events parquet is "
     "staged TWICE into a temp source dir (a replayed input batch), a "
     "readStream with dropDuplicatesWithinWatermark(event_id) drains it "
-    "(memory sink, processAllAvailable), and the deduped stream aggregates "
+    "(run_available_now, append mode), and the deduped stream aggregates "
     "back to exactly the single-copy batch result — the oracle is the "
     "plain events aggregate. Watermark set beyond the data's time span so "
     "no duplicate is ever late (state = dedup horizon; "
     "streaming/events.py:streaming_dedup).",
 )
 def stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from itdb_spark.streaming.events import streaming_dedup
 
@@ -133,16 +126,7 @@ def stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.copyfile(src, dst)
 
     deduped = streaming_dedup(spark, stage, watermark="3650 days")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_dedup_live_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_available_now(deduped, "stream_dedup_live_sink", "append")
     return spark.sql(
         """
         SELECT event_type, count(*) AS cnt,
@@ -165,34 +149,15 @@ def stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "analog is the ffprobe LEFT JOIN enrichment, itdbmetadata.py:8-11).",
 )
 def stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from itdb_spark.catalog import Tables
-    from itdb_spark.streaming.events import EVENTS_SCHEMA
-
     dim = (
         Tables(spark, sf_dir)
         .events.select("event_type")
         .distinct()
         .select("event_type", F.upper("event_type").alias("category"))
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    joined = stream.join(dim, "event_type")
+    joined = table_stream(spark, sf_dir, "events").join(dim, "event_type")
     agg = joined.groupBy("category").agg(F.count("*").alias("cnt"))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_join_live_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql("SELECT category, cnt FROM stream_join_live_sink")
+    return run_available_now(agg, "stream_join_live_sink").select("category", "cnt")
 
 
 @register(
@@ -265,27 +230,10 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_streaming.py::test_no_event_gap_on_session_boundary.",
 )
 def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from itdb_spark.streaming.events import EVENTS_SCHEMA
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    sessions = stream.groupBy(
+    sessions = table_stream(spark, sf_dir, "events").groupBy(
         "user_id", F.session_window("ts", "30 minutes")
     ).agg(F.count("*").alias("n_events"))
-    q = (
-        sessions.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_session_live_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_available_now(sessions, "stream_session_live_sink")
     return spark.sql(
         """
         SELECT user_id, CAST(count(*) AS BIGINT) AS n_sessions
@@ -321,27 +269,10 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "implementation must all agree row-for-row.",
 )
 def stream_asof_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from itdb_spark.streaming.events import EVENTS_SCHEMA
     from itdb_spark.streaming.stateful import asof_enriched_stream
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    enriched = asof_enriched_stream(stream)
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_asof_live_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql("SELECT * FROM stream_asof_live_sink")
+    enriched = asof_enriched_stream(table_stream(spark, sf_dir, "events"))
+    return run_available_now(enriched, "stream_asof_live_sink", "append")
 
 
 @register(
@@ -387,26 +318,10 @@ def stream_asof_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg-funnel uses, at microsecond precision.",
 )
 def stream_funnel_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from itdb_spark.streaming.events import EVENTS_SCHEMA
     from itdb_spark.streaming.stateful import funnel_stream
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    out = funnel_stream(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stream_funnel_live_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    out = funnel_stream(table_stream(spark, sf_dir, "events"))
+    run_available_now(out, "stream_funnel_live_sink", "update")
     # monotone set-once state: the final value per user is the max of
     # each emitted column (earlier emissions are prefixes of the answer)
     return spark.sql(
@@ -463,16 +378,9 @@ def stream_funnel_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sketching an unbounded stream.",
 )
 def stream_cms_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     from itdb_spark.functions.core import portable_hash64
 
-    docs_schema = _docs_schema()
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    stream = table_stream(spark, sf_dir, "documents")
 
     def bucket(j_col, w_col):
         return portable_hash64(
@@ -487,22 +395,12 @@ def stream_cms_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("j", "bucket")
         .agg(F.count("*").alias("c"))
     )
-    q = (
-        cells_stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_cms_cells")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    cells = spark.table("stream_cms_cells")
+    cells = run_available_now(cells_stream, "stream_cms_cells")
 
     # point queries against the streamed cells: exact top-20 from the
     # same table batch-side (the sketch answers, the exact side grades)
     toks = (
-        spark.read.schema(docs_schema)
+        spark.read.schema(DOCUMENTS_SCHEMA)
         .parquet(f"{sf_dir}/documents.parquet")
         .where(F.length(F.trim("text")) > 0)
         .select(F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w"))
@@ -542,36 +440,19 @@ def stream_cms_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "an incremental ingest consults before any exact-dedup shuffle.",
 )
 def stream_bloom_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     from itdb_spark.queries.pipeline import (
         _bloom_probes,
         _bloom_report,
         _bloom_sketch,
     )
 
-    docs_schema = _docs_schema()
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
     words_stream = _bloom_sketch(
-        stream.select("doc_id", "source", F.md5("text").alias("fp"))
+        table_stream(spark, sf_dir, "documents")
+        .select("doc_id", "source", F.md5("text").alias("fp"))
     )
-    q = (
-        words_stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_bloom_words")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sketch = spark.table("stream_bloom_words")
+    sketch = run_available_now(words_stream, "stream_bloom_words")
 
-    base = spark.read.schema(docs_schema).parquet(f"{sf_dir}/documents.parquet")
+    base = spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
     docs = base.select("doc_id", "source", F.md5("text").alias("fp"))
     return _bloom_report(docs, _bloom_probes(base), sketch)
 
@@ -614,26 +495,10 @@ def stream_bloom_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recomputes it from the trailing 8 events per user).",
 )
 def stream_ewma_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from itdb_spark.streaming.events import EVENTS_SCHEMA
     from itdb_spark.streaming.stateful import ewma_stream
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    out = ewma_stream(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stream_ewma_live_sink")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    out = ewma_stream(table_stream(spark, sf_dir, "events"))
+    run_available_now(out, "stream_ewma_live_sink", "update")
     return spark.sql(
         """SELECT user_id, max(n_seen) AS n_seen,
                   max_by(ewma_milli, n_seen) AS ewma_milli
@@ -680,14 +545,7 @@ def stream_ewma_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bit-for-bit. State bounded at 6 integers per source.",
 )
 def stream_linreg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    docs_schema = _docs_schema()
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    stream = table_stream(spark, sf_dir, "documents")
     toks = F.when(
         F.length(F.trim("text")) == 0, F.lit(0)
     ).otherwise(F.size(F.split(F.trim(F.col("text")), r"\s+")))
@@ -707,17 +565,7 @@ def stream_linreg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
         )
     )
-    q = (
-        moments.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_linreg_moments")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    m = spark.table("stream_linreg_moments")
+    m = run_available_now(moments, "stream_linreg_moments")
     cov = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     varx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     vary = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -777,15 +625,7 @@ _STREAM_OHLC_ORACLE = """
     "key and the two forms must hash-match the same oracle.",
 )
 def stream_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from itdb_spark.catalog import EVENTS_RAW_SCHEMA
-    from itdb_spark.streaming.events import run_available_now
-
-    ev = (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_RAW_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    ev = table_stream(spark, sf_dir, "events")
     okey = F.struct(F.unix_micros("ts").alias("tsu"), "event_id")
     c = F.round(F.col("value") * 100).cast("long")
     agg = (
@@ -838,18 +678,11 @@ def stream_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O(windows x types) in the stream (watermark-evicted), and the "
     "rank scan touches only the window-dimension sink table. "
     "Deterministic tie-break (cnt DESC, event_type) on both sides. "
-    "At 100 TB the sink is a versioned table (snk-versioned) or "
-    "foreachBatch upsert; the rank cut stays dimension-sized "
+    "At 100 TB the sink is a versioned table (snk-versioned) or a "
+    "per-batch upsert; the rank cut stays dimension-sized "
     "regardless of event volume.",
 )
 def stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from itdb_spark.streaming.events import (
-        run_available_now,
-        windowed_counts_stream,
-    )
-
     counts = run_available_now(
         windowed_counts_stream(spark, sf_dir, window="1 hour"),
         "stream_topk_live_sink",
@@ -891,9 +724,9 @@ def stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="STREAMING incremental containment against the persisted "
     "frozen-order index (round 12) — the full production ingest loop "
     "of dedup-contain-incr-persist run LIVE: the increment (the "
-    "doc_id % 5 == 4 slice) is staged as three parquet files, a "
-    "readStream with maxFilesPerTrigger=1 drains them as three "
-    "micro-batches, and each foreachBatch (a) probes the CURRENTLY "
+    "doc_id % 5 == 4 slice) is staged as three parquet files, "
+    "run_staged_batches drains them as three micro-batches, and each "
+    "batch (a) probes the CURRENTLY "
     "PUBLISHED index version with containment_probe_persisted — exact "
     "pairs between the micro-batch and everything already ingested, "
     "plus the batch's internal pairs — then (b) ACCEPTS the batch with "
@@ -912,8 +745,8 @@ def stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "correctly under live micro-batching. At 100 TB this IS the ingest "
     "topology end-to-end: probe cost AND refresh cost are both bounded "
     "by the batch, never the corpus — nothing corpus-scale is ranked, "
-    "shuffled, or rewritten anywhere in the loop. Round 13 (ADVICE "
-    "r12): the loop is IDEMPOTENT under foreachBatch's at-least-once "
+    "shuffled, or rewritten anywhere in the loop. The loop is "
+    "IDEMPOTENT under at-least-once micro-batch "
     "delivery — acceptance is keyed on the batch id via a tag "
     "published atomically with the index delta (chain_tags), results "
     "land in per-batch dirs overwritten on replay, and auto-compaction "
@@ -921,11 +754,6 @@ def stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "amplification knee.",
 )
 def stream_contain_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from itdb_spark.operators.dedup import (
         _INDEX_BLOCK_BYTES,
         append_containment_index,
@@ -935,102 +763,43 @@ def stream_contain_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itdb_spark.queries.pipeline import corpus
     from itdb_spark.sinks.versioned import chain_tags, maybe_compact_chain
 
-    work = tempfile.mkdtemp(prefix="itdb_stream_contain_")
-    stage = os.path.join(work, "stage")
-    results = os.path.join(work, "results")
-    root = os.path.join(work, "index")
-    os.makedirs(stage)
-    try:
-        docs = corpus(spark, sf_dir).select("doc_id", "source", "text")
-        old = docs.where(F.col("doc_id") % 5 != 4)
-        batch = docs.where(F.col("doc_id") % 5 == 4)
-        # one staged file per micro-batch (sub-split within the slice)
-        for k in range(3):
-            sub = os.path.join(work, f"sub{k}")
-            batch.where(F.expr("doc_id DIV 5") % 3 == k).coalesce(
-                1
-            ).write.parquet(sub)
-            part = glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(stage, f"b{k}.parquet"))
+    docs = corpus(spark, sf_dir).select("doc_id", "source", "text")
+    old = docs.where(F.col("doc_id") % 5 != 4)
+    batch = docs.where(F.col("doc_id") % 5 == 4)
+    with tempfile.TemporaryDirectory(prefix="itdb_stream_contain_") as work:
+        root = os.path.join(work, "index")
         persist_containment_index(old, "doc_id", "text", root)
 
-        def screen(bdf, batch_id):
-            # IDEMPOTENT under foreachBatch's at-least-once delivery
-            # (ADVICE r12): acceptance is keyed on the batch id via a
-            # tag published atomically WITH the index delta, and the
-            # results land in a per-batch dir overwritten on replay —
-            # a redelivered micro-batch neither duplicates result rows
-            # nor double-appends member rows. Replay cases: crash
-            # before the tagged publish → full redo (results dir
-            # overwritten); crash after → tag visible, whole batch
-            # skipped (its results were already written, since the
-            # results write precedes the accept).
+        def screen(bdf, batch_id, out):
             tag = f"batch-{batch_id}"
             if tag in chain_tags(root):
                 return
-            probe = containment_probe_persisted(
+            containment_probe_persisted(
                 spark, root, bdf, "doc_id", "text"
-            )
-            probe.write.mode("overwrite").parquet(
-                os.path.join(results, f"b{batch_id}")
-            )
-            # accept the batch, refresh the index: BATCH-BOUNDED delta
-            # append behind the same atomic manifest (round 12 — this
-            # was a full rebuild over the union per micro-batch, a
-            # corpus-scale rank + rewrite each trigger; append_
-            # containment_index ranks only the batch's new distinct
-            # sets under the frozen v1 order and writes only the delta,
-            # snapshot-isolated for any in-flight probe)
+            ).write.mode("overwrite").parquet(out)
+            # accept: a batch-bounded delta append under the frozen v1
+            # order, snapshot-isolated for any in-flight probe
             append_containment_index(
                 spark, root, bdf, "doc_id", "text", tag=tag
             )
-            # compaction POLICY exercised live (r12 VERDICT #3):
             # max_links=3 folds the chain exactly once inside this
-            # 3-batch run (base + 3 deltas > 3) — the fold preserves
-            # the kind partitioning and the batch tags, and the next
-            # trigger's probe reads the folded table, so the oracle
-            # equality below gates fold-correctness END-TO-END. In
-            # production the knob sits at the measured knee (SCALE.md
-            # §r13), amortizing one corpus-scale rewrite over that
-            # many batch-bounded ingests.
+            # 3-batch run (base + 3 deltas > 3), so the next trigger's
+            # probe reads the folded table and the oracle gates
+            # fold-correctness end to end. vacuum_min_age_s=0: this loop
+            # is the table's sole owner and every reader is per-trigger.
             maybe_compact_chain(
-                # vacuum_min_age_s=0: this loop is the table's sole
-                # owner and every reader is per-trigger (constructed
-                # after the publish, dead before the next fold), so
-                # the retention floor is safely waived
                 spark, root, max_links=3, vacuum_keep=1,
                 vacuum_min_age_s=0,
                 writer_options={"parquet.block.size": _INDEX_BLOCK_BYTES},
             )
 
-        from pyspark.sql import types as T
-
-        schema = T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ])
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
+        dirs = run_staged_batches(
+            spark, work,
+            [batch.where(F.expr("doc_id DIV 5") % 3 == k) for k in range(3)],
+            screen,
         )
-        q = stream.writeStream.foreachBatch(screen).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # materialize before the temp dir disappears (recursive lookup:
-        # results live in per-batch subdirs for replay idempotency, and
-        # the dir names must NOT surface as a partition column)
-        out = spark.read.option("recursiveFileLookup", "true").parquet(
-            results
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        out = spark.read.parquet(*dirs)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -1054,7 +823,7 @@ def stream_contain_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "once via persist_band_index (member table + DISTINCT-keys "
     "sibling, member-first order); the re-crawl batch (the exact-copy "
     "replicas, % 300000 >= 200000) arrives as a real readStream in "
-    "three micro-batches; each foreachBatch (a) SCREENS its batch "
+    "three micro-batches; each batch (a) SCREENS its batch "
     "against the currently-published keys chain "
     "(band_collision_counts_persisted — per-call work is the batch's "
     "signatures + one key join), (b) ACCEPTS it via append_band_index "
@@ -1078,11 +847,6 @@ def stream_contain_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "maintenance amortized by policy.",
 )
 def stream_minhash_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from itdb_spark.operators.dedup import (
         append_band_index,
         band_collision_counts_persisted,
@@ -1096,69 +860,35 @@ def stream_minhash_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = corpus(spark, sf_dir).select("doc_id", "text")
     base = docs.where(F.col("doc_id") % 300000 < 200000)
     batch_pool = docs.where(F.col("doc_id") % 300000 >= 200000)
-
-    work = tempfile.mkdtemp(prefix="itdb_stream_minhash_")
-    stage = os.path.join(work, "stage")
-    results = os.path.join(work, "results")
-    root = os.path.join(work, "bandidx")
-    os.makedirs(stage)
-    try:
-        for k in range(3):
-            sub = os.path.join(work, f"sub{k}")
-            batch_pool.where(
-                F.expr("doc_id DIV 7") % 3 == k
-            ).coalesce(1).write.parquet(sub)
-            part = glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(stage, f"b{k}.parquet"))
+    with tempfile.TemporaryDirectory(prefix="itdb_stream_minhash_") as work:
+        root = os.path.join(work, "bandidx")
         persist_band_index(
             minhash_bands(minhash_signatures(base, "doc_id", "text")), root
         )
 
-        def ingest(bdf, batch_id):
+        def ingest(bdf, batch_id, out):
             tag = f"batch-{batch_id}"
             if tag in chain_tags(root + "_keys"):
-                return  # at-least-once replay of a COMPLETED accept
+                return
             bands = minhash_bands(minhash_signatures(bdf, "doc_id", "text"))
             band_collision_counts_persisted(
                 spark, root, bands
-            ).write.mode("overwrite").parquet(
-                os.path.join(results, f"b{batch_id}")
-            )
+            ).write.mode("overwrite").parquet(out)
             append_band_index(spark, root, bands, tag=tag)
             # vacuum_min_age_s=0: sole-owner loop, per-trigger readers
-            maybe_compact_chain(
-                spark, root, max_links=2, vacuum_keep=1,
-                vacuum_min_age_s=0,
-            )
-            maybe_compact_chain(
-                spark, root + "_keys", max_links=2, vacuum_keep=1,
-                vacuum_min_age_s=0,
-            )
+            for chain in (root, root + "_keys"):
+                maybe_compact_chain(
+                    spark, chain, max_links=2, vacuum_keep=1,
+                    vacuum_min_age_s=0,
+                )
 
-        from pyspark.sql import types as T
-
-        schema = T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ])
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
+        dirs = run_staged_batches(
+            spark, work,
+            [batch_pool.where(F.expr("doc_id DIV 7") % 3 == k) for k in range(3)],
+            ingest,
         )
-        q = stream.writeStream.foreachBatch(ingest).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.option("recursiveFileLookup", "true").parquet(
-            results
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        out = spark.read.parquet(*dirs)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -1175,8 +905,8 @@ def stream_minhash_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the containment family got in round 12, for vectors: the coarse "
     "quantizer trains once on the base corpus (vec_id % 5 != 4) and "
     "freezes; the increment arrives as a real readStream (three "
-    "staged parquet files, maxFilesPerTrigger=1 → three "
-    "micro-batches); each foreachBatch (a) ACCEPTS its batch — "
+    "staged parquet files, one micro-batch per file); each "
+    "batch (a) ACCEPTS its batch — "
     "assigned to the frozen centroids with one broadcast join and "
     "published as a DELTA version of the cell-partitioned assignment "
     "chain behind one atomic manifest swap (append_ivf_index), "
@@ -1195,11 +925,6 @@ def stream_minhash_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pruned probe — nothing corpus-scale moves in the loop.",
 )
 def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from itdb_spark.operators.ivf import (
         append_ivf_index,
         build_ivf_index,
@@ -1212,67 +937,34 @@ def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.where(F.col("vec_id") % 5 != 4)
     incr = emb.where(F.col("vec_id") % 5 == 4)
     queries = emb.where(F.col("vec_id") < 15)
-
-    work = tempfile.mkdtemp(prefix="itdb_stream_ann_")
-    stage = os.path.join(work, "stage")
-    serves = os.path.join(work, "serves")
-    root = os.path.join(work, "index")
-    chain_root = os.path.join(root, "assignments")
-    os.makedirs(stage)
-    try:
-        for b in range(3):
-            sub = os.path.join(work, f"sub{b}")
-            incr.where(F.expr("vec_id DIV 5") % 3 == b).coalesce(
-                1
-            ).write.parquet(sub)
-            part = glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(stage, f"b{b}.parquet"))
+    with tempfile.TemporaryDirectory(prefix="itdb_stream_ann_") as work:
+        root = os.path.join(work, "index")
+        chain_root = os.path.join(root, "assignments")
         assignments, centroids = build_ivf_index(base, k=8)
         persist_ivf_index_versioned(assignments, centroids, root)
 
-        def ingest(bdf, batch_id):
+        def ingest(bdf, batch_id, out):
             tag = f"batch-{batch_id}"
             if tag in chain_tags(chain_root):
-                return  # at-least-once replay of an accepted batch
+                return
             append_ivf_index(spark, root, bdf, tag=tag)
             # serve BETWEEN refreshes, against the just-published chain
             ivf_search_chain(
                 spark, root, queries, k=5, n_probe=3
-            ).write.mode("overwrite").parquet(
-                os.path.join(serves, f"b{batch_id}")
-            )
+            ).write.mode("overwrite").parquet(out)
             # vacuum_min_age_s=0: sole-owner loop, per-trigger readers
             maybe_compact_chain(
                 spark, chain_root, max_links=2, vacuum_keep=1,
                 vacuum_min_age_s=0,
             )
 
-        from pyspark.sql import types as T
-
-        schema = T.StructType([
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ])
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
+        dirs = run_staged_batches(
+            spark, work,
+            [incr.where(F.expr("vec_id DIV 5") % 3 == b) for b in range(3)],
+            ingest,
         )
-        q = stream.writeStream.foreachBatch(ingest).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        last = max(
-            int(d[1:]) for d in os.listdir(serves) if d.startswith("b")
-        )
-        out = spark.read.parquet(os.path.join(serves, f"b{last}"))
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        out = spark.read.parquet(dirs[-1])
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -1285,7 +977,7 @@ def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "run as a LIVE search server, completing the pattern the round "
     "gave containment (stream-contain-live): queries arrive as a real "
     "readStream (15 query vectors staged as three parquet files, "
-    "maxFilesPerTrigger=1 → three micro-batches), and each foreachBatch "
+    "one micro-batch per file), and each micro-batch "
     "serves its batch with ivf_search_persisted against the ONE "
     "memoized on-disk index — probed cell ids become a plan-time "
     "partition IN-filter per batch, so every request reads only its "
@@ -1300,66 +992,25 @@ def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pays only probe + pruned-scan + rerank.",
 )
 def stream_knn_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from itdb_spark.operators.ivf import ivf_search_persisted
     from itdb_spark.queries.pipeline import _ivf_persist_root
 
     root = _ivf_persist_root(spark, sf_dir)
     emb = Tables(spark, sf_dir).embeddings
-    work = tempfile.mkdtemp(prefix="itdb_stream_knn_")
-    stage = os.path.join(work, "stage")
-    results = os.path.join(work, "results")
-    os.makedirs(stage)
-    try:
-        for b in range(3):
-            sub = os.path.join(work, f"sub{b}")
-            emb.where(
-                (F.col("vec_id") >= 5 * b) & (F.col("vec_id") < 5 * (b + 1))
-            ).coalesce(1).write.parquet(sub)
-            part = glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(stage, f"q{b}.parquet"))
 
-        def serve(bdf, batch_id):
-            # per-batch dir, overwritten on replay: foreachBatch is
-            # at-least-once, and mode("append") to one dir would
-            # duplicate a redelivered batch's results (the ingest
-            # loops' idempotency discipline, applied to the pure-serve
-            # twin — no index mutation here, so the dir IS the whole
-            # replay guard)
-            ivf_search_persisted(
-                spark, root, bdf, k=5, n_probe=3
-            ).write.mode("overwrite").parquet(
-                os.path.join(results, f"b{batch_id}")
-            )
+    def serve(bdf, batch_id, out):
+        ivf_search_persisted(
+            spark, root, bdf, k=5, n_probe=3
+        ).write.mode("overwrite").parquet(out)
 
-        from pyspark.sql import types as T
-
-        # pinned to the parquet's physical types (float32 vectors, int
-        # labels — the vectorized reader refuses a widening schema)
-        schema = T.StructType([
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ])
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
+    with tempfile.TemporaryDirectory(prefix="itdb_stream_knn_") as work:
+        dirs = run_staged_batches(
+            spark, work,
+            [
+                emb.where((F.col("vec_id") >= 5 * b) & (F.col("vec_id") < 5 * (b + 1)))
+                for b in range(3)
+            ],
+            serve,
         )
-        q = stream.writeStream.foreachBatch(serve).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.read.option("recursiveFileLookup", "true").parquet(
-            results
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        out = spark.read.parquet(*dirs)
+        return spark.createDataFrame(out.collect(), out.schema)

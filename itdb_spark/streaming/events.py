@@ -1,24 +1,42 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming over the testdata tables.
 
 The reference has no streaming engine — its incrementality is mtime gates
-and anti-joins (SURVEY.md §2.9). Here the events fixture flows through a
-real readStream with watermarked tumbling windows; `Trigger.AvailableNow`
-is the batch-incremental mode that replaces the reference's
-`.loaded`-marker freshness gate (itdbloader.py:78-103)."""
+and anti-joins (SURVEY.md §2.9). Here the tables flow through real
+readStreams; `Trigger.AvailableNow` is the batch-incremental mode that
+replaces the reference's `.loaded`-marker freshness gate
+(itdbloader.py:78-103). Every live query is driven by the three helpers
+below: `table_stream` (source), `run_available_now` (memory-sink drain)
+and `run_staged_batches` (staged micro-batch drain)."""
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from itdb_spark.catalog import EVENTS_RAW_SCHEMA
+from itdb_spark.catalog import DOCUMENTS_SCHEMA, EVENTS_RAW_SCHEMA
 
 # ts is TIMESTAMP(MICROS) in the parquet — native TimestampType under the
 # pinned schema (readStream requires an explicit schema regardless); see
 # the EVENTS_RAW_SCHEMA comment in catalog.py for the regen history.
 EVENTS_SCHEMA = EVENTS_RAW_SCHEMA
+
+
+def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The streaming twin of ``catalog.load_table``: a parquet readStream
+    over ``<name>.parquet`` under ``sf_dir``, read with the table's pinned
+    catalog schema (events or documents)."""
+    schema = {"events": EVENTS_RAW_SCHEMA, "documents": DOCUMENTS_SCHEMA}[name]
+    return (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .load(sf_dir)
+    )
 
 
 def windowed_counts_stream(
@@ -27,17 +45,12 @@ def windowed_counts_stream(
     """readStream → watermark → tumbling-window agg. Watermark bounds state:
     windows older than max(event time) − watermark are finalized and
     evicted — the late-data semantics the reference never had."""
-    events = (
-        spark.readStream.format("parquet")
-        .schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
     return (
         # NULL-ts events are defined out of time windows (F.window drops
         # them silently; the filter makes the rule explicit, matching the
         # batch twin and oracle)
-        events.where(F.col("ts").isNotNull())
+        table_stream(spark, sf_dir, "events")
+        .where(F.col("ts").isNotNull())
         .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), F.col("event_type"))
         .agg(
@@ -55,13 +68,16 @@ def windowed_counts_stream(
     )
 
 
-def run_available_now(stream_df: DataFrame, query_name: str) -> DataFrame:
+def run_available_now(
+    stream_df: DataFrame, query_name: str, output_mode: str = "complete"
+) -> DataFrame:
     """Drive a streaming DataFrame to completion over the currently-available
     input (Trigger.AvailableNow semantics via processAllAvailable) and
-    return the materialized result from the memory sink."""
-    spark = stream_df.sparkSession
+    return the memory sink ``query_name`` as a table. ``update`` and
+    ``append`` modes append each micro-batch's emissions, so the caller
+    folds them (e.g. the last or max row per key)."""
     q = (
-        stream_df.writeStream.outputMode("complete")
+        stream_df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(query_name)
         .start()
@@ -70,7 +86,58 @@ def run_available_now(stream_df: DataFrame, query_name: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}")
+
+
+def run_staged_batches(
+    spark: SparkSession,
+    work: str,
+    slices: list[DataFrame],
+    fn: Callable[[DataFrame, int, str], None],
+) -> list[str]:
+    """Stage each slice as one parquet file under ``work/stage``, drain them
+    as one micro-batch per file (``maxFilesPerTrigger=1``, stream schema
+    taken from the slices), and call ``fn(batch_df, batch_id, out)`` per
+    batch with ``out = work/results/b<batch_id>``. Returns the result dirs
+    that exist, in batch order. The caller owns ``work`` and must collect
+    what it needs from the dirs before removing it.
+
+    foreachBatch is at-least-once: a replayed batch reruns ``fn``. So
+    ``fn`` writes its own results, overwriting ``out`` so a replay never
+    duplicates rows. An ingest ``fn`` that probes and then accepts the
+    batch (publishes its tagged index delta) writes its results BEFORE the
+    accept, and returns early when the tag is already published. A driver that wrote ``fn``'s return
+    value after ``fn`` returned would put the accept first: a crash
+    between accept and write would leave the batch tagged, so the replay
+    would skip it and its results would be lost."""
+    stage = os.path.join(work, "stage")
+    results = os.path.join(work, "results")
+    os.makedirs(stage)
+    for k, df in enumerate(slices):
+        sub = os.path.join(work, f"sub{k}")
+        df.coalesce(1).write.parquet(sub)
+        part = glob.glob(os.path.join(sub, "part-*.parquet"))[0]
+        shutil.move(part, os.path.join(stage, f"b{k}.parquet"))
+    q = (
+        spark.readStream.format("parquet")
+        .schema(slices[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .load(stage)
+        .writeStream.foreachBatch(
+            lambda bdf, batch_id: fn(
+                bdf, batch_id, os.path.join(results, f"b{batch_id}")
+            )
+        )
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    if not os.path.isdir(results):
+        return []
+    ids = sorted(int(d[1:]) for d in os.listdir(results))
+    return [os.path.join(results, f"b{i}") for i in ids]
 
 
 def streaming_dedup(

@@ -93,23 +93,6 @@ def running_user_totals(
     )
 
 
-def run_stateful_to_completion(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Drive with the memory sink; 'update' mode appends the per-batch
-    emissions — the caller takes the last row per key."""
-    spark = stream_df.sparkSession
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 ASOF_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), False),

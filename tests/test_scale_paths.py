@@ -325,24 +325,6 @@ def test_bench_headline_set_stable():
     }
 
 
-def test_bench_shape_classes_complete():
-    """Per-shape normalization (round 14): every bench=True query must
-    carry an explicit SHAPE_CLASS assignment mapping to a canary qid —
-    an unmapped future addition would silently fall back to the median
-    and its shapenorm record would be mis-normalized from day one; a
-    stale mapping would mask a headline-set change."""
-    import bench
-
-    from itdb_spark.queries import load_all
-
-    bench_ids = {qid for qid, q in load_all().items() if q.bench}
-    assert set(bench.SHAPE_CLASS) == bench_ids
-    assert set(bench.SHAPE_CLASS.values()) <= set(bench.CANARY_REFS)
-    # every canary maps to itself (its shapenorm is its ref by identity)
-    for c in bench.CANARY_REFS:
-        assert bench.SHAPE_CLASS[c] == c
-
-
 def test_snapshot_diff_null_safety(spark):
     """(null == null) is unchanged; null→value and value→null are changed;
     empty string is distinct from null."""

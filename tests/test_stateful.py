@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -13,8 +14,8 @@ def test_stateful_running_totals(spark):
     """applyInPandasWithState running per-user totals over the events
     stream equal the batch groupBy at end of input."""
     from itdb_spark.catalog import Tables
-    from itdb_spark.streaming.events import EVENTS_SCHEMA
-    from itdb_spark.streaming.stateful import run_stateful_to_completion, running_user_totals
+    from itdb_spark.streaming.events import EVENTS_SCHEMA, run_available_now
+    from itdb_spark.streaming.stateful import running_user_totals
 
     stream = (
         spark.readStream.format("parquet")
@@ -22,8 +23,8 @@ def test_stateful_running_totals(spark):
         .option("pathGlobFilter", "events.parquet")
         .load(SF_DIR)
     )
-    out = run_stateful_to_completion(
-        running_user_totals(stream), f"stateful_{int(time.time())}"
+    out = run_available_now(
+        running_user_totals(stream), f"stateful_{int(time.time())}", "update"
     )
     # update mode appends one row per key per batch → take each key's max
     final = (
@@ -61,10 +62,9 @@ def test_connected_components_chain_converges_log_rounds(spark):
     """Pointer-doubling guarantee: a 64-link chain — the worst shape for
     plain min-label propagation, which needs ~63 rounds — must fully
     converge within 10 rounds (≈ log2(64) + slack; tighter than the
-    default max_iter=12 budget on purpose, so the log-depth property is
-    what passes, not the budget). Without the label-of-label hop this
-    test fails: the loop exhausts max_iter and returns unconverged
-    labels."""
+    MAX_ITER=12 budget on purpose, so the log-depth property is what
+    passes, not the budget). Without the label-of-label hop this test
+    fails: the loop exhausts MAX_ITER and raises."""
     from itdb_spark.operators.clustering import connected_components
 
     chain = spark.createDataFrame(
@@ -74,6 +74,19 @@ def test_connected_components_chain_converges_log_rounds(spark):
     comp = {r.node: r.component for r in connected_components(chain, stats=stats).collect()}
     assert comp == {i: 0 for i in range(65)}, "chain must collapse to min label 0"
     assert stats["rounds"] <= 10, stats
+
+
+def test_connected_components_raises_when_round_budget_ends(spark):
+    """A 5000-link chain (> 2^12) cannot settle within MAX_ITER rounds even
+    with pointer doubling: the loop must raise instead of silently
+    returning the unconverged labels (905 of them were wrong before)."""
+    from itdb_spark.operators.clustering import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(5000)], "id1 long, id2 long"
+    )
+    with pytest.raises(RuntimeError, match="still changing after 12 rounds"):
+        connected_components(chain)
 
 
 def test_reliable_checkpoint_path(spark, tmp_path):

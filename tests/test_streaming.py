@@ -55,6 +55,32 @@ def test_foreach_batch_sink(spark, tmp_path):
     assert landed.select(F.countDistinct("event_id")).collect()[0][0] == src_count
 
 
+def test_run_staged_batches(spark, tmp_path):
+    """The staged micro-batch driver: three slices arrive as batches 0, 1, 2
+    in slice order, each batch holds exactly its slice's rows, and a batch
+    whose fn writes nothing has no entry in the returned dirs."""
+    from itdb_spark.streaming.events import run_staged_batches
+
+    slices = [
+        spark.createDataFrame([(10 * k + i, f"s{k}") for i in range(k + 2)], "id long, tag string")
+        for k in range(3)
+    ]
+    seen = []
+
+    def fn(bdf, batch_id, out):
+        rows = sorted(tuple(r) for r in bdf.collect())
+        seen.append((batch_id, rows))
+        if batch_id != 1:
+            bdf.write.mode("overwrite").parquet(out)
+
+    dirs = run_staged_batches(spark, str(tmp_path), slices, fn)
+    want = [sorted(tuple(r) for r in df.collect()) for df in slices]
+    assert seen == list(enumerate(want))
+    assert dirs == [str(tmp_path / "results" / b) for b in ("b0", "b2")]
+    landed = sorted(tuple(r) for r in spark.read.parquet(*dirs).collect())
+    assert landed == sorted(want[0] + want[2])
+
+
 def test_streaming_dedup(spark, tmp_path):
     """Duplicated input (the events table landed twice) streams through
     dropDuplicatesWithinWatermark → exactly the distinct events survive."""
