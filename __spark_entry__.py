@@ -45,102 +45,20 @@ def entry(spark: SparkSession) -> DataFrame:
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 
 # Queries whose RESULT SHAPE or ORACLE changed since their last driver
-# grade — rank them with the never-graded set so the next CORRECTNESS
-# window re-records them under the new definition (clear this set once
-# the round's CORRECTNESS file lands;
-# tests/test_properties.py::test_changed_since_graded_cleared_after_regrade
-# asserts no member remains once a NEWER CORRECTNESS file re-records
-# it, so CI forces the cleanup). Since round 5 the pin carries the
-# round whose grade it invalidates: {qid: stale_as_of} means "grades
-# up to and including round stale_as_of predate a definition change" —
-# the query ranks as never-graded until a file with a higher round
-# number records it, at which point the gate demands removal. Round 5:
-# dedup-embedding's planted-copy id offset moved +10000 → +1e9
-# (code-review: the old offset collides with real ids once the table
-# passes 10k rows), changing its result values; its newest grade is r4,
-# so grades ≤ 4 are stale. (dedup-semantic shares the fix but has never
-# been graded — it fronts the queue automatically.) Late round 5:
-# fn-time's oracle gained the nonnegative-duration clamp (graded r2)
-# and text-langid's oracle was rewritten onto the shared
-# _LANGID_PRED_SQL fragment (graded r4) — results are identical on the
-# current testdata, but the definitions changed, so their old grades
-# no longer certify the committed text. (The session's other changed
-# queries — sim-bm25, the as-of family, the stateful streaming twins —
-# have never been graded and front the queue automatically.)
-# Never-graded entries whose SEMANTICS were corrected late in a round
-# carry stale_as_of=0: rank-wise they front with the pins. A pin is
-# SELF-CLEARING: _effective_rank ignores it once any CORRECTNESS file
-# with round > stale_as_of records the id, so a pin left in place after
-# its re-grade is dead weight, never a queue distortion. The CI gate
+# grade: {qid: stale_as_of} means "grades up to and including round
+# stale_as_of predate a definition change", so the query ranks with the
+# never-graded set (ahead of it, in fact) until a CORRECTNESS file with a
+# higher round number re-records it under the new definition. A pin is
+# SELF-CLEARING: _effective_rank ignores it once such a file exists, so a
+# pin left in place after its re-grade is dead weight, never a queue
+# distortion. The CI gate
 # (tests/test_properties.py::test_changed_since_graded_cleared_after_regrade)
-# therefore tolerates pins neutralized by the NEWEST file — that file
-# always lands post-commit, after the tree is frozen — and only fails
-# when a pin has sat neutralized through a full subsequent round
-# (i.e. a file OLDER than the newest already re-graded it).
-# Round 6: all ten round-5 pins were re-graded green by
-# CORRECTNESS_r05.json and are cleared. The as-of streaming twin gained
-# a NULL-ts guard (ADVICE r5) with no oracle change — results at the
-# grading SF are bit-identical (testdata has no NULL ts), so no pin.
-# Round 6's edge-corpus NULL-ts/NULL-user probes (ADVICE r5) forced a
-# definition pass over every timeline operator: NULL-ts events are
-# defined OUT of funnels/sessions/time-windows (shared explicit
-# pre-filters) and the as-of oracles now state the operator's NULL-ts
-# rule (NULL-ts right rows dropped, NULL-ts left rows unmatched). All
-# answers are identical on the NULL-free testdata, but the oracle texts
-# changed → prior grades no longer certify the committed definitions.
-# (Pins are for CHANGED definitions. BRAND-NEW entries registered after
-# the round's window is planned use the opposite lever: register(...,
-# defer_after=<round>) parks them at the BACK of the queue until a
-# CORRECTNESS file at/past that round exists — see _effective_rank and
-# the Query.defer_after docs. Round 6 registered five such entries:
-# sim-knn-pq, sim-hybrid-rrf, eval-retrieval, sim-knn-ivfpq, eval-rouge.)
-# Round 7: all twelve round-6 pins (the NULL-semantics definition pass)
-# were re-graded green by CORRECTNESS_r06.json and are cleared.
-# Round 10: src-csv's oracle path gained the uid suffix (the round-9
-# ADVICE shared-/tmp hazard class, applied consistently beyond the
-# flagged src-parquet-meta) — values identical, but the committed
-# oracle TEXT changed and its last grade is r6, so that grade no
-# longer certifies the committed definition. (The round's other
-# oracle-text change, src-parquet-meta, was never graded and fronts
-# the window automatically; the Spark-side refactors — dedup-cdc /
-# text-keyphrase / fn-embed-whiten _impl split, sim-knn-ivf-persist
-# memoization, text-novelty's doc-keyed rewrite — produce
-# byte-identical results, differentially re-verified at the grading
-# SF, and the graded/never-graded split needs no pins for them.)
-# Round 11: the src-csv pin is CLEARED (re-graded green by
-# CORRECTNESS_r10 — the one-round tolerance window). emb-dimstats was
-# PINNED at its r10 grade (hash-red under the old DECIMAL(38,0)
-# surface; round 11 moved sumsq_micro2 to canonical-digit VARCHAR).
-# Round 12: the emb-dimstats pin is CLEARED — CORRECTNESS_r11 re-graded
-# it GREEN under the VARCHAR surface (the one-round tolerance window),
-# confirming the Decimal value-normalization divergence hypothesis.
-# The registry is fully green at its latest grades (279/279, r11
-# verdict). Round-12 registrations use defer_after=12. One round-12
-# definition change (VERDICT r11 #3): dedup-incremental's index/batch
-# split is now keyed on the replica class (doc % 300000) instead of an
-# absolute id bound, so the batch fraction is SF-invariant on
-# block-remapped scale dirs — values at the grading SFs are identical
-# (base ids there stay below 100000), but the committed oracle text
-# changed and its last grade is r10, so that grade no longer certifies
-# the committed definition. (dedup-incr-persist got the same fix but
-# has never been driver-graded — it fronts the window automatically.)
-# Round 13: the dedup-incremental pin is CLEARED — CORRECTNESS_r12
-# re-graded it GREEN under the replica-keyed oracle (the one-round
-# tolerance window). Registry fully green at its latest grades
-# (285/285 per the r12 verdict: 279 driver + 6 judge-verified).
-# Round-13 registrations use defer_after=13.
-# Round 14: the pin dict stays EMPTY — no oracle text changed. The
-# round's Spark-side changes (the hybrid NULL-kh containment-append
-# match, the vacuum retention floor with sole-owner waivers in the
-# ingest loops, the errorifexists centroid publish) are
-# result-identical on every graded corpus and were differentially
-# re-verified at sf0.001/sf0.01 (dedup-contain-incr-persist,
-# stream-contain-live, stream-minhash-ingest-live,
-# stream-ann-ingest-live, snap-isolation — the round-10 "refactor
-# needs no pin" precedent). The three r13 registrations front the
-# window automatically (their defer_after=13 expired when
-# CORRECTNESS_r13 landed). Round-14 registrations (snap-fold) use
-# defer_after=14.
+# tolerates pins neutralized by the NEWEST file — that file always lands
+# after the tree is frozen — and fails when a pin has sat neutralized
+# through a full later round. Pins are for CHANGED definitions only: a
+# refactor whose results are identical at the grading SFs (verified
+# differentially) needs none, and never-graded entries front the queue
+# on their own.
 _CHANGED_SINCE_GRADED: dict[str, int] = {}
 
 
@@ -167,39 +85,24 @@ def _last_graded_round() -> dict[str, int]:
     return last
 
 
-def _effective_rank(
-    qid: str, last: dict[str, int], defer_after: int = 0, newest: int = 0
-) -> int:
+def _effective_rank(qid: str, last: dict[str, int]) -> int:
     """-1 = definition/semantics changed since the last record (or a
     flagged fresh fix) — leads even the never-graded bucket, which can
     exceed one grading window; 0 = never recorded; otherwise the round
-    last graded (stalest first). EXCEPTION: a never-graded entry whose
-    ``defer_after`` exceeds the newest recorded round sorts LAST
-    (rank 10**9) — it was registered mid-round and must not displace an
-    exactly-full planned window; the deferral expires by construction
-    the moment a CORRECTNESS file at or past ``defer_after`` lands, with
-    nothing to clean up (the round-boundary-red lesson of rounds 4/5)."""
+    last graded (stalest first)."""
     if last.get(qid, 0) <= _CHANGED_SINCE_GRADED.get(qid, -1):
         return -1
-    rank = last.get(qid, 0)
-    if rank == 0 and defer_after > newest:
-        return 10**9
-    return rank
+    return last.get(qid, 0)
 
 
 def _ordered() -> dict:
     registry = load_all()
     last = _last_graded_round()
-    newest = max(last.values(), default=0)
     # sorted() is stable → registry (insertion) order breaks ties within
     # each rank bucket; rank -1 (definition-changed pins) leads, then
-    # rank 0 (never-graded), then stalest-graded-first, with actively
-    # deferred new registrations last.
+    # rank 0 (never-graded), then stalest-graded-first.
     return dict(
-        sorted(
-            registry.items(),
-            key=lambda kv: _effective_rank(kv[0], last, kv[1].defer_after, newest),
-        )
+        sorted(registry.items(), key=lambda kv: _effective_rank(kv[0], last))
     )
 
 

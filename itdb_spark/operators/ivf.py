@@ -16,6 +16,16 @@ gate fully hash-checkable: the DuckDB oracle unrolls the same Lloyd's
 iterations in SQL (round 3) and reproduces every centroid and
 assignment bit-for-bit; recall vs brute force is additionally asserted
 in tests.
+
+Serving spine: every search head here is a short composition of the
+private stages ``_probe_cells`` (top-``n_probe`` cells per query),
+``_in_probed_cells`` (the static probed-cell IN-filter a persisted or
+chained index is read through), ``_score_in_cells`` (exact cosine of
+every candidate in the probed cells, optional allow-list) with its
+top-k (``_rerank_in_cells``) and range (``_range_in_cells``) finishes,
+and ``_top_n`` (the per-query ranking: score descending, id
+ascending). operators/pq.py builds its ADC heads on the same probe,
+restriction and ranking; operators/sq.py on the ranking.
 """
 
 from __future__ import annotations
@@ -54,31 +64,23 @@ def _cents_nested(centroids: DataFrame) -> DataFrame:
 
 
 def _assign(vectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:
-    """(id, vec, centroid_id): nearest centroid by cosine (the coarse
-    quantizer is k rows — always broadcastable).
+    """(id, vec, centroid_id): nearest centroid by cosine. The coarse
+    quantizer is k rows, always broadcastable, so the assignment is ONE
+    JVM projection per row: an argmax fold over the broadcast centroid
+    row. No k-way fan-out, no Python kernel and no corpus-scale
+    exchange for a decision each row can make alone (guide §2.3, §2.4,
+    §4.1).
 
-    r15: the whole assignment is ONE JVM projection per row — an
-    argmax fold over the broadcast centroid row. The previous shape
-    (kept as ``_assign_arrow``, the equivalence-test reference) fanned
-    every vector k ways through a crossJoin, scored the k·corpus rows
-    in an Arrow Python kernel, and collapsed them back with a
-    max_by groupBy — i.e. one JVM↔Python boundary crossing per
-    (vector, centroid) AND a corpus-scale exchange carrying the full
-    vec payload, for a decision each row can make alone (guide §2.3,
-    §2.4, §4.1; the r15 plan diff removes both ArrowEvalPython nodes
-    and the hashpartitioning(id) Exchange from every assignment pass).
-
-    Winner semantics replicate max_by over the (sim, -centroid_id)
-    struct exactly: array_max shares the interpreted struct ordering
-    (verified: NULL sim sorts first, so NULL sims lose and the all-NULL
-    zero-vector row falls to the smallest centroid id — the
-    cosine_pandas NaN crossed Arrow as NULL, try_divide yields the same
-    NULL, and an explicit isnan guard pins the NaN-input corner).
-    Cosine arithmetic is the same left-fold the DuckDB oracle replays;
-    it differs from the einsum kernel only in final-ulp summation
-    order, absorbed by the same assignment margins the driver-trainer
-    bit-identity gates rely on (tests/test_wave15.py gates old-vs-new
-    equality on the real corpus + zero-vector edges)."""
+    Winner semantics are those of max_by over the (sim, -centroid_id)
+    struct: array_max shares the interpreted struct ordering (a NULL
+    sim sorts first, so NULL sims lose and the all-NULL zero-vector row
+    falls to the smallest centroid id; try_divide yields NULL, and an
+    explicit isnan guard pins the NaN-input corner). Cosine arithmetic
+    is the same left fold the DuckDB oracle replays; it differs from
+    the einsum kernel only in final-ulp summation order, absorbed by the
+    assignment margins the driver-trainer bit-identity gates rely on.
+    tests/test_wave15.py gates equality with the crossJoin → Arrow
+    cosine → max_by form, zero-vector and exact-tie edges included."""
     from itdb_spark.functions.core import bind_once
     from itdb_spark.operators.similarity import dot_col
     from itdb_spark.plans.library import scan_parallelism_floor
@@ -109,37 +111,6 @@ def _assign(vectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:
         ).getField("cid"),
     )
     return joined.select(F.col(id_col), "vec", best.alias("centroid_id"))
-
-
-def _assign_arrow(vectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:
-    """Pre-r15 assignment (crossJoin k-fan → Arrow cosine kernel →
-    max_by groupBy) — kept as the equivalence-test reference for
-    ``_assign``; the argmax is a ``max_by`` aggregate over the
-    (sim, -centroid_id) struct, identical winner to the desc-sim/asc-id
-    window including exact ties and the all-NULL zero-vector row."""
-    from itdb_spark.plans.library import scan_parallelism_floor
-
-    vectors = scan_parallelism_floor(vectors)
-    scored = vectors.crossJoin(F.broadcast(centroids)).select(
-        F.col(id_col),
-        "vec",
-        F.col("centroid_id"),
-        cosine_pandas(F.col("vec"), F.col("cvec")).alias("sim"),
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct("vec", "centroid_id"),
-                F.struct(F.col("sim"), (-F.col("centroid_id")).alias("nid")),
-            ).alias("w")
-        )
-        .select(
-            id_col,
-            F.col("w.vec").alias("vec"),
-            F.col("w.centroid_id").alias("centroid_id"),
-        )
-    )
 
 
 def build_ivf_index(
@@ -264,6 +235,20 @@ def ivf_search(
     return _rerank_in_cells(probed, assignments, id_col, k, allowed)
 
 
+def _top_n(df: DataFrame, n: int, score: str, tie: str = "neighbor_id") -> DataFrame:
+    """The ``n`` best rows of ``df`` per ``query_id``: ``score``
+    descending, then ``tie`` ascending — the full tie-break every
+    probe, candidate cut and final top-k needs for its DuckDB oracle to
+    replay it. The rank filter lets Spark prune each group before the
+    window's exchange (WindowGroupLimit)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(tie))
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= n)
+        .drop("_rn")
+    )
+
+
 def _probe_cells(
     queries: DataFrame,
     centroids: DataFrame,
@@ -272,11 +257,12 @@ def _probe_cells(
     n_probe: int,
 ) -> DataFrame:
     """(query_id, qvec, centroid_id): the top-``n_probe`` cells per query
-    by coarse-quantizer cosine — the probe half shared by the in-session
-    search (ivf_search) and the persisted-index search
-    (ivf_search_persisted). r15: scored by the JVM ``cosine_fold``
-    (the _probe_cells_scored rationale: a queries×k grid cannot
-    amortize an Arrow boundary; NULL semantics identical)."""
+    by coarse-quantizer cosine, centroid-id tie-break — the one probe of
+    every IVF and IVF-PQ head. Scored by the JVM ``cosine_fold``: a
+    queries×k grid is far too small to amortize an Arrow kernel's
+    boundary and worker start, and the probe often runs inside a
+    broadcast build on the critical path. A NULL sim (a dead query or
+    centroid) sorts last."""
     from itdb_spark.operators.similarity import cosine_fold
 
     q = queries.select(
@@ -287,11 +273,54 @@ def _probe_cells(
         "query_id", "qvec", "centroid_id",
         cosine_fold(F.col("qvec"), F.col("cvec")).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    return (
-        cell_scores.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "qvec", "centroid_id")
+    return _top_n(cell_scores, n_probe, "sim", "centroid_id").select(
+        "query_id", "qvec", "centroid_id"
+    )
+
+
+def _in_probed_cells(index: DataFrame, probed: DataFrame) -> DataFrame:
+    """The rows of a cell-partitioned ``index`` read back from disk that
+    lie in a probed cell. The distinct probed cell ids are collected to
+    the driver (bounded by the CELL COUNT, never the corpus: distinct
+    probed cells ≤ min(n_cells, |queries| × n_probe)) and applied as a
+    STATIC IN-filter, so pruning is decided at plan time: the scan's
+    PartitionFilters keep every unprobed cell's files unread, also
+    through a versioned chain's union. The global probed-cell superset
+    is re-restricted per query by the centroid_id equi-join downstream.
+    Partition-directory values read back as int; the join key and every
+    consumer expect the trainer's long."""
+    cells = sorted(
+        int(r.centroid_id)
+        for r in probed.select("centroid_id").distinct().collect()
+    )
+    return index.where(F.col("centroid_id").isin(cells)).withColumn(
+        "centroid_id", F.col("centroid_id").cast("long")
+    )
+
+
+def _score_in_cells(
+    probed: DataFrame,
+    assignments: DataFrame,
+    id_col: str,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """(query_id, neighbor_id, cos_raw): every candidate in its query's
+    probed cells except the query itself, scored by exact cosine. The
+    optional ``allowed`` semi-join runs BEFORE any cosine (see ivf_knn),
+    so filtered-out candidates cost no scoring work."""
+    cands = probed.join(assignments, "centroid_id").where(
+        F.col("query_id") != F.col(id_col)
+    )
+    if allowed is not None:
+        cands = cands.join(
+            allowed.select(F.col(allowed.columns[0]).alias(id_col)),
+            id_col,
+            "left_semi",
+        )
+    return cands.select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        cosine_pandas(F.col("qvec"), F.col("vec")).alias("cos_raw"),
     )
 
 
@@ -302,27 +331,21 @@ def _rerank_in_cells(
     k: int,
     allowed: DataFrame | None,
 ) -> DataFrame:
-    """Join probed cells to the assignment table, optional allow-list
-    semi-join, exact cosine rerank to top-``k`` — the scoring half
-    shared by ivf_search and ivf_search_persisted."""
-    cands = probed.join(assignments, "centroid_id").where(
-        F.col("query_id") != F.col(id_col)
+    """(query_id, neighbor_id, cosine): the top-``k`` finish."""
+    scored = _score_in_cells(probed, assignments, id_col, allowed)
+    return _top_n(scored, k, "cos_raw").select(
+        "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine")
     )
-    if allowed is not None:
-        cands = cands.join(
-            allowed.select(F.col(allowed.columns[0]).alias(id_col)),
-            id_col,
-            "left_semi",
-        )
-    scored = cands.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        cosine_pandas(F.col("qvec"), F.col("vec")).alias("cos_raw"),
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
+
+
+def _range_in_cells(
+    probed: DataFrame, assignments: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine): the range finish — every scored
+    candidate at cosine >= ``threshold``."""
     return (
-        scored.withColumn("rn", F.row_number().over(wk))
-        .where(F.col("rn") <= k)
+        _score_in_cells(probed, assignments, id_col)
+        .where(F.col("cos_raw") >= threshold)
         .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"))
     )
 
@@ -364,30 +387,15 @@ def ivf_search_persisted(
     queries rebuild per call because the grading harness is stateless;
     a deployed index is built once and served many times from disk).
 
-    The probed cell ids are collected to the driver (bounded by the
-    CELL COUNT, never the corpus — an IVF index has thousands of cells
-    at 100 TB, and distinct probed cells ≤ min(n_cells, |queries| ×
-    n_probe)) and applied as a STATIC IN-filter on the partitioned
-    scan, so pruning is decided at plan time: the scan's
-    PartitionFilters keep every unprobed cell's files unread
+    The assignment scan is read through ``_in_probed_cells``, so only
+    probed cells' files are read
     (tests/test_ivf_merge.py::test_ivf_persisted_search_prunes_partitions
     asserts both the plan and the file set). Results are bit-identical
     to ivf_search over the in-memory index: parquet round-trips doubles
-    exactly, and the global probed-cell superset read is re-restricted
-    per query by the same centroid_id equi-join."""
+    exactly."""
     centroids = _read_pinned(spark, f"{path}/centroids")
     probed = _probe_cells(queries, centroids, id_col, vec_col, n_probe)
-    cells = sorted(
-        int(r.centroid_id)
-        for r in probed.select("centroid_id").distinct().collect()
-    )
-    idx = (
-        _read_pinned(spark, f"{path}/assignments")
-        .where(F.col("centroid_id").isin(cells))
-        # partition-directory values read back as int; the join key and
-        # every consumer expect the trainer's long
-        .withColumn("centroid_id", F.col("centroid_id").cast("long"))
-    )
+    idx = _in_probed_cells(_read_pinned(spark, f"{path}/assignments"), probed)
     return _rerank_in_cells(probed, idx, id_col, k, allowed)
 
 
@@ -468,9 +476,8 @@ def ivf_search_chain(
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """``ivf_search_persisted`` against a ``persist_ivf_index_versioned``
-    chain — the serving path BETWEEN streaming refreshes: the probed
-    cell ids (collected driver-side, bounded by the CELL count) become
-    a static IN filter that Catalyst pushes through the chain's union
+    chain — the serving path BETWEEN streaming refreshes: the
+    ``_in_probed_cells`` IN filter is pushed through the chain's union
     into every version dir's partition filters, so each request reads
     only its probed cells' files in every chain link; snapshot
     isolation pins the probe to the chain resolved at entry even while
@@ -481,15 +488,7 @@ def ivf_search_chain(
 
     centroids = _read_pinned(spark, f"{root}/centroids")
     probed = _probe_cells(queries, centroids, id_col, vec_col, n_probe)
-    cells = sorted(
-        int(r.centroid_id)
-        for r in probed.select("centroid_id").distinct().collect()
-    )
-    idx = (
-        read_current_chain(spark, f"{root}/assignments")
-        .where(F.col("centroid_id").isin(cells))
-        .withColumn("centroid_id", F.col("centroid_id").cast("long"))
-    )
+    idx = _in_probed_cells(read_current_chain(spark, f"{root}/assignments"), probed)
     return _rerank_in_cells(probed, idx, id_col, k, allowed)
 
 
@@ -630,20 +629,7 @@ def ivf_range_search(
     ivf_search), so the oracle replays it exactly; recall vs the brute
     range is the audited quantity, not an assumption."""
     probed = _probe_cells(queries, centroids, id_col, vec_col, n_probe)
-    cands = probed.join(assignments, "centroid_id").where(
-        F.col("query_id") != F.col(id_col)
-    )
-    return (
-        cands.select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine_pandas(F.col("qvec"), F.col("vec")).alias("cos_raw"),
-        )
-        .where(F.col("cos_raw") >= threshold)
-        .select(
-            "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine")
-        )
-    )
+    return _range_in_cells(probed, assignments, id_col, threshold)
 
 
 def ivf_range_search_persisted(
@@ -655,34 +641,12 @@ def ivf_range_search_persisted(
     threshold: float = 0.25,
     n_probe: int = 3,
 ) -> DataFrame:
-    """``ivf_range_search`` against a ``persist_ivf_index`` layout —
-    the probed cell ids collect to the driver (bounded by the CELL
-    count) and become a static IN-filter on the cell-partitioned scan,
-    so unprobed cells' FILES are never read (the exact
-    ivf_search_persisted discipline, radius form). Bit-identical to the
-    in-memory form: parquet round-trips doubles exactly."""
+    """``ivf_range_search`` against a ``persist_ivf_index`` layout,
+    read through ``_in_probed_cells`` so unprobed cells' FILES are never
+    read (the ivf_search_persisted discipline, radius form).
+    Bit-identical to the in-memory form: parquet round-trips doubles
+    exactly."""
     centroids = _read_pinned(spark, f"{path}/centroids")
     probed = _probe_cells(queries, centroids, id_col, vec_col, n_probe)
-    cells = sorted(
-        int(r.centroid_id)
-        for r in probed.select("centroid_id").distinct().collect()
-    )
-    idx = (
-        _read_pinned(spark, f"{path}/assignments")
-        .where(F.col("centroid_id").isin(cells))
-        .withColumn("centroid_id", F.col("centroid_id").cast("long"))
-    )
-    cands = probed.join(idx, "centroid_id").where(
-        F.col("query_id") != F.col(id_col)
-    )
-    return (
-        cands.select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine_pandas(F.col("qvec"), F.col("vec")).alias("cos_raw"),
-        )
-        .where(F.col("cos_raw") >= threshold)
-        .select(
-            "query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine")
-        )
-    )
+    idx = _in_probed_cells(_read_pinned(spark, f"{path}/assignments"), probed)
+    return _range_in_cells(probed, idx, id_col, threshold)

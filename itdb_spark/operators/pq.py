@@ -36,6 +36,14 @@ codes per subspace are the k subvectors with the smallest portable hash
 of the owning id; assignment ties break by code id — same discipline as
 IVF, so a DuckDB oracle can unroll the iterations if/when the query
 registers.
+
+The IVF-PQ heads (raw and residual, in-session and persisted) share one
+serving spine: operators/ivf.py's probe (``_probe_cells``), probed-cell
+restriction (``_in_probed_cells``) and per-query ranking (``_top_n``),
+then ``_adc_stages`` here (optional residual base term → ADC over the
+probed cells' codes → candidate cut → exact ``pq_rerank``). Their
+training goes through ``_coarse_quantizer`` and, for the numpy deploy
+backend, ``_train_pq_driver``.
 """
 
 from __future__ import annotations
@@ -46,6 +54,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from itdb_spark.functions.core import bind_once, hash_ranked_sample, portable_hash64
+from itdb_spark.operators.ivf import (
+    _assign as _ivf_assign,
+    _in_probed_cells,
+    _probe_cells,
+    _top_n,
+    build_ivf_index,
+)
 from itdb_spark.plans.library import invalidate_pinned_schemas, model_df
 from itdb_spark.plans.library import read_parquet_pinned as _read_pinned
 from itdb_spark.plans.library import truncate_lineage
@@ -354,31 +369,28 @@ def pq_encode(
     index layout — instead of re-attaching cells by an id-keyed join of
     two corpus-scale frames).
 
-    r15: encoding is ONE narrow projection over the input. The codebook
-    is model-sized by construction (m·k rows — FAISS holds it in cache
-    on every search node), so it folds to a one-row nested frame
+    Encoding is ONE narrow projection over the input. The codebook is
+    model-sized by construction (m·k rows — FAISS holds it in cache on
+    every search node), so it folds to a one-row nested frame
     (``_cb_nested``) attached by a constant-key BROADCAST hash join;
     each row's m argmins then run as a JVM fold with byte-identical
-    arithmetic to the join form (same ``_l2sq`` left fold, same
-    min-over-(d, code) tie-break — array_min and min_by share the
-    interpreted struct ordering; gated in tests/test_wave15.py). This
-    removes, per corpus pass: the m-way explode (m× the rows), the
-    k-fanned scoring rows, and the groupBy(id) exchange that
-    reassembled the code arrays — encode now pipelines inside the scan
-    stage with NO shuffle at any scale (guide §2.3/§2.4; measured r15:
-    see OPTIMIZATION_r15.md). ``m`` avoids a per-call countDistinct
-    driver job when the caller already knows it (every composed
-    pipeline does). The pre-r15 form is kept as ``_pq_encode_join``
-    (the equivalence-test reference)."""
+    arithmetic to the explode → codebook join → min_by → groupBy(id)
+    form (same ``_l2sq`` left fold, same min-over-(d, code) tie-break —
+    array_min and min_by share the interpreted struct ordering; that
+    form is the reference tests/test_wave15.py compares against). No
+    m-way explode, no k-fanned scoring rows and no groupBy(id)
+    exchange: encode pipelines inside the scan stage with NO shuffle at
+    any scale (guide §2.3/§2.4; measured in OPTIMIZATION_r15.md). ``m``
+    avoids a per-call countDistinct driver job when the caller already
+    knows it (every composed pipeline does)."""
     if m is None:
         m = int(codebooks.agg(F.countDistinct("sub").alias("m")).first()["m"])
     if dim is None:
         dim = _probe_dim(vectors, vec_col)
     sd = dim // m
     # the per-row m·k·sd argmin fold is real CPU that would pin to a
-    # single-row-group bench scan's ONE task (r14 profile) — same
-    # conditional floor as the join form, self-disabling at scale and
-    # a no-op for already-shuffled inputs
+    # single-row-group scan's ONE task — a conditional floor,
+    # self-disabling at scale and a no-op for already-shuffled inputs
     from itdb_spark.plans.library import scan_parallelism_floor
 
     vectors = scan_parallelism_floor(vectors)
@@ -393,9 +405,9 @@ def pq_encode(
     )
     cbrow = _cb_nested(codebooks).withColumn("_cbk", F.lit(1))
     joined = src.withColumn("_cbk", F.lit(1)).join(F.broadcast(cbrow), "_cbk")
-    # per sub: bind the svec slice once (bind_once — the r14 HOF
+    # per sub: bind the svec slice once (bind_once — the HOF
     # re-evaluation hazard), then argmin over the sub's entries by the
-    # exact (d, code) struct order the join form's min_by used
+    # (d, code) struct order
     codes = F.transform(
         F.col("cb"),
         lambda e: bind_once(
@@ -414,47 +426,6 @@ def pq_encode(
     return joined.select("id", codes.alias("codes"), *carry)
 
 
-def _pq_encode_join(
-    vectors: DataFrame,
-    codebooks: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    normalize: bool,
-    m: int,
-) -> DataFrame:
-    """The pre-r15 join-form encode (explode → broadcast codebook join →
-    min_by → groupBy(id) reassembly) — the general-codebook fallback and
-    the equivalence-test reference for the literal-expression form."""
-    # the encode pipeline (per-row interpreted normalize fold -> m-way
-    # explode -> broadcast codebook join -> per-row interpreted _l2sq
-    # fold -> map-side min_by) pipelines entirely onto the scan's
-    # tasks; a single-row-group bench input pins all of it to ONE task
-    # (r14 profile: a 2.1 s single-task stage while 31 cores idle).
-    # Floor BEFORE _normalize so its HOF fold parallelizes too.
-    # Conditional, self-disabling at scale — see scan_parallelism_floor.
-    from itdb_spark.plans.library import scan_parallelism_floor
-
-    vectors = scan_parallelism_floor(vectors)
-    src = (
-        _normalize(vectors, id_col, vec_col)
-        if normalize
-        else vectors.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-    )
-    subvecs = _subvectors(src, m, dim // m)
-    return (
-        _assign(subvecs, codebooks)
-        .groupBy("id")
-        .agg(F.array_sort(F.collect_list(F.struct("sub", "code"))).alias("sc"))
-        .select(
-            "id", F.transform("sc", lambda s: s.getField("code")).alias("codes")
-        )
-    )
-
-
 def pq_search(
     encoded: DataFrame,
     queries: DataFrame,
@@ -469,7 +440,7 @@ def pq_search(
     per (query, vector) as a HOF fold of m code-keyed table lookups over
     the code array. One corpus scan; the only exchange is the per-query
     top-k window (WindowGroupLimit pre-prunes). ``m`` skips the
-    countDistinct driver job when the caller knows it (r15)."""
+    countDistinct driver job when the caller knows it."""
     if m is None:
         m = codebooks.agg(F.countDistinct("sub").alias("m")).first()["m"]
     if dim is None:
@@ -482,13 +453,8 @@ def pq_search(
         F.col("id").alias("neighbor_id"),
         _adc_score(m),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= top_k)
-        .select("query_id", "neighbor_id", "adc_score")
+    return _top_n(scored, top_k, "adc_score").select(
+        "query_id", "neighbor_id", "adc_score"
     )
 
 
@@ -526,12 +492,7 @@ def pq_rerank(
             F.round(cosine_pandas(F.col("qvec"), F.col("nvec")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= top_k)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return _top_n(exact, top_k, "cosine").select("query_id", "neighbor_id", "cosine")
 
 
 def pq_norm_cte(name: str = "pqv") -> str:
@@ -690,93 +651,73 @@ def pq_oracle_sql(
       FROM pqscored) WHERE rn <= {top_k}""")
 
 
-def _train_ivfpq_driver(
+def _coarse_quantizer(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
     n_cells: int,
-    m: int,
-    k: int,
-    max_train: int,
-    dim: int,
-    ivf_iters: int = 4,
-    pq_iters: int = 3,
+    max_train: int | None,
+    train_backend: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """FAISS-shaped deploy training: collect the bounded hash-ranked
-    sample ONCE to the driver, run both Lloyd's loops in numpy, and
-    return (centroids, codebooks) as small broadcastable DataFrames.
+    """(assignments, centroids): the IVF half of every IVF-PQ index, from
+    either training backend. ``spark`` runs build_ivf_index's
+    distributed Lloyd's. ``driver`` is FAISS-shaped deploy training: the
+    bounded hash-ranked sample is collected ONCE and Lloyd's runs in
+    numpy (``_ivf_lloyd_np``); the corpus assignment stays distributed,
+    so only training is sampled.
 
     At 100 TB this is the industry pattern (train the quantizer on a
-    bounded sample driver-side, broadcast the index; only encoding and
-    search stay distributed): the distributed Lloyd's loop pays
-    ~(ivf_iters + pq_iters) full job rounds of scheduling latency to
-    iterate over a sample that by construction fits one machine. The
-    collect is bounded by ``max_train`` — REQUIRED, never corpus-sized —
-    so this is not a driver-side-loop antipattern but the deliberate
-    small-side materialization the manifest-DF sinks also use.
-
-    Replicates the distributed algorithms exactly: same smallest-hash
-    init (ids hash-ranked by the same md5-prefix portable hash), same
-    assignment rules (IVF: cosine desc / centroid-id asc; PQ: L2 asc /
-    code asc — numpy argmax/argmin break ties on the first index, which
-    IS the lowest id), same mean updates, same IVF empty-cell drop and
-    PQ empty-cluster retention. float64 throughout, so results differ
-    from the distributed trainer only in final-ulp summation order —
-    absorbed by the same margins the DuckDB differential relies on
-    (test_pq_assignment_margin). Sampling populations mirror the
-    distributed twins EXACTLY (ADVICE r7): the IVF sample is drawn from
-    the raw vectors (build_ivf_index samples before any norm filter —
-    zero vectors go NaN-sim and land deterministically), while the PQ
-    sample is drawn from the zero-norm-filtered population (train_pq
-    samples after ``_normalize`` drops dead embeddings), so the
-    bit-identity contract holds even when dead embeddings sit inside
-    the smallest-hash window."""
-    import numpy as np
-
-    spark = vectors.sparkSession
+    bounded sample driver-side, broadcast the index): the distributed
+    loop pays a job round of scheduling latency per iteration over a
+    sample that by construction fits one machine. The collect is
+    bounded by ``max_train`` — REQUIRED, never corpus-sized — so this is
+    the deliberate small-side materialization the manifest-DF sinks
+    also use, not a driver-side-loop antipattern. The sample is drawn
+    from the raw vectors, exactly the population build_ivf_index
+    samples (before any norm filter: zero vectors go NaN-sim and land
+    deterministically)."""
+    if train_backend not in ("spark", "driver"):
+        raise ValueError(f"train_backend must be spark|driver, got {train_backend!r}")
+    if train_backend == "spark":
+        return build_ivf_index(vectors, id_col, vec_col, k=n_cells, max_train=max_train)
+    if max_train is None:
+        raise ValueError(
+            "train_backend='driver' requires max_train (the collected "
+            "sample must be bounded)"
+        )
     v = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec")
     )
-    rows = hash_ranked_sample(v, "id", max_train).collect()
-    X = np.asarray([r.vec for r in rows], dtype=np.float64)
-    # PQ population: same bounded window over the zero-norm-filtered
-    # frame (second bounded collect — cheap, and the only way the two
-    # backends sample identical populations when dead embeddings exist)
-    sqnorm = F.aggregate(F.col("vec"), F.lit(0.0), lambda a, x: a + x * x)
-    pq_rows = hash_ranked_sample(v.where(sqnorm > 0.0), "id", max_train).collect()
-    Xpq = np.asarray([r.vec for r in pq_rows], dtype=np.float64)
-
-    # IVF coarse quantizer: cosine assignment, per-dimension mean update,
-    # empty cells drop (mirrors ivf.build_ivf_index)
-    cent_ids, cents = _ivf_lloyd_np(X, n_cells, ivf_iters)
+    cent_ids, cents = _ivf_lloyd_np(_hash_sample_np(v, id_col, max_train), n_cells)
     centroids = model_df(
-        spark,
+        vectors.sparkSession,
         [(int(i), [float(x) for x in c]) for i, c in zip(cent_ids, cents)],
         "centroid_id long, cvec array<double>",
     )
+    return _ivf_assign(v, centroids, id_col), centroids
 
-    # PQ codebooks: normalized subvectors, L2 assignment, empty-cluster
-    # retention (mirrors train_pq). ``n_codes`` can be < k when the
-    # bounded sample holds fewer than k live vectors — the distributed
-    # trainer's limit(k) yields fewer codes in exactly the same way
-    # (ADVICE r7: indexing range(k) here raised IndexError instead).
-    pq_norms = np.linalg.norm(Xpq, axis=1)
-    Xn = Xpq / pq_norms[:, None]
-    sub_dim = dim // m
-    books = _pq_lloyd_np(Xn.reshape(len(Xn), m, sub_dim), k, pq_iters)
-    return centroids, _codebooks_df(spark, books)
+
+def _hash_sample_np(frame: DataFrame, id_col: str, max_train: int):
+    """The ``max_train`` rows of ``frame`` with the smallest id hash,
+    collected in hash-rank order as one float64 matrix of their ``vec``
+    — the order the numpy trainers' first-k inits rely on."""
+    import numpy as np
+
+    rows = hash_ranked_sample(frame, id_col, max_train).collect()
+    return np.asarray([r.vec for r in rows], dtype=np.float64)
 
 
 def _ivf_lloyd_np(X, n_cells: int, ivf_iters: int = 4):
-    """numpy IVF Lloyd's over a hash-rank-ordered sample — shared by the
-    raw (_train_ivfpq_driver) and residual (ivfpq_residual_search
-    train_backend="driver") deploy trainers. Returns (cent_ids, cents).
+    """numpy IVF Lloyd's over a hash-rank-ordered sample. Returns
+    (cent_ids, cents).
 
     Replicates ivf.build_ivf_index exactly: smallest-hash init (X is in
     hash-rank order), cosine assignment with desc-sim / asc-id
     tie-break (argmax takes the first index), per-dimension mean
-    update, empty cells drop."""
+    update, empty cells drop. float64 throughout, so results differ
+    from the distributed trainer only in final-ulp summation order —
+    absorbed by the same margins the DuckDB differential relies on
+    (test_pq_assignment_margin)."""
     import numpy as np
 
     cents = X[:n_cells].copy()
@@ -787,13 +728,12 @@ def _ivf_lloyd_np(X, n_cells: int, ivf_iters: int = 4):
         with np.errstate(invalid="ignore", divide="ignore"):
             sims = (X @ cents.T) / (xn[:, None] * cn[None, :])
         # NaN sims (zero vector or zero centroid) LOSE on the Spark side:
-        # cosine_pandas NaN crosses Arrow as NULL, and max_by's
-        # (sim, -cid) struct sorts a NULL field smallest — while numpy's
-        # argmax propagates NaN as the maximum. Map NaN → -inf so a dead
-        # centroid never captures live vectors; an all-NaN (dead-vector)
-        # row argmaxes to index 0 = the smallest centroid id, exactly the
-        # all-NULL tie-break max_by resolves (ADVICE r7 follow-through —
-        # caught by test_ivfpq_driver_trainer_dead_embedding_in_window).
+        # a NULL sim sorts smallest in _assign's (sim, -cid) struct
+        # argmax — while numpy's argmax propagates NaN as the maximum.
+        # Map NaN → -inf so a dead centroid never captures live vectors;
+        # an all-NaN (dead-vector) row argmaxes to index 0 = the smallest
+        # centroid id, exactly the all-NULL tie-break Spark resolves
+        # (test_ivfpq_driver_trainer_dead_embedding_in_window).
         sims = np.where(np.isnan(sims), -np.inf, sims)
         assign = np.argmax(sims, axis=1)
         keep_c, keep_i = [], []
@@ -806,18 +746,35 @@ def _ivf_lloyd_np(X, n_cells: int, ivf_iters: int = 4):
     return cent_ids, cents
 
 
-def _pq_lloyd_np(S, k: int, pq_iters: int = 3):
-    """numpy PQ Lloyd's over (n, m, sub_dim) training subvectors in
-    hash-rank order — shared by the raw and residual deploy trainers.
+def _train_pq_driver(
+    sample: DataFrame,
+    m: int,
+    k: int,
+    dim: int,
+    max_train: int,
+    normalize: bool,
+) -> DataFrame:
+    """Codebooks (sub, code, cvec) from numpy PQ Lloyd's over the bounded
+    hash-ranked sample of ``sample`` (id, vec) — train_pq's deploy twin.
+    ``normalize`` divides each sampled row by its norm first (the raw
+    variant, whose caller passes the zero-norm-filtered vectors: the
+    population train_pq samples after ``_normalize`` drops dead
+    embeddings); residuals train as-is.
+
     Replicates train_pq exactly: first-k init per subspace, L2-asc /
     code-asc assignment (argmin takes the first index), empty-cluster
-    retention. Returns the (m, n_codes, sub_dim) codebook array."""
+    retention. ``n_codes`` can be < k when the sample holds fewer than k
+    live vectors — the distributed trainer's limit(k) yields fewer
+    codes in exactly the same way."""
     import numpy as np
 
-    m = S.shape[1]
+    X = _hash_sample_np(sample, "id", max_train)
+    if normalize:
+        X = X / np.linalg.norm(X, axis=1)[:, None]
+    S = X.reshape(len(X), m, dim // m)
     books = np.stack([S[:k, s, :].copy() for s in range(m)])  # (m, ≤k, sub)
     n_codes = books.shape[1]
-    for _ in range(pq_iters):
+    for _ in range(3):  # train_pq's default iters
         new_books = books.copy()  # retention: empty codes keep centroids
         for s in range(m):
             d = ((S[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
@@ -827,13 +784,8 @@ def _pq_lloyd_np(S, k: int, pq_iters: int = 3):
                 if len(mem):
                     new_books[s, code] = mem.mean(axis=0)
         books = new_books
-    return books
-
-
-def _codebooks_df(spark: SparkSession, books) -> DataFrame:
-    m, n_codes = books.shape[0], books.shape[1]
     return model_df(
-        spark,
+        sample.sparkSession,
         [
             (s, c, [float(x) for x in books[s, c]])
             for s in range(m)
@@ -843,37 +795,26 @@ def _codebooks_df(spark: SparkSession, books) -> DataFrame:
     )
 
 
-def _probe_cells_scored(
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_probe: int,
+def _normalized_cells(
+    vectors: DataFrame, assignments: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(query_id, centroid_id, sim): top-``n_probe`` cells per query by
-    raw cosine with centroid-id tie-break — the probe stage shared by
-    ivfpq_search (which drops sim) and ivfpq_residual_search (where sim
-    IS the coarse base term dot(q̂, ĉ) of every residual ADC score).
-    r15: scored by the JVM ``cosine_fold`` — a queries×k grid is far
-    too small to amortize an Arrow kernel's boundary + worker spin-up,
-    and the probe often executes inside a broadcast build on the
-    critical path; NULL semantics identical (desc sort keeps NULLS
-    LAST, so dead queries probe nothing on both forms)."""
-    from itdb_spark.operators.similarity import cosine_fold
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-    )
-    cell_scores = q.crossJoin(F.broadcast(centroids)).select(
-        "query_id", "centroid_id",
-        cosine_fold(F.col("qvec"), F.col("cvec")).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    return (
-        cell_scores.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "centroid_id", "sim")
+    """(id, vec, centroid_id): the normalized live vectors with their
+    cell. When ``assignments`` still carries its ``vec`` column (the
+    ``_assign`` output contract — the same raw vector per id that
+    ``vectors`` holds, 1:1 on id), the cell label is already on the row
+    and an id-equi-join against ``vectors`` would be a corpus-scale
+    exchange for nothing, so the assignment frame is normalized
+    directly. Assignment frames read back WITHOUT the vector payload (a
+    persisted code-table shape) take the join."""
+    if "vec" in assignments.columns:
+        return _normalize(
+            assignments.select(
+                F.col(id_col), F.col("vec").alias(vec_col), "centroid_id"
+            ),
+            id_col, vec_col, extra=("centroid_id",),
+        )
+    return _normalize(vectors, id_col, vec_col).join(
+        assignments.select(F.col(id_col).alias("id"), "centroid_id"), "id"
     )
 
 
@@ -895,29 +836,12 @@ def ivf_anchor_means(
     variant's. Caught by test_ivfpq_residual_recall_not_worse.)
 
     Dead (zero-norm) embeddings drop with the normalized corpus before
-    the mean, so every cell with at least one live member has a
-    well-defined anchor and no division occurs at all.
-
-    r15: when ``assignments`` still carries its ``vec`` column (the
-    ``_assign`` output contract — the same raw vector per id that
-    ``vectors`` holds, 1:1 on id), the cell label is already on the row
-    and the corpus-scale id-equi-join against ``vectors`` is pure cost:
-    normalize the assignment frame directly. Assignment frames read
-    back WITHOUT the vector payload (a persisted code-table shape) keep
-    the join path."""
-    if "vec" in assignments.columns:
-        xnc = _normalize(
-            assignments.select(
-                F.col(id_col), F.col("vec").alias(vec_col), "centroid_id"
-            ),
-            id_col, vec_col, extra=("centroid_id",),
-        )
-    else:
-        xnc = _normalize(vectors, id_col, vec_col).join(
-            assignments.select(F.col(id_col).alias("id"), "centroid_id"), "id"
-        )
+    the mean (``_normalized_cells``), so every cell with at least one
+    live member has a well-defined anchor and no division occurs at
+    all."""
     return (
-        xnc.select("centroid_id", F.posexplode("vec").alias("pos", "val"))
+        _normalized_cells(vectors, assignments, id_col, vec_col)
+        .select("centroid_id", F.posexplode("vec").alias("pos", "val"))
         .groupBy("centroid_id", "pos")
         .agg(F.avg("val").alias("m"))
         .groupBy("centroid_id")
@@ -946,24 +870,11 @@ def ivf_residuals(
     (Jégou et al. 2011 §III; better recall at the same code budget).
 
     ``carry_cell=True`` keeps ``centroid_id`` on the output so the
-    caller can encode and cell-attach in one projection. r15: same
-    assignments-direct fast path as ivf_anchor_means (the _assign
-    output carries the raw vec per id, so the id-equi-join against
-    ``vectors`` added nothing but a corpus-scale exchange)."""
-    if "vec" in assignments.columns:
-        xnc = _normalize(
-            assignments.select(
-                F.col(id_col), F.col("vec").alias(vec_col), "centroid_id"
-            ),
-            id_col, vec_col, extra=("centroid_id",),
-        )
-    else:
-        xnc = _normalize(vectors, id_col, vec_col).join(
-            assignments.select(F.col(id_col).alias("id"), "centroid_id"), "id"
-        )
+    caller can encode and cell-attach in one projection."""
     out_cols = ["id"] + (["centroid_id"] if carry_cell else [])
     return (
-        xnc.join(F.broadcast(anchors), "centroid_id")
+        _normalized_cells(vectors, assignments, id_col, vec_col)
+        .join(F.broadcast(anchors), "centroid_id")
         .select(
             *out_cols,
             F.zip_with("vec", "csvec", lambda a, b: a - b).alias("vec"),
@@ -986,77 +897,31 @@ def build_ivfpq_res_index(
     (id, centroid_id, codes) — residual PQ codes co-located with their
     cell, the frame persist_ivfpq_res_index writes partitionBy(cell).
 
-    ``train_backend="driver"`` (requires max_train) is the same FAISS
-    deployment lever ivfpq_search grew in round 7: BOTH iterative
-    Lloyd's loops run in numpy over the one collected hash-ranked
-    sample (_ivf_lloyd_np on raw vectors for the coarse quantizer,
-    _pq_lloyd_np on the RESIDUAL sample for the codebooks — the
+    ``train_backend="driver"`` (requires max_train) is the FAISS
+    deployment lever ivfpq_search also has: BOTH iterative Lloyd's
+    loops run in numpy over a collected hash-ranked sample
+    (``_coarse_quantizer`` on raw vectors for the coarse quantizer,
+    ``_train_pq_driver`` on the RESIDUAL sample for the codebooks — the
     residual twist: the PQ sample is drawn from ivf_residuals, the
-    exact population train_pq(normalize=False) samples). The NON-
-    iterative stages stay distributed in both backends: corpus
-    assignment (one broadcast join), anchor means (one groupBy pass),
-    residual construction, and encoding — only training is sampled,
-    exactly the raw variant's contract. Bit-identity with the
-    distributed trainer is gated in
+    exact population train_pq(normalize=False) samples; no zero-drop —
+    a zero residual is legitimate training data). The NON-iterative
+    stages stay distributed in both backends: corpus assignment (one
+    broadcast join), anchor means (one groupBy pass), residual
+    construction, and encoding — only training is sampled. Bit-identity
+    with the distributed trainer is gated in
     tests/test_ivf_merge.py::test_ivfpq_res_train_backends_bit_identical."""
-    from itdb_spark.operators.ivf import build_ivf_index
-
-    if train_backend not in ("spark", "driver"):
-        raise ValueError(
-            f"train_backend must be spark|driver, got {train_backend!r}"
-        )
-    if train_backend == "driver" and max_train is None:
-        raise ValueError(
-            "train_backend='driver' requires max_train (the collected "
-            "sample must be bounded)"
-        )
     dim = _probe_dim(vectors, vec_col)
-    if train_backend == "driver":
-        import numpy as np
-
-        from itdb_spark.operators.ivf import _assign as _ivf_assign
-
-        spark = vectors.sparkSession
-        v = vectors.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        rows = hash_ranked_sample(v, "id", max_train).collect()
-        X = np.asarray([r.vec for r in rows], dtype=np.float64)
-        cent_ids, cents = _ivf_lloyd_np(X, n_cells)
-        centroids = model_df(
-            spark,
-            [(int(i), [float(x) for x in c]) for i, c in zip(cent_ids, cents)],
-            "centroid_id long, cvec array<double>",
-        )
-        vv = vectors.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec")
-        )
-        assignments = _ivf_assign(vv, centroids, id_col)
-    else:
-        assignments, centroids = build_ivf_index(
-            vectors, id_col, vec_col, k=n_cells, max_train=max_train
-        )
+    assignments, centroids = _coarse_quantizer(
+        vectors, id_col, vec_col, n_cells, max_train, train_backend
+    )
     anchors = ivf_anchor_means(vectors, assignments, id_col, vec_col)
     # carry the cell through the residual so encoding attaches it in
-    # the same projection (r15) — the old shape re-joined assignments
-    # on id after encoding, one corpus-scale exchange for a column the
-    # residual row already knew
+    # the same projection, not by an id-join of two corpus-scale frames
     resid = ivf_residuals(
         vectors, assignments, anchors, id_col, vec_col, carry_cell=True
     )
     if train_backend == "driver":
-        import numpy as np
-
-        # bounded sample of RESIDUALS — the same population
-        # train_pq(normalize=False, max_train) draws (residuals exist
-        # only for live members; no zero-drop — a zero residual is
-        # legitimate training data), collected in hash-rank order so
-        # _pq_lloyd_np's first-k init matches the distributed window
-        prows = hash_ranked_sample(resid, "id", max_train).collect()
-        R = np.asarray([r.vec for r in prows], dtype=np.float64)
-        books = _pq_lloyd_np(R.reshape(len(R), m, dim // m), k)
-        codebooks = _codebooks_df(vectors.sparkSession, books)
+        codebooks = _train_pq_driver(resid, m, k, dim, max_train, normalize=False)
     else:
         codebooks = train_pq(
             resid, "id", "vec", m=m, k=k, dim=dim,
@@ -1069,10 +934,10 @@ def build_ivfpq_res_index(
     return coded, centroids, anchors, codebooks
 
 
-def _res_adc_stages(
+def _adc_stages(
     coded: DataFrame,
     probed: DataFrame,
-    anchors: DataFrame,
+    anchors: DataFrame | None,
     codebooks: DataFrame,
     vectors: DataFrame,
     queries: DataFrame,
@@ -1083,28 +948,40 @@ def _res_adc_stages(
     candidates: int,
     top_k: int,
 ) -> DataFrame:
-    """Post-probe residual search shared by the in-session and persisted
-    paths: base term per (query, probed cell), ADC over the cells'
-    codes, candidate cut, exact rerank against the primary vectors."""
-    qn = _normalize(queries, id_col, vec_col).select(
-        F.col("id").alias("query_id"), F.col("vec").alias("qnvec")
-    )
-    base = (
-        probed.join(F.broadcast(anchors), "centroid_id")
-        .join(F.broadcast(qn), "query_id")
-        .select(
-            "query_id",
-            "centroid_id",
-            F.aggregate(
-                F.zip_with("qnvec", "csvec", lambda a, b: a * b),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ).alias("base"),
+    """Post-probe IVF-PQ search shared by every IVF-PQ head: the probed
+    cells' codes (``coded`` carries centroid_id, so the restriction is
+    one broadcast join of the tiny (query, cell) pairs — at scale the
+    code table is written partitionBy(centroid_id) and this join IS
+    partition pruning), ADC over them, candidate cut, exact rerank
+    against the primary vectors. ``anchors`` (the residual variant)
+    adds the base term dot(q̂, c*) per (query, probed cell) in front of
+    each ADC fold; None scores raw codes.
+
+    ADC runs within the probed cells only: filtering pq_search's
+    full-corpus result instead is NOT equivalent (its top-k is cut
+    before the filter), so the two share the table build and score
+    expression (_query_adc_tables/_adc_score) but not the cut."""
+    if anchors is None:
+        cells, base = probed.select("query_id", "centroid_id"), None
+    else:
+        qn = _normalize(queries, id_col, vec_col).select(
+            F.col("id").alias("query_id"), F.col("vec").alias("qnvec")
         )
-    )
-    members = coded.join(F.broadcast(base), "centroid_id").select(
-        "query_id", "id", "codes", "base"
-    )
+        cells = (
+            probed.join(F.broadcast(anchors), "centroid_id")
+            .join(F.broadcast(qn), "query_id")
+            .select(
+                "query_id",
+                "centroid_id",
+                F.aggregate(
+                    F.zip_with("qnvec", "csvec", lambda a, b: a * b),
+                    F.lit(0.0),
+                    lambda a, x: a + x,
+                ).alias("base"),
+            )
+        )
+        base = F.col("base")
+    members = coded.join(F.broadcast(cells), "centroid_id")
     qtables = _query_adc_tables(queries, codebooks, id_col, vec_col, m, dim)
     scored = (
         members.join(F.broadcast(qtables), "query_id")
@@ -1112,17 +989,10 @@ def _res_adc_stages(
         .select(
             "query_id",
             F.col("id").alias("neighbor_id"),
-            _adc_score(m, base=F.col("base")),
+            _adc_score(m, base=base),
         )
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    cand = (
-        scored.withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") <= candidates)
-        .select("query_id", "neighbor_id")
-    )
+    cand = _top_n(scored, candidates, "adc_score").select("query_id", "neighbor_id")
     return pq_rerank(cand, vectors, queries, id_col, vec_col, top_k=top_k)
 
 
@@ -1188,9 +1058,9 @@ def ivfpq_res_search_persisted(
     # dim must equal the index's training dim or the rerank joins
     # nonsense. Both are derived from the index's own small tables —
     # m from the codebooks' subquantizer ids, dim from a centroid
-    # vector — and memoized per index path (r14): they are constants
-    # of an immutable published index, so re-collecting them was two
-    # driver jobs (~0.4 s) on EVERY probe; a server reads its index
+    # vector — and memoized per index path: they are constants
+    # of an immutable published index, so re-collecting them would be
+    # two driver jobs (~0.4 s) on EVERY probe; a server reads its index
     # parameters once at load, not per query. The first probe per
     # process (bench warmup / server startup) still pays the two
     # tiny-frame jobs.
@@ -1203,21 +1073,9 @@ def ivfpq_res_search_persisted(
         )
         _INDEX_META_CACHE[meta_key] = meta
     m, dim = meta
-    probed = _probe_cells_scored(
-        queries, centroids, id_col, vec_col, n_probe
-    ).select("query_id", "centroid_id")
-    cells = sorted(
-        int(r.centroid_id)
-        for r in probed.select("centroid_id").distinct().collect()
-    )
-    coded = (
-        _read_pinned(spark, f"{path}/codes")
-        .where(F.col("centroid_id").isin(cells))
-        # partition-directory values read back as int; the join key and
-        # every consumer expect the trainer's long
-        .withColumn("centroid_id", F.col("centroid_id").cast("long"))
-    )
-    return _res_adc_stages(
+    probed = _probe_cells(queries, centroids, id_col, vec_col, n_probe)
+    coded = _in_probed_cells(_read_pinned(spark, f"{path}/codes"), probed)
+    return _adc_stages(
         coded, probed, anchors, codebooks, vectors, queries,
         id_col, vec_col, m, dim, candidates, top_k,
     )
@@ -1267,10 +1125,8 @@ def ivfpq_residual_search(
         vectors, id_col, vec_col, n_cells=n_cells, m=m, k=k,
         max_train=max_train, train_backend=train_backend,
     )
-    probed = _probe_cells_scored(
-        queries, centroids, id_col, vec_col, n_probe
-    ).select("query_id", "centroid_id")
-    return _res_adc_stages(
+    probed = _probe_cells(queries, centroids, id_col, vec_col, n_probe)
+    return _adc_stages(
         coded, probed, anchors, codebooks, vectors, queries,
         id_col, vec_col, m, dim, candidates, top_k,
     )
@@ -1312,84 +1168,44 @@ def ivfpq_search(
     probing 5 is 62% of the corpus; at real scale cells number in the
     thousands and n_probe/n_cells is ~1%, so the same recall costs far
     less — the cell count, not the ratio, is what grows with data."""
-    from itdb_spark.operators.ivf import build_ivf_index
-
     dim = _probe_dim(vectors, vec_col)
     # max_train: the deploy knob — bound BOTH training loops (IVF coarse
     # quantizer and PQ codebooks) at huge corpora; None = full-corpus,
     # the registered oracle-replayable form. Encoding and the final cell
     # assignment still touch every vector — only TRAINING is sampled.
     # train_backend="driver" (requires max_train) additionally runs both
-    # Lloyd's loops in numpy over the one collected sample — the FAISS
+    # Lloyd's loops in numpy over the collected samples — the FAISS
     # deployment shape; "spark" keeps the distributed loops.
-    if train_backend not in ("spark", "driver"):
-        raise ValueError(f"train_backend must be spark|driver, got {train_backend!r}")
+    assignments, centroids = _coarse_quantizer(
+        vectors, id_col, vec_col, n_cells, max_train, train_backend
+    )
     if train_backend == "driver":
-        if max_train is None:
-            raise ValueError("train_backend='driver' requires max_train (the "
-                             "collected sample must be bounded)")
-        from itdb_spark.operators.ivf import _assign as _ivf_assign
-
-        centroids, codebooks = _train_ivfpq_driver(
-            vectors, id_col, vec_col, n_cells, m, k, max_train, dim
-        )
         v = vectors.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec")
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("vec"),
         )
-        assignments = _ivf_assign(v, centroids, id_col)
+        sqnorm = F.aggregate(F.col("vec"), F.lit(0.0), lambda a, x: a + x * x)
+        codebooks = _train_pq_driver(
+            v.where(sqnorm > 0.0), m, k, dim, max_train, normalize=True
+        )
     else:
-        assignments, centroids = build_ivf_index(
-            vectors, id_col, vec_col, k=n_cells, max_train=max_train
-        )
         codebooks = train_pq(
             vectors, id_col, vec_col, m=m, k=k, dim=dim, max_train=max_train
         )
     # encode directly over the assignment frame, carrying centroid_id
-    # through the projection (r15): the encoded index is then (id,
-    # codes, centroid_id) in ONE pass — exactly the row layout
-    # persist_ivfpq_res_index stores — so the probed-cell restriction
-    # is one broadcast join on centroid_id. The old shape re-attached
-    # cells by joining two corpus-scale frames on id (encoded ⋈
-    # assignments⋈probed), a full extra exchange of the code table at
-    # any scale; same rows by construction (assignments carry the same
-    # raw vec per id that pq_encode normalized, 1:1 on id).
+    # through the projection: the encoded index is then (id, codes,
+    # centroid_id) in ONE pass — the row layout persist_ivfpq_res_index
+    # stores — instead of re-attaching cells by an id-join of two
+    # corpus-scale frames (same rows: assignments carry the same raw
+    # vec per id that pq_encode normalizes, 1:1 on id)
     encoded = pq_encode(
         assignments.select(
             F.col(id_col), F.col("vec").alias(vec_col), "centroid_id"
         ),
         codebooks, id_col, vec_col, dim=dim, carry=("centroid_id",), m=m,
     )
-
-    probed = _probe_cells_scored(queries, centroids, id_col, vec_col, n_probe).select(
-        "query_id", "centroid_id"
+    probed = _probe_cells(queries, centroids, id_col, vec_col, n_probe)
+    return _adc_stages(
+        encoded, probed, None, codebooks, vectors, queries,
+        id_col, vec_col, m, dim, candidates, top_k,
     )
-    # restrict the encoded index to probed cells per query: at scale the
-    # code table is written partitionBy(centroid_id), so this join IS
-    # partition pruning; locally it is a broadcast of the tiny
-    # (query, cell) pairs against the code table
-    in_cells = encoded.join(F.broadcast(probed), "centroid_id").select(
-        "query_id", "id", "codes"
-    )
-    # ADC within the probed cells only — reusing pq_search's scoring by
-    # filtering its full-corpus result is NOT equivalent (top-k would be
-    # computed pre-filter), but the table build and score expression ARE
-    # shared (_query_adc_tables/_adc_score) so a fix lands in one place
-    qtables = _query_adc_tables(queries, codebooks, id_col, vec_col, m, dim)
-    scored = (
-        in_cells.join(F.broadcast(qtables), "query_id")
-        .where(F.col("id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            _adc_score(m),
-        )
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    cand = (
-        scored.withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") <= candidates)
-        .select("query_id", "neighbor_id")
-    )
-    return pq_rerank(cand, vectors, queries, id_col, vec_col, top_k=top_k)

@@ -312,9 +312,7 @@ def hybrid_rrf_oracle_sql(
     top_k: int = 10,
 ) -> str:
     """DuckDB twin of hybrid_rrf over the documents + embeddings tables —
-    the REGISTERED sim-hybrid-rrf oracle (queries/pipeline.py; grading
-    was deferred via defer_after=6 because round 6's 50-slot window was
-    exactly full, so its first driver grade lands in round 7).
+    the REGISTERED sim-hybrid-rrf oracle (queries/pipeline.py).
     Lexical CTEs render from the SHARED bm25_replay_ctes (the same
     block the sim-bm25 registry oracle renders — one replay, two
     graded consumers); dense CTEs mirror _KNN_ORACLE (membership by raw

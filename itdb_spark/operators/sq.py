@@ -33,9 +33,10 @@ LLM-pipeline extension surface (SURVEY.md §6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from itdb_spark.operators.ivf import _top_n
 from itdb_spark.operators.pq import _normalize, pq_rerank
 
 
@@ -127,14 +128,7 @@ def sq8_search(
         .where(F.col("id") != F.col("query_id"))
         .select("query_id", F.col("id").alias("neighbor_id"), score)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sq_score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= candidates)
-        .select("query_id", "neighbor_id")
-    )
+    return _top_n(scored, candidates, "sq_score").select("query_id", "neighbor_id")
 
 
 def sq8_knn(

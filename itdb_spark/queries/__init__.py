@@ -38,15 +38,6 @@ class Query:
     # the plan production would run, not the oracle-portability harness.
     # Equivalence of the two paths is recall-gated in test_scale_paths.
     bench_spark: SparkQuery | None = None
-    # Grading deferral: while the newest committed CORRECTNESS round is
-    # BELOW this number, a never-graded entry sorts LAST in the grading
-    # queue instead of first — so a query registered mid-round cannot
-    # displace the round's planned window (which can be exactly full).
-    # Once a CORRECTNESS_r{N}.json with N >= defer_after lands, the
-    # deferral expires by construction (no cleanup, nothing to go stale)
-    # and the entry fronts the queue as ordinary never-graded. 0 = never
-    # defer. Graded entries ignore this field entirely.
-    defer_after: int = 0
 
 
 REGISTRY: dict[str, Query] = {}
@@ -58,7 +49,6 @@ def register(
     doc: str = "",
     bench: bool = False,
     bench_spark: SparkQuery | None = None,
-    defer_after: int = 0,
 ) -> Callable[[SparkQuery], SparkQuery]:
     def deco(fn: SparkQuery) -> SparkQuery:
         if id in REGISTRY:
@@ -70,7 +60,6 @@ def register(
             doc=doc or (fn.__doc__ or ""),
             bench=bench,
             bench_spark=bench_spark,
-            defer_after=defer_after,
         )
         return fn
 

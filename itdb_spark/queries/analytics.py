@@ -94,7 +94,6 @@ def fn_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 300
     """,
-    defer_after=13,
     doc="Snapshot isolation of the versioned-table kernel, graded as a "
     "QUERY rather than asserted in a unit test (round 13): a reader "
     "opened on the published version (sinks/versioned.py::"
@@ -154,7 +153,6 @@ def snap_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 300
     """,
-    defer_after=14,
     doc="Retention under a pinned reader, graded as a QUERY (round 14, "
     "r13 VERDICT #5's proof half): snap-isolation proves a pinned "
     "reader keeps ANSWERING across append+fold; this proves its FILES "
@@ -217,7 +215,6 @@ def snap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 800
     """,
-    defer_after=14,
     doc="The chain FOLD graded standalone (r13 VERDICT #6): every prior "
     "grade exercised compact_chain inside an ingest loop at one chain "
     "shape; this query's answer is wrong unless the fold preserves "

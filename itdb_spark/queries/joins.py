@@ -205,7 +205,6 @@ def join_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_custkey FROM orders
     WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_nationkey = 5)
     """,
-    defer_after=11,
     doc="Bloom-filter runtime-reduced semi-join (round 11) — the "
     "engine-level runtime-filter pattern (Spark's own "
     "InjectRuntimeFilter / row-group skipping do exactly this "

@@ -487,7 +487,6 @@ _IVF_PERSIST_INDEX_CACHE: dict[str, str] = {}
 @register(
     "sim-knn-ivf-persist",
     oracle=_ivf_oracle(),
-    defer_after=8,
     doc="PERSISTED-index similarity search (round 8, VERDICT r7 #4): at "
     "100 TB a search request hits an index on disk, not one rebuilt "
     "in-session — build → persist_ivf_index (assignments "
@@ -547,7 +546,6 @@ def _ivf_persist_root(spark: SparkSession, sf_dir: str) -> str:
     oracle=_ivf_oracle(
         train_src="(SELECT * FROM v WHERE vec_id % 5 != 4) v"
     ),
-    defer_after=7,
     doc="INCREMENTAL index ingest (round 7) — the ANN maintenance path "
     "a production corpus needs: the coarse quantizer trains once on the "
     "base corpus (vec_id % 5 != 4 — an SF-stable 80% slice), the "
@@ -584,7 +582,6 @@ def sim_knn_ivf_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
         filter_pred="""
           AND a.vec_id IN (SELECT doc_id FROM documents WHERE lang = 'en')"""
     ),
-    defer_after=7,
     doc="FILTERED similarity search (round 7) — the metadata-constrained "
     "ANN shape every production vector store exposes (retrieve top-k "
     "among documents WHERE lang='en'): the predicate resolves against "
@@ -1828,7 +1825,6 @@ def _dedup_incr_persist_impl(
     WHERE i.doc % 300000 >= 200000
     GROUP BY 1
     """,
-    defer_after=11,
     bench=True,
     bench_spark=lambda spark, sf_dir: _dedup_incr_persist_impl(
         spark, sf_dir, "xxhash64"
@@ -2026,7 +2022,6 @@ def mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "are built and decoded inside the batch, never shuffled — at 100 TB "
     "the decode cost is embarrassingly parallel and the output is 5 "
     "numeric columns per blob.",
-    defer_after=11,
 )
 def mm_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itdb_spark.operators.pngcodec import (
@@ -3009,7 +3004,6 @@ def _fn_bpe_train_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fn-bpe-train",
     oracle=_bpe_train_oracle(n_merges=12, min_count=2),
-    defer_after=7,
     bench=True,
     bench_spark=_fn_bpe_train_deploy,
     doc="BPE merge-table TRAINING (operators/packing.py::learn_bpe; "
@@ -3041,7 +3035,6 @@ from itdb_spark.operators.packing import bpe_roundtrip_oracle_sql as _bpe_rt_ora
 @register(
     "fn-bpe-roundtrip",
     oracle=_bpe_rt_oracle(n_merges=12, min_count=2),
-    defer_after=7,
     doc="END-TO-END tokenizer loop (round 7): learn the BPE merge table "
     "from the corpus (fn-bpe-train's learn_bpe), then tokenize the SAME "
     "corpus with the learned table and count per-document tokens — the "
@@ -3994,7 +3987,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node AS doc, CAST(min(d) AS BIGINT) AS dist
     FROM reach GROUP BY node
     """,
-    defer_after=11,
     doc="Multi-source BFS hop distance over the LSH near-duplicate graph "
     "(round 11) — bounded-radius reachability, the traversal primitive "
     "under contamination-spread analysis ('every doc within 3 "
@@ -4616,14 +4608,8 @@ def sim_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(t.documents, queries, "doc_id", "text", k=10)
 
 
-# --- round-7 deferred registrations -----------------------------------------
-# Registered THIS round so the entries, oracles and docs ship together
-# with their operators; defer_after=6 keeps them at the BACK of the
-# grading queue until CORRECTNESS_r06 lands (this round's 50-slot window
-# is exactly full: 12 definition pins + 20 never-graded + 18 round-2
-# refreshes), after which they front as ordinary never-graded entries.
-# Each passes a pytest DuckDB differential in CI — including the two
-# registered late in the round (tests/test_ivf_merge.py::
+# --- PQ / IVF-PQ / hybrid / eval registrations ------------------------------
+# Each passes a pytest DuckDB differential in CI (tests/test_ivf_merge.py::
 # test_pq_oracle_matches_spark / test_ivfpq_registered_oracle_matches_spark,
 # tests/test_operators.py::test_hybrid_rrf_matches_duckdb_oracle /
 # test_eval_lsh_retrieval_matches_duckdb_oracle /
@@ -4639,7 +4625,6 @@ from itdb_spark.operators.retrieval import (  # noqa: E402
 @register(
     "sim-knn-pq",
     oracle=_pq_oracle_sql(m=16, k=16, iters=3, top_k=10, n_queries=5),
-    defer_after=6,
     doc="Product-quantization ADC top-k (operators/pq.py; Jégou et al. "
     "2011): m=16 subspaces × k=16 codes quantize the 64-dim corpus 32× "
     "(16 code bytes stand in for 512 float bytes per vector); search "
@@ -4667,7 +4652,6 @@ def sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim-hybrid-rrf",
     oracle=_hybrid_oracle_sql(),
-    defer_after=6,
     doc="Hybrid retrieval: BM25 lexical top-20 + exact dense cosine "
     "top-20 over the parallel embeddings table, fused by reciprocal-"
     "rank fusion (Cormack et al. 2009) — the standard RAG combiner. "
@@ -4689,7 +4673,6 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval-retrieval",
     oracle=_eval_oracle_sql(),
-    defer_after=6,
     doc="Retrieval-quality eval as a query: per-query n_hits / MRR / "
     "NDCG@10 of the LSH ANN against brute-force ground truth — the "
     "retrieval twin of pipe-dedup-eval's measured operating point. "
@@ -4883,7 +4866,6 @@ def _sim_knn_ivfpq_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim-knn-ivfpq",
     oracle=_ivfpq_oracle(),
-    defer_after=6,
     bench=True,
     bench_spark=_sim_knn_ivfpq_deploy,
     doc="IVF-PQ composed search (operators/pq.py::ivfpq_search; the "
@@ -4962,7 +4944,6 @@ def _sim_knn_ivfpq_res_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim-knn-ivfpq-res",
     oracle=_ivfpq_res_oracle(),
-    defer_after=8,
     bench=True,
     bench_spark=_sim_knn_ivfpq_res_deploy,
     doc="IVF-PQ with RESIDUAL encoding (round 8, VERDICT r7 #3; "
@@ -4998,7 +4979,6 @@ from itdb_spark.operators.sq import sq8_oracle_sql as _sq8_oracle_sql  # noqa: E
 @register(
     "sim-knn-sq8",
     oracle=_sq8_oracle_sql(),
-    defer_after=8,
     doc="SQ8 scalar-quantized similarity search (round 8; "
     "operators/sq.py::sq8_knn — the FAISS SQ8 / Lucene int8 shape): "
     "each normalized dimension quantizes independently to 8 bits "
@@ -5031,7 +5011,6 @@ from itdb_spark.operators.texteval import rouge_oracle_sql as _rouge_oracle_sql 
 @register(
     "eval-rouge",
     oracle=_rouge_oracle_sql(n=1, n_pairs=30),
-    defer_after=6,
     doc="ROUGE-1 text-pair evaluation (operators/texteval.py; Lin 2004) "
     "over consecutive-document pairs — the summarization-eval / "
     "decontamination-scoring shape: clipped multiset unigram overlap "
@@ -5071,7 +5050,6 @@ from itdb_spark.operators.texteval import bleu_oracle_sql as _bleu_oracle_sql  #
 @register(
     "eval-bleu",
     oracle=_bleu_oracle_sql(max_n=4, n_pairs=30),
-    defer_after=8,
     doc="BLEU-4 component counts (round 8; operators/texteval.py::"
     "bleu_counts — Papineni et al., ACL 2002) over the same "
     "consecutive-document pairing as eval-rouge: per pair, the clipped "
@@ -5142,7 +5120,6 @@ def _kcore_oracle(k: int = 2, rounds: int = 4) -> str:
 @register(
     "graph-kcore",
     oracle=_kcore_oracle(k=2, rounds=4),
-    defer_after=8,
     doc="k-core decomposition (round 8; k=2, 4 synchronous peel rounds) "
     "over the LSH near-duplicate graph — the third member of the graph "
     "family (pagerank centrality, triangle counting, now subgraph "
@@ -5247,7 +5224,6 @@ def kcore_survivor_degrees(
            CAST(1000000 // s.n_members AS BIGINT) AS weight_ppm
     FROM labeled l JOIN sized s ON l.component = s.component
     """,
-    defer_after=8,
     doc="Soft dedup (round 8): REWEIGHT near-duplicates instead of "
     "dropping them — every document gets sampling weight 1/|cluster| "
     "(integer ppm, 1000000 DIV n so cross-engine hash-exact) over the "
@@ -5368,7 +5344,6 @@ def hll_registers(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
       FROM summ
     )
     """,
-    defer_after=8,
     doc="HyperLogLog register construction per source (round 8; Flajolet "
     "et al. 2007, m=64 / p=6 over the portable 60-bit token hash: top 6 "
     "bits pick the bucket, register = leading-zero rank of the low 54 "
@@ -5465,7 +5440,6 @@ def agg_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1000 * d_num // (n_s * n_rest) AS BIGINT) AS ks_milli
     FROM d WHERE n_rest > 0
     """,
-    defer_after=8,
     doc="Two-sample Kolmogorov-Smirnov drift statistic (round 8), each "
     "source vs the REST of the corpus over the doc-length distribution "
     "— the distribution-shift test beside agg-chi2 (categorical) and "
@@ -5550,7 +5524,6 @@ from itdb_spark.operators.texteval import chrf_oracle_sql as _chrf_oracle_sql  #
 @register(
     "eval-chrf",
     oracle=_chrf_oracle_sql(max_n=6, n_pairs=30),
-    defer_after=8,
     # benched (round-8 VERDICT #5): the heaviest eval-family query —
     # its broadcast character-n-gram grid is a declared plan-audit
     # allowance, so its constant is tracked per-round like graph-kcore
@@ -5633,7 +5606,6 @@ def eval_chrf(spark: SparkSession, sf_dir: str) -> DataFrame:
              6) END AS z_mw
     FROM agg
     """,
-    defer_after=8,
     doc="Mann-Whitney U between the view and click cohorts' event "
     "values (round 8) — the NONPARAMETRIC twin of agg-abtest's Welch t "
     "(rank-sum is the robust default when values are skewed/heavy-"
@@ -5745,7 +5717,6 @@ def _lpa_oracle(rounds: int = 3) -> str:
 @register(
     "graph-communities",
     oracle=_lpa_oracle(rounds=3),
-    defer_after=8,
     doc="Community detection by synchronous majority label propagation "
     "(round 8; Raghavan et al. 2007) over the LSH near-duplicate graph "
     "— the fifth graph algorithm (CC finds REACHABILITY components; "
@@ -5843,7 +5814,6 @@ def _poisson_weight_sql(h: str) -> str:
            round(CAST(sum(w * c) AS DOUBLE) / sum(w) / 100, 6) AS mean_value
     FROM drawn GROUP BY r
     """,
-    defer_after=8,
     doc="Poisson bootstrap over the view cohort's event values (round 8; "
     "Chamandy et al., 'Estimating Uncertainty for Massive Data "
     "Streams', Google TR 2012) — THE scale-native resampling: instead "
@@ -5911,7 +5881,6 @@ def agg_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM heads
     WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
-    defer_after=8,
     doc="SCD type-2 dimension history from the event log (round 8; "
     "operators/snapshot.py::scd2_history — Kimball's slowly-changing-"
     "dimension type 2, the warehouse-standard form): per user, "
@@ -5974,7 +5943,6 @@ def snap_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND (d.valid_to IS NULL OR f.ts < d.valid_to)
     GROUP BY d.state
     """,
-    defer_after=8,
     doc="Time-travel fact-to-dimension join (round 8): purchases joined "
     "to the SCD2 state (snap-scd2's intervals over the same log) that "
     "was VALID AT EVENT TIME — revenue attributed to the user's state "
@@ -6086,7 +6054,6 @@ def _mmr_oracle(n_cand: int = 10, k: int = 5, lam: str = "0.5") -> str:
 @register(
     "sim-mmr",
     oracle=_mmr_oracle(),
-    defer_after=8,
     doc="Maximal Marginal Relevance rerank (round 8; Carbonell & "
     "Goldstein, SIGIR 1998): greedy diversification of the brute top-10 "
     "candidates — each of 5 steps selects argmax of relevance - 0.5 * "
@@ -6268,7 +6235,6 @@ def mmr_rerank(
     FROM cw c JOIN seg s ON s.w = c.w
     GROUP BY lang
     """,
-    defer_after=8,
     doc="Tokenizer evaluation per language (round 8): fertility (tokens "
     "per word) and compression (chars per token) of the fn-bpe merge "
     "table over the FULL corpus word stream — the metrics a tokenizer "
@@ -6340,7 +6306,6 @@ def fn_bpe_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1000000 * t.n // tt.row_total AS BIGINT) AS p_micros
     FROM trans t JOIN tot tt ON tt.from_type = t.from_type
     """,
-    defer_after=8,
     doc="First-order Markov transition matrix between event types "
     "(round 8): per user, consecutive-event pairs under the (ts, "
     "event_id) total order -> (from, to) transition counts and "
@@ -6396,7 +6361,6 @@ def agg_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hashed GROUP BY doc_id, bucket
     HAVING sum(sgn) != 0
     """,
-    defer_after=8,
     doc="Feature hashing / the hashing trick (round 8; Weinberger et "
     "al., ICML 2009): each token maps to one of 64 feature buckets by "
     "the portable hash with a SEPARATE sign hash ('sgn:'-salted), so "
@@ -6473,7 +6437,6 @@ def fn_hashfeat(spark: SparkSession, sf_dir: str) -> DataFrame:
                  6) END AS f_stat
     FROM tot
     """,
-    defer_after=8,
     doc="One-way ANOVA F statistic across ALL event-type cohorts' values "
     "(round 8) — the k-group extension of agg-abtest's two-cohort "
     "Welch t, same exact-moments discipline: per-group n / sum / "
@@ -6576,7 +6539,6 @@ def agg_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, quality, n_tok, cum_before
     FROM ranked WHERE cum_before < 5000
     """,
-    defer_after=8,
     doc="Budgeted corpus selection (round 8): greedy quality-ranked "
     "take-until-budget — rank every document by the graded text-quality "
     "composite (ties broken by doc_id into a total order), admit while "
@@ -6639,7 +6601,6 @@ def pipe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1000 * inter // (total - inter) AS BIGINT) AS jac_milli
     FROM pairs WHERE 10 * inter >= 7 * (total - inter)
     """,
-    defer_after=8,
     doc="EXACT set-similarity self-join at Jaccard >= 0.7 over word "
     "token sets via PREFIX FILTERING (round 8; Bayardo/Ma/Srikant, "
     "'Scaling Up All Pairs Similarity Search', WWW 2007) — the exact "
@@ -6783,7 +6744,6 @@ _GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
                       AND stop_hits >= 2 THEN 1 ELSE 0 END AS BIGINT) AS keep
     FROM m
     """,
-    defer_after=8,
     doc="The Gopher quality-rule bundle (round 8; Rae et al. 2021, "
     "Appendix A — the published heuristic filter most open corpora "
     "describe their cleaning against): word-count band [50, 100k], "
@@ -6881,7 +6841,6 @@ def pipe_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
                  6) AS r_lag1
     FROM m
     """,
-    defer_after=8,
     doc="Lag-1 autocorrelation of the hourly event-count series (round "
     "8) — the time-series seasonality/burstiness diagnostic beside "
     "win-ewma (smoothing) and agg-sessionize (gaps): adjacent-hour "
@@ -6955,7 +6914,6 @@ def _benford_case() -> str:
              AS dev_micros
     FROM counts c CROSS JOIN tot t
     """,
-    defer_after=8,
     doc="Benford first-significant-digit audit over event values (round "
     "8; Newcomb 1881 / Benford 1938 — THE classic fabricated-data "
     "forensic, standard in financial data-quality suites): observed "
@@ -7039,7 +6997,6 @@ def _cdc_gear_terms(hs: str, i: str, spark_side: bool) -> str:
     )
     SELECT doc_id, n_chunks, n_chars, mean_len_milli FROM chunks
     """,
-    defer_after=8,
     doc="Content-defined chunking stats (round 8; the rsync/FastCDC "
     "lineage — Muthitacharoen et al. LBFS SOSP'01, Xia et al. FastCDC "
     "ATC'16): chunk boundaries fall where a windowed gear hash of the "
@@ -7129,7 +7086,6 @@ def _dedup_cdc_impl(
              AS changepoint_hour
     FROM dev GROUP BY n, s
     """,
-    defer_after=8,
     doc="CUSUM changepoint scan over the hourly event-count series "
     "(round 8; Page 1954 — the classic level-shift detector, the "
     "'did ingest volume jump and when' query beside agg-autocorr's "
@@ -7202,7 +7158,6 @@ def agg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(len(ws) - len(keep_idx) AS BIGINT) AS n_dropped
     FROM kept
     """,
-    defer_after=8,
     doc="Deterministic augmentation: seeded token dropout at p = 0.1 "
     "(round 8; the word-dropout regularizer of Iyyer et al. 2015 / "
     "EDA, Wei & Zou 2019) — the training-data augmentation family's "
@@ -7275,7 +7230,6 @@ def fn_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS zipf_intercept
     FROM logs
     """,
-    defer_after=8,
     doc="Zipf rank-frequency fit over the corpus vocabulary (round 8; "
     "Zipf 1949 — THE corpus sanity statistic: natural text fits "
     "ln f = a - s*ln r with s near 1, and a synthetic or templated "
@@ -7387,7 +7341,6 @@ def agg_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(c.component, q.doc_id) AS evidence
     FROM q LEFT JOIN comp c ON c.node = q.doc_id
     """,
-    defer_after=8,
     doc="Curation provenance (round 8): the per-document 'why was this "
     "kept or dropped' attribution view — every corpus doc labeled "
     "near-dup (a CC non-keeper under dedup-cluster's min-label "
@@ -7424,8 +7377,7 @@ def pipe_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- round-9 wave: eval / corpus-card / readability / containment / ---------
-# --- embedding statistics (all defer_after=9: the r9 grading window ---------
-# --- fronts the 29 round-8 registrations — grading-queue discipline) --------
+# --- embedding statistics ---------------------------------------------------
 
 
 @register(
@@ -7447,7 +7399,6 @@ def pipe_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS sim_milli
     FROM pairs
     """,
-    defer_after=9,
     doc="Character edit-distance text-pair evaluation (round 9) over the "
     "rouge/bleu/chrf consecutive-document pairing — the Levenshtein / "
     "CER-family metric (the WER/TER shape at character granularity): "
@@ -7519,7 +7470,6 @@ def eval_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS mean_tokens_milli
     FROM base GROUP BY source
     """,
-    defer_after=9,
     doc="Dataset card (round 9) — the per-source corpus summary every "
     "dataset release ships (HuggingFace dataset cards, Datasheets for "
     "Datasets; Gebru et al. 2021): document count, total tokens and "
@@ -7576,7 +7526,6 @@ def pipe_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents WHERE text IS NOT NULL
     )
     """,
-    defer_after=9,
     doc="Flesch reading-ease readability score (round 9; Flesch 1948 — "
     "the quality-filter signal complementing the length/stopword "
     "composite: near-random token soups and keyword-stuffed spam score "
@@ -7648,7 +7597,6 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1000 * inter // small AS BIGINT) AS contain_milli
     FROM scored WHERE 10 * inter >= 8 * small
     """,
-    defer_after=9,
     doc="Containment-coefficient dedup (round 9; Broder 1997's "
     "containment C(A,B) = |A∩B| / min(|A|,|B|) — the ASYMMETRIC "
     "near-dup Jaccard structurally misses: a short document quoted "
@@ -7742,7 +7690,6 @@ def dedup_contain(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1000 * inter // small AS BIGINT) AS contain_milli
     FROM pairs WHERE 10 * inter >= 8 * small
     """,
-    defer_after=10,
     doc="EXHAUSTIVE containment self-join at C(A,B) = |A∩B| / "
     "min(|A|,|B|) >= 0.8 over word-3-gram shingle sets — the LOSSLESS "
     "subsumption miner dedup-contain structurally is not (round 10; "
@@ -7811,7 +7758,6 @@ def dedup_contain_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE 10 * inter >= 8 * small
       AND (id1 % 5 = 4 OR id2 % 5 = 4)
     """,
-    defer_after=10,
     doc="INCREMENTAL containment screening (round 10) — the append-only "
     "production shape of dedup-contain-exact: a batch lands (the "
     "doc_id % 5 == 4 slice, the sim-knn-ivf-incr convention), find "
@@ -7902,7 +7848,6 @@ def _dedup_contain_incr_persist_impl(
     WHERE 10 * inter >= 8 * small
       AND (id1 % 5 = 4 OR id2 % 5 = 4)
     """,
-    defer_after=12,
     bench=True,
     doc="PERSISTED-index incremental containment (round 12, VERDICT r11 "
     "#2) — the serving twin of dedup-contain-incr, whose rebuild form "
@@ -7953,7 +7898,6 @@ def dedup_contain_incr_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(micro) // count(*) AS BIGINT) AS mean_micro
     FROM m GROUP BY pos
     """,
-    defer_after=9,
     doc="Per-dimension embedding statistics (round 9) — the vector-"
     "column health check a production embedding store monitors "
     "(dead dimensions, scale drift after a model swap, variance "
@@ -8025,7 +7969,6 @@ def emb_dimstats(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ORDER BY hamming, neighbor_id) AS rn
       FROM scored) WHERE rn <= 10
     """,
-    defer_after=9,
     doc="Binary-fingerprint similarity search (round 9) — the 1-bit-"
     "per-dimension extreme of the compression ladder (float64 -> SQ8 "
     "-> PQ -> binary): top-10 nearest documents by HAMMING distance "
@@ -8095,7 +8038,6 @@ def sim_knn_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ORDER BY len DESC, start_day) AS rn
       FROM runs) WHERE rn = 1
     """,
-    defer_after=9,
     doc="Longest consecutive-day activity streak per user (round 9) — "
     "the gaps-and-islands pattern, the one canonical SQL idiom the "
     "registry did not yet exercise (engagement streaks, uptime runs, "
@@ -8159,7 +8101,6 @@ def agg_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cover c JOIN days USING (day)
     GROUP BY c.day
     """,
-    defer_after=9,
     doc="Trailing-7-day active users per day (round 9) — the WAU "
     "metric, the canonical ROLLING COUNT DISTINCT no plain window "
     "frame can express (distinct does not decompose over sliding "
@@ -8223,7 +8164,6 @@ def win_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM grams JOIN df USING (g)
     GROUP BY doc
     """,
-    defer_after=9,
     doc="N-gram novelty per document (round 9) — the memorization / "
     "templatedness signal (Lee et al. 2022 measure duplication by "
     "repeated n-gram spans; this is the per-doc rollup curation ranks "
@@ -8321,7 +8261,6 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_events
     FROM ranked GROUP BY hour
     """,
-    defer_after=9,
     doc="OHLC bars per epoch-hour over event values (round 9) — the "
     "time-series downsampling shape (financial candles, metric "
     "rollups: first/max/min/last per bucket): open and close are "
@@ -8370,7 +8309,6 @@ def agg_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN c.n IS NULL THEN 1 ELSE 0 END AS zero_filled
     FROM frame f LEFT JOIN counts c USING (hour)
     """,
-    defer_after=9,
     doc="Gap-filled hourly event counts (round 9) — the time-series "
     "densify every monitoring/forecast consumer needs (a missing "
     "hour must be an EXPLICIT zero row, not an absent one: downstream "
@@ -8442,7 +8380,6 @@ _SKYLINE_DIMS_SQL = """
         AND (b.n_tok > a.n_tok OR b.q_micro > a.q_micro)
     )
     """,
-    defer_after=9,
     doc="2-D skyline / Pareto frontier (round 9; Börzsönyi et al., ICDE "
     "2001 — the preference-query operator class the registry lacked): "
     "documents not DOMINATED on (token count, quality) — no other doc "
@@ -8519,7 +8456,6 @@ _ATTR_TOL_US = 7 * 86400 * 1_000_000  # 7-day attribution window
            CASE WHEN gap_us <= {_ATTR_TOL_US} THEN gap_us END AS gap_us
     FROM matched
     """,
-    defer_after=9,
     doc="Last-touch attribution (round 9) — the marketing-analytics "
     "join every event warehouse runs (attribute each conversion to "
     "the user's most recent qualifying touchpoint within a window): "
@@ -8625,7 +8561,6 @@ _RAKE_STOPS_SQL = "('the', 'a', 'of', 'and', 'to', 'in', 'is', 'it')"
                  ORDER BY score_milli DESC, phrase) AS rn
       FROM dedup) WHERE rn <= 3
     """,
-    defer_after=9,
     doc="RAKE keyphrase extraction (round 9; Rose et al. 2010 — Rapid "
     "Automatic Keyword Extraction, the unsupervised keyword step a "
     "corpus indexing/labeling pipeline runs): candidate phrases are "
@@ -8740,7 +8675,6 @@ def _text_keyphrase_impl(
     )
     GROUP BY fingerprint HAVING count(*) > 1
     """,
-    defer_after=9,
     doc="Near-exact dedup (round 9) — the canonicalization tier between "
     "dedup-exact and the MinHash family (the CCNet/RefinedWeb 'exact "
     "after normalization' pass): fingerprint = md5 of the text after "
@@ -8803,7 +8737,6 @@ def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m JOIN stats st USING (pos)
     WHERE m.vec_id < 10
     """,
-    defer_after=9,
     doc="Diagonal whitening from exact moments (round 9) — the consumer "
     "emb-dimstats exists for: per-dimension standardization "
     "z = (x - mean)/std folded from the EXACT integer moments in one "
@@ -8924,7 +8857,6 @@ def _dsir_oracle() -> str:
 @register(
     "pipe-dsir",
     oracle=_dsir_oracle(),
-    defer_after=9,
     doc="DSIR importance weights (round 9; Xie et al. 2023, 'Data "
     "Selection via Importance Resampling' — the hashed-n-gram data-"
     "selection method behind several released pretraining corpora): "
@@ -9044,7 +8976,6 @@ def pipe_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN item_c cb ON cb.item = p.item_b
     CROSS JOIN n_users n
     """,
-    defer_after=9,
     doc="Item-affinity / market-basket lift (round 9) — the "
     "co-occurrence analysis the reference's domain begs for (tracks "
     "that share playlists; here: props.k items sharing a user's "
@@ -9157,7 +9088,6 @@ def agg_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE round(exp(lnsum), 6) END AS surv
     FROM folded
     """,
-    defer_after=9,
     doc="Kaplan-Meier survival estimate (round 9; Kaplan & Meier 1958 — "
     "the registry's first survival-analysis member) over INTER-EVENT "
     "gaps: 'how long until a user's next event', the engagement-decay "
@@ -9288,7 +9218,6 @@ def agg_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n_containers AS BIGINT) AS n_containers
     FROM ranked WHERE rn = 1
     """,
-    defer_after=10,
     doc="Subsumption DECISION layer over the exhaustive containment "
     "join (round 10) — dedup-contain-exact finds the >= 0.8-contained "
     "pairs; this operator turns them into drop/keep actions, the same "
@@ -9373,7 +9302,6 @@ def dedup_contain_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS hapax_milli
     FROM occ GROUP BY doc_id
     """,
-    defer_after=10,
     doc="Lexical-richness profile per document (round 10) — type-token "
     "ratio and within-doc hapax rate, the stylometric diversity "
     "signals corpus-quality reports put beside text-entropy (TTR "
@@ -9565,7 +9493,6 @@ _EXACTSPAN_CTES = """
     bench_spark=lambda spark, sf_dir: _dedup_exactspan_impl(
         spark, sf_dir, "xxhash64"
     ),
-    defer_after=11,
     doc="EXACT duplicated-substring spans (round 11) — the suffix-array "
     "dedup of Lee et al., 'Deduplicating Training Data Makes Language "
     "Models Better' (arXiv:2107.06499), re-expressed Spark-first: a "
@@ -9606,7 +9533,6 @@ def dedup_exactspan(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS dup_milli
     FROM tok t LEFT JOIN perdoc p USING (doc)
     """,
-    defer_after=11,
     doc="Exact-span REMOVAL accounting (round 11) — the surgery twin of "
     "dedup-exactspan, the 'delete the duplicated substring, keep the "
     "rest' step of Lee et al. (arXiv:2107.06499) applied as a corpus "
@@ -9675,7 +9601,6 @@ def text_despan_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS gini_milli
     FROM agg
     """,
-    defer_after=10,
     doc="CORPUS-WIDE Gini of document lengths WITHOUT any corpus sort "
     "(round 10) — the windowless twin of agg-gini: that query ranks "
     "via a per-source window, which shards because `source` bounds "
@@ -9769,7 +9694,6 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS is_outlier
     FROM per GROUP BY vec_id
     """,
-    defer_after=10,
     doc="Embedding outlier flags from exact moments (round 10) — the "
     "vector-level consumer beside fn-embed-whiten (per-dim z for a "
     "slice) and emb-dimstats (the moments themselves): count per "
@@ -10052,7 +9976,6 @@ def _emb_kmeans_impl(
       FROM df
     ) WHERE rn = 1
     """,
-    defer_after=11,
     doc="Distributed k-means over the embedding column (round 11) — the "
     "clustering primitive under SemDeDup-style semantic curation and "
     "domain discovery: k=4, two full Lloyd's rounds, deterministic "
@@ -10093,7 +10016,6 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m a JOIN m b ON a.vec_id = b.vec_id AND a.i <= b.i
     GROUP BY 1, 2
     """,
-    defer_after=11,
     doc="Exact covariance cross-moments over the embedding column "
     "(round 11) — the d x d second-moment matrix PCA/ZCA whitening and "
     "drift detection are built from; completes emb-dimstats (per-dim "
@@ -10183,7 +10105,6 @@ def _pca_iter_ctes(t: int) -> str:
            CAST(abs(w4.w) AS VARCHAR) AS w_abs
     FROM v4 JOIN w4 ON w4.i = v4.i
     """,
-    defer_after=11,
     doc="Dominant principal direction of the embedding matrix (round 11) "
     "— the top right-singular vector of X via 4 exact-integer power "
     "iterations on the uncentered second-moment matrix M = XᵀX "
@@ -10285,7 +10206,6 @@ def emb_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN pairs p ON p.id1 = w.x AND p.id2 = w.y
     WHERE p.id1 IS NULL
     """.replace("{minhash}", _minhash_oracle()),
-    defer_after=10,
     doc="Common-neighbor link prediction over the LSH near-dup graph "
     "(round 10) — which is, concretely, BAND-RECALL REPAIR: a pair of "
     "documents that never collided in any MinHash band but shares >= 1 "
@@ -10377,7 +10297,6 @@ def graph_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_vocab
     FROM per_block p LEFT JOIN new_vocab v ON v.block = p.block
     """,
-    defer_after=10,
     doc="Heaps'-law vocabulary-growth curve (round 10) — the corpus "
     "statistic this repo's own scaling arguments cite (SCALE.md's "
     "dedup-allpairs and 100x analyses ride on how the distinct-token "
@@ -10448,7 +10367,6 @@ def agg_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON b.event_type = a.event_type AND b.day > a.day
     GROUP BY a.event_type
     """,
-    defer_after=11,
     doc="Mann-Kendall trend test over per-type daily event volume "
     "(round 11; Mann 1945 / Kendall 1975 — the standard "
     "non-parametric monotonic-trend statistic, the drift-DETECTION "
@@ -10525,7 +10443,6 @@ def agg_mannkendall(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(slope_micro AS BIGINT) AS slope_micro
     FROM ranked WHERE rn = (n_pairs + 1) // 2
     """,
-    defer_after=11,
     doc="Theil-Sen robust trend slope over per-type daily event volume "
     "(round 11; Theil 1950 / Sen 1968 — the median-of-pairwise-slopes "
     "estimator, agg-mannkendall's MAGNITUDE companion: MK answers 'is "
@@ -10608,7 +10525,6 @@ def agg_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hist h JOIN bounds b ON b.event_type = h.event_type
     GROUP BY h.event_type, b.n, b.k
     """,
-    defer_after=11,
     doc="Winsorized sum per event type at 10% (round 11) — the "
     "outlier-robust aggregate telemetry dashboards put next to the raw "
     "mean (agg-quality's trimmed cousin: winsorizing CLAMPS the tails "
@@ -10694,7 +10610,6 @@ def agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT g.grp, g.n_members, p.width, p.height, p.px_sum
     FROM g JOIN px p ON p.grp_id = g.grp_id
     """,
-    defer_after=11,
     doc="Image CONTENT dedup across byte-different encodings (round 11) "
     "— the container-vs-content distinction that makes media dedup "
     "hard: every doc in a pixel group (doc_id % 50) carries the SAME "
@@ -10804,7 +10719,6 @@ def mm_pixeldedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            w AS width, h AS height, ahash_bits
     FROM hashed GROUP BY ahash_bits, w, h
     """,
-    defer_after=12,
     doc="Perceptual near-dup image dedup (round 12) — the fingerprint "
     "swap mm-pixeldedup's docstring promises, made real: each doc's "
     "synthesized RGB image now carries per-doc NOISE (the (doc_id // 50) "
@@ -10901,7 +10815,6 @@ def mm_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT *, max(cnt) OVER (PARTITION BY event_type) AS mx FROM hist)
     GROUP BY event_type
     """,
-    defer_after=11,
     doc="Exact mode per event type (round 11) — the third member of the "
     "histogram-order-statistics family (agg-quantile, agg-winsorize): "
     "modal cents value with min-value tie-break, from the same "
@@ -10951,7 +10864,6 @@ from itdb_spark.queries import REGISTRY as _REGISTRY  # noqa: E402
                 // e.exact_distinct AS BIGINT) AS err_milli
     FROM exact e JOIN hll h ON h.source = e.source
     """,
-    defer_after=11,
     doc="Sketch-accuracy audit (round 11) — the guardrail query a "
     "production sketch deployment runs on a sample before trusting "
     "agg-hll at fleet scale: per source, the bit-exact HLL estimate "
@@ -11016,7 +10928,6 @@ def eval_sketch_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hist h JOIN q ON q.event_type = h.event_type
     GROUP BY h.event_type, q.n, q.q1, q.q3
     """,
-    defer_after=11,
     doc="Exact quartiles + Tukey-fence outlier counts per event type "
     "(round 11) — the fourth member of the histogram order-statistics "
     "family (agg-quantile, agg-winsorize, agg-mode), and the classical "
@@ -11119,7 +11030,6 @@ def agg_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE a.n >= 2 AND b.n >= 2
       AND (a.n * a.q - a.s * a.s) + (b.n * b.q - b.s * b.s) > 0
     """,
-    defer_after=11,
     doc="Welch's two-sample t-squared over every event-type pair "
     "(round 11; Welch 1947 — the unequal-variance test the "
     "mannwhitney/anova/ks family lacked a parametric member of), as "
@@ -11208,7 +11118,6 @@ def agg_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m0 JOIN v4 ON v4.i = m0.i
     GROUP BY m0.vec_id
     """,
-    defer_after=11,
     doc="Projection of every embedding onto the learned dominant "
     "direction (round 11) — emb-pca's CONSUMER half, closing the "
     "spectral loop: the per-vector principal-component score that "
@@ -11286,7 +11195,6 @@ def emb_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dcum dc JOIN med m ON m.event_type = dc.event_type
     GROUP BY dc.event_type, m.n, m.median_cents
     """,
-    defer_after=11,
     doc="Median absolute deviation per event type (round 11) — the "
     "standard robust scale estimator (sigma ~ 1.4826*MAD under "
     "normality; the consumer applies the irrational constant), "
@@ -11364,7 +11272,6 @@ _RANGE_THRESH = 0.25  # organic boundary gap >= 2.4e-5 at every measured SF
       FROM q JOIN v ON v.vec_id != q.query_id
     ) WHERE cos_raw >= {_RANGE_THRESH}
     """,
-    defer_after=12,
     bench=True,
     doc="Exact cosine RANGE (radius) search (round 12) — the similarity "
     "API's other half next to top-k: return EVERYTHING at cosine >= "
@@ -11417,7 +11324,6 @@ def _ivf_range_oracle(
 @register(
     "sim-range-ivf",
     oracle=_ivf_range_oracle(),
-    defer_after=12,
     bench=True,
     doc="IVF-pruned cosine range search (round 12) — sim-range-brute's "
     "scale path: probe the top-3 cells per query (the sim-knn-ivf "

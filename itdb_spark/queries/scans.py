@@ -601,7 +601,6 @@ def _synth_pq_dir(root: str) -> str:
     FROM parquet_file_metadata(
       '{os.path.join(tempfile.gettempdir(), f"itdb_spark_pqmeta_{os.getuid()}")}/*.parquet')
     """,
-    defer_after=9,
     doc="Parquet footer-metadata source (round 9) — the table-"
     "maintenance introspection feeding sinks/compact.py's sizing and "
     "every 'how fragmented is this table' operational question: "
@@ -658,7 +657,6 @@ def src_parquet_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id, lang, n_chars FROM documents WHERE lang = 'en'
     """,
-    defer_after=9,
     doc="Hive-partitioned layout round-trip with partition pruning "
     "(round 9) — the storage pattern every big curated corpus ships "
     "in (write partitionBy(lang), read one partition): the query "
@@ -701,7 +699,6 @@ def src_hive_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id, lang, source, n_chars FROM documents
     """,
-    defer_after=9,
     doc="Versioned-table round-trip (round 9; sinks/versioned.py — the "
     "manifest-pointer kernel): publish the documents table as an "
     "immutable version behind the atomically-replaced MANIFEST line, "
@@ -768,7 +765,6 @@ def _synth_orc(path: str, n: int = 500) -> None:
            i % 3 = 0 AS flag
     FROM range(500) t(i)
     """,
-    defer_after=11,
     doc="ORC source scan (round 11) — the second columnar format a "
     "warehouse migration hands this engine (SURVEY §2.2's source "
     "family is plist/CSV/JSONL/parquet; ORC is the Hive-lineage "
@@ -834,7 +830,6 @@ def _text_fixture_payload(i: int) -> bytes:
              CAST((i * 37) % 101 AS VARCHAR) || chr(10) AS text
     FROM range(40) t(i)
     """,
-    defer_after=11,
     doc="Whole-file text source (round 11): spark.read.option('wholetext')"
     ".text — one row per FILE, the raw-document ingest shape a crawl "
     "or dump directory hands a training pipeline before any parsing "
@@ -879,7 +874,6 @@ def _binary_fixture_payload(i: int) -> bytes:
            md5(repeat('bin ' || i || ' ', i % 5 + 1)) AS content_md5
     FROM range(30) t(i)
     """,
-    defer_after=11,
     doc="Binary whole-file source (round 11): spark.read.format"
     "('binaryFile') — the multimodal ingest front door (SURVEY's "
     "image/audio/video columns enter as opaque binary + typed "
@@ -927,7 +921,6 @@ _SRC_JDBC_URL_CACHE: dict[str, str] = {}
     SELECT doc_id, lang, source, n_chars FROM documents
     WHERE doc_id < 300 AND n_chars > 50
     """,
-    defer_after=11,
     doc="JDBC relational source (round 11) — the read HALF of the "
     "reference's MySQL deployment shape (SURVEY §2.2: itdb2html.py "
     "reads every report from the relational store; the write half is "

@@ -608,7 +608,6 @@ _STREAM_OHLC_ORACLE = """
 @register(
     "stream-ohlc-live",
     oracle=_STREAM_OHLC_ORACLE,
-    defer_after=9,
     doc="agg-ohlc's bars computed by an ACTUAL Structured Streaming "
     "query (round 9; the stream-window-live convention — batch twin "
     "graded separately, the live form drains a real readStream to "
@@ -665,7 +664,6 @@ def stream_ohlc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM counts
     ) WHERE rn <= 3
     """,
-    defer_after=11,
     doc="Streaming top-k: the top-3 event types per tumbling hour, with "
     "the windowed counts computed by a REAL Structured Streaming query "
     "(readStream → watermark → window agg → memory sink, driven to "
@@ -720,7 +718,6 @@ def stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE 10 * inter >= 8 * small
       AND (id1 % 5 = 4 OR id2 % 5 = 4)
     """,
-    defer_after=12,
     doc="STREAMING incremental containment against the persisted "
     "frozen-order index (round 12) — the full production ingest loop "
     "of dedup-contain-incr-persist run LIVE: the increment (the "
@@ -816,7 +813,6 @@ def stream_contain_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE i.doc % 300000 >= 200000
     GROUP BY 1
     """,
-    defer_after=13,
     doc="STREAMING MinHash ingest loop (round 13) — completes the "
     "ingest-loop trilogy (containment r12, ANN r13): the corpus band "
     "index (originals + near-dups, doc % 300000 < 200000) publishes "
@@ -899,7 +895,6 @@ def stream_minhash_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_src="(SELECT * FROM v WHERE vec_id % 5 != 4) v",
         queries_pred="vec_id < 15",
     ),
-    defer_after=13,
     doc="STREAMING ANN ingest loop (round 13, r12 VERDICT #5) — "
     "stream-knn-live SERVES but never accepts; this closes the cycle "
     "the containment family got in round 12, for vectors: the coarse "
@@ -944,10 +939,12 @@ def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         persist_ivf_index_versioned(assignments, centroids, root)
 
         def ingest(bdf, batch_id, out):
+            # accept once (the tag publishes with the delta); serve and
+            # compact on every run, so a replay after a crash between
+            # the accept and the write still writes this trigger's serve
             tag = f"batch-{batch_id}"
-            if tag in chain_tags(chain_root):
-                return
-            append_ivf_index(spark, root, bdf, tag=tag)
+            if tag not in chain_tags(chain_root):
+                append_ivf_index(spark, root, bdf, tag=tag)
             # serve BETWEEN refreshes, against the just-published chain
             ivf_search_chain(
                 spark, root, queries, k=5, n_probe=3
@@ -972,7 +969,6 @@ def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the proven sim-knn-ivf replay with a 15-query set — one parameter
     # on the shared builder, the sim-knn-ivf-incr precedent
     oracle=_ivf_oracle(queries_pred="vec_id < 15"),
-    defer_after=12,
     doc="STREAMING ANN serving (round 12) — the persisted IVF index "
     "run as a LIVE search server, completing the pattern the round "
     "gave containment (stream-contain-live): queries arrive as a real "

@@ -104,12 +104,15 @@ def run_staged_batches(
 
     foreachBatch is at-least-once: a replayed batch reruns ``fn``. So
     ``fn`` writes its own results, overwriting ``out`` so a replay never
-    duplicates rows. An ingest ``fn`` that probes and then accepts the
-    batch (publishes its tagged index delta) writes its results BEFORE the
-    accept, and returns early when the tag is already published. A driver that wrote ``fn``'s return
-    value after ``fn`` returned would put the accept first: a crash
-    between accept and write would leave the batch tagged, so the replay
-    would skip it and its results would be lost."""
+    duplicates rows, and skips only the accept (the publish of its tagged
+    index delta) when the tag is already published — never the write. An
+    ingest ``fn`` whose results come from a probe BEFORE the accept
+    writes them before it accepts; one that serves the just-accepted
+    index (the ANN loop) accepts when the tag is absent and then always
+    serves, which is read-only, so a replay after a crash between the
+    accept and the write re-serves instead of losing the batch's
+    results. A driver that wrote ``fn``'s return value after ``fn``
+    returned would put every accept first, with the same loss."""
     stage = os.path.join(work, "stage")
     results = os.path.join(work, "results")
     os.makedirs(stage)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import Window, functions as F
 
 from tests.conftest import SF_DIR
@@ -654,20 +655,38 @@ def test_ivfpq_driver_trainer_dead_embedding_in_window(spark):
     assert a and a == b
 
 
-def test_ivf_persisted_search_prunes_partitions(spark, tmp_path):
-    """The registered persisted-index search path (sim-knn-ivf-persist /
-    operators/ivf.py::ivf_search_persisted), proven end-to-end:
-    (a) results are BIT-IDENTICAL to ivf_search over the in-memory
-    index (the parquet detour is exact), and (b) the probed-cell
-    IN-filter reaches the partitioned scan as PartitionFilters so only
-    probed cells' files are read — the property that makes probe cost
-    |probed|/|cells| of the index at any scale."""
+@pytest.mark.parametrize("form", ["topk", "range"])
+def test_ivf_persisted_search_prunes_partitions(spark, tmp_path, form):
+    """The registered persisted-index search paths, top-k
+    (sim-knn-ivf-persist / operators/ivf.py::ivf_search_persisted) and
+    range (sim-range-ivf / ivf_range_search_persisted), proven
+    end-to-end: (a) results are BIT-IDENTICAL to the same search over
+    the in-memory index (the parquet detour is exact), and (b) the
+    probed-cell IN-filter reaches the partitioned scan as
+    PartitionFilters so only probed cells' files are read — the
+    property that makes probe cost |probed|/|cells| of the index at any
+    scale."""
     from itdb_spark.operators.ivf import (
         build_ivf_index,
+        ivf_range_search,
+        ivf_range_search_persisted,
         ivf_search,
         ivf_search_persisted,
         persist_ivf_index,
     )
+
+    if form == "topk":
+        def in_memory(a, c, q, n_probe):
+            return ivf_search(a, c, q, k=5, n_probe=n_probe)
+
+        def persisted_search(path, q, n_probe):
+            return ivf_search_persisted(spark, path, q, k=5, n_probe=n_probe)
+    else:
+        def in_memory(a, c, q, n_probe):
+            return ivf_range_search(a, c, q, n_probe=n_probe)
+
+        def persisted_search(path, q, n_probe):
+            return ivf_range_search_persisted(spark, path, q, n_probe=n_probe)
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     queries = emb.where(F.col("vec_id") < 5)
@@ -677,18 +696,18 @@ def test_ivf_persisted_search_prunes_partitions(spark, tmp_path):
 
     in_mem = sorted(
         tuple(r)
-        for r in ivf_search(assignments, centroids, queries, k=5, n_probe=3).collect()
+        for r in in_memory(assignments, centroids, queries, 3).collect()
     )
-    persisted_df = ivf_search_persisted(spark, path, queries, k=5, n_probe=3)
+    persisted_df = persisted_search(path, queries, 3)
     persisted = sorted(tuple(r) for r in persisted_df.collect())
-    assert persisted == in_mem
+    assert persisted and persisted == in_mem
 
     # pruning proof with a single query at n_probe=2, so some of the 8
     # cells are guaranteed unprobed (the registered 5-query × 3-probe
     # shape can legitimately touch every cell at this tiny SF — the
     # IN-filter is still in ITS plan, just not selective there)
     one_q = emb.where(F.col("vec_id") == 0)
-    one_df = ivf_search_persisted(spark, path, one_q, k=5, n_probe=2)
+    one_df = persisted_search(path, one_q, 2)
     one_df.collect()
     plan = one_df._jdf.queryExecution().executedPlan().toString()
     import re as _re
@@ -871,10 +890,10 @@ def test_ivfpq_res_persisted_search_prunes_partitions(spark, tmp_path):
     |probed|/|cells| of the index at any scale."""
     import re as _re
 
+    from itdb_spark.operators.ivf import _probe_cells as _probe_cells_scored
+    from itdb_spark.operators.pq import _adc_stages as _res_adc_stages
     from itdb_spark.operators.pq import (
-        _probe_cells_scored,
         _probe_dim,
-        _res_adc_stages,
         build_ivfpq_res_index,
         ivfpq_res_search_persisted,
         persist_ivfpq_res_index,

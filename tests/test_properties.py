@@ -167,24 +167,14 @@ def test_grading_queue_orders_never_graded_first():
 
     ordered = list(entry.queries())
     assert set(ordered) == set(registry)
-    newest = max(last.values(), default=0)
-    ranks = [
-        entry._effective_rank(qid, last, registry[qid].defer_after, newest)
-        for qid in ordered
-    ]
+    ranks = [entry._effective_rank(qid, last) for qid in ordered]
     assert ranks == sorted(ranks), "queue not ordered by staleness"
     # The lead bucket is rank <= 0: never-graded ids plus pins whose
     # definition change postdates their newest grade. Derive it from
     # _effective_rank itself (not a re-implementation) so a pin
     # neutralized by a post-commit CORRECTNESS file — which the rank
     # function already ignores — cannot desynchronize test and queue.
-    # Never-graded entries with an ACTIVE defer_after sort last instead
-    # (registered mid-round; must not displace a full planned window).
-    lead = [
-        qid
-        for qid in registry
-        if entry._effective_rank(qid, last, registry[qid].defer_after, newest) <= 0
-    ]
+    lead = [qid for qid in registry if entry._effective_rank(qid, last) <= 0]
     assert set(ordered[: len(lead)]) == set(lead), (
         "never-graded and changed-since-graded ids must lead"
     )
@@ -712,28 +702,19 @@ def test_bm25_matches_python_reference(spark, texts):
     assert got == order
 
 
-def test_defer_after_rank_semantics():
-    """A never-graded entry with an ACTIVE deferral (defer_after beyond
-    the newest recorded round) sorts last; the deferral expires by pure
-    arithmetic the moment a CORRECTNESS file at/past defer_after exists
-    (no cleanup step that could go stale at a round boundary); a GRADED
-    entry ignores defer_after entirely."""
+def test_effective_rank_staleness_and_pins():
+    """A never-graded entry ranks 0 (front bucket), a graded entry ranks
+    by the round it was last graded (stalest first), and a definition
+    pin outranks everything until a later round re-grades the id."""
     import __spark_entry__ as entry
 
     last = {"old": 2, "fresh": 5}
-    # active deferral: never graded, defer_after=6 > newest=5 → last
-    assert entry._effective_rank("new-q", last, 6, 5) == 10**9
-    # expired: newest reached 6 → ordinary never-graded front bucket
-    assert entry._effective_rank("new-q", last, 6, 6) == 0
-    # no deferral requested → never-graded front bucket
-    assert entry._effective_rank("new-q", last, 0, 5) == 0
-    # graded entries rank by staleness regardless of defer_after
-    assert entry._effective_rank("old", last, 6, 5) == 2
-    assert entry._effective_rank("fresh", last, 6, 5) == 5
-    # pins still outrank everything, deferral or not
+    assert entry._effective_rank("new-q", last) == 0
+    assert entry._effective_rank("old", last) == 2
+    assert entry._effective_rank("fresh", last) == 5
     entry._CHANGED_SINCE_GRADED["old"] = 5
     try:
-        assert entry._effective_rank("old", last, 6, 5) == -1
+        assert entry._effective_rank("old", last) == -1
     finally:
         del entry._CHANGED_SINCE_GRADED["old"]
 
@@ -744,16 +725,13 @@ def test_round_boundary_simulation_no_red(monkeypatch):
     the round-4/5/6 boundaries): every query in the current front-50
     window gets a grade at round ``newest_real + 1``. The queue must
     remain totally ordered, every pin must be neutralized by that
-    boundary file, and deferral expiry must hold relative to the
-    simulated round — all without any assertion in this suite needing a
+    boundary file — all without any assertion in this suite needing a
     cleanup commit first. Crucially, the simulated round is DERIVED from
     the committed history, never a literal (the round-6 red: a
     hard-coded ``6`` went stale the moment CORRECTNESS_r06.json
     landed)."""
     import __spark_entry__ as entry
-    from itdb_spark.queries import load_all
 
-    registry = load_all()
     real_last = entry._last_graded_round()
     sim_round = max(real_last.values(), default=0) + 1
     window = list(entry._ordered())[:50]
@@ -763,26 +741,13 @@ def test_round_boundary_simulation_no_red(monkeypatch):
     monkeypatch.setattr(entry, "_last_graded_round", lambda: simulated)
 
     ordered = list(entry._ordered())
-    newest = max(simulated.values())
-    assert newest == sim_round
-    ranks = [
-        entry._effective_rank(qid, simulated, registry[qid].defer_after, newest)
-        for qid in ordered
-    ]
+    assert max(simulated.values()) == sim_round
+    ranks = [entry._effective_rank(qid, simulated) for qid in ordered]
     assert ranks == sorted(ranks)
     # every pin is neutralized: pins rank -1 so they always occupy the
     # window's front; grading the window at sim_round > stale_as_of
     # clears them by arithmetic
     assert all(r >= 0 for r in ranks)
-    # deferral semantics relative to the SIMULATED boundary, not a
-    # hard-coded round: an entry still deferred past sim_round and
-    # ungraded sorts last; everything else holds an ordinary rank
-    for qid, q in registry.items():
-        r = entry._effective_rank(qid, simulated, q.defer_after, newest)
-        if q.defer_after > sim_round and simulated.get(qid, 0) == 0:
-            assert r == 10**9, (qid, q.defer_after, sim_round)
-        else:
-            assert r < 10**9, (qid, q.defer_after, sim_round)
 
 
 def test_round_boundary_simulation_survives_future_round(tmp_path, monkeypatch):
@@ -797,9 +762,7 @@ def test_round_boundary_simulation_survives_future_round(tmp_path, monkeypatch):
     import shutil
 
     import __spark_entry__ as entry
-    from itdb_spark.queries import load_all
 
-    registry = load_all()
     window = list(entry._ordered())[:50]
     for p in glob.glob(os.path.join(entry._REPO_DIR, "CORRECTNESS_r*.json")):
         shutil.copy(p, tmp_path / os.path.basename(p))
@@ -811,14 +774,9 @@ def test_round_boundary_simulation_survives_future_round(tmp_path, monkeypatch):
     last = entry._last_graded_round()
     assert max(last.values()) == 99
     ordered = list(entry._ordered())
-    ranks = [
-        entry._effective_rank(q, last, registry[q].defer_after, 99) for q in ordered
-    ]
+    ranks = [entry._effective_rank(q, last) for q in ordered]
     assert ranks == sorted(ranks)
     assert all(r >= 0 for r in ranks), "a pin survived a far-future boundary"
-    # every deferral committed to the tree has expired by r99: nothing
-    # may still sort last
-    assert all(r < 10**9 for r in ranks), "a deferral survived a far-future boundary"
 
 
 def test_png_batch_roundtrip_property():

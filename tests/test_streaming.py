@@ -3,6 +3,7 @@ windowed aggregates as the batch twin (stream-window query)."""
 
 from __future__ import annotations
 
+import os
 import time
 
 from tests.conftest import SF_DIR
@@ -79,6 +80,40 @@ def test_run_staged_batches(spark, tmp_path):
     assert dirs == [str(tmp_path / "results" / b) for b in ("b0", "b2")]
     landed = sorted(tuple(r) for r in spark.read.parquet(*dirs).collect())
     assert landed == sorted(want[0] + want[2])
+
+
+def test_stream_ann_ingest_replay_reserves_last_batch(spark, monkeypatch):
+    """At-least-once replay of the ANN ingest loop: batch 2 runs, its
+    results dir is lost (a crash after the accept, before the write
+    lands), and the batch runs again. The replay finds its tag already
+    published, so it must skip only the accept and still serve: the last
+    returned dir is b2 and the graded rows equal an unreplayed run."""
+    import shutil
+
+    from itdb_spark.queries import streamingq
+
+    registry_fn = streamingq.stream_ann_ingest_live
+    want = sorted(tuple(r) for r in registry_fn(spark, SF_DIR).collect())
+
+    real = streamingq.run_staged_batches
+    returned = []
+
+    def replaying(spark_, work, slices, fn):
+        def wrapped(bdf, batch_id, out):
+            fn(bdf, batch_id, out)
+            if batch_id == 2:
+                shutil.rmtree(out, ignore_errors=True)
+                fn(bdf, batch_id, out)
+
+        dirs = real(spark_, work, slices, wrapped)
+        returned.append(dirs)
+        return dirs
+
+    monkeypatch.setattr(streamingq, "run_staged_batches", replaying)
+    got = sorted(tuple(r) for r in registry_fn(spark, SF_DIR).collect())
+    assert len(returned) == 1
+    assert os.path.basename(returned[0][-1]) == "b2"
+    assert got and got == want
 
 
 def test_streaming_dedup(spark, tmp_path):

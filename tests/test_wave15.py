@@ -8,6 +8,65 @@ it replaced, including the zero-vector and exact-tie corners."""
 from pyspark.sql import functions as F
 
 
+def _pq_encode_join(vectors, codebooks, id_col, vec_col, dim, normalize, m):
+    """The join-form encode pq_encode replaced (explode → broadcast
+    codebook join → min_by → groupBy(id) reassembly) — the reference
+    the expression form must equal."""
+    from itdb_spark.operators.pq import _assign, _normalize, _subvectors
+    from itdb_spark.plans.library import scan_parallelism_floor
+
+    vectors = scan_parallelism_floor(vectors)
+    src = (
+        _normalize(vectors, id_col, vec_col)
+        if normalize
+        else vectors.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("vec"),
+        )
+    )
+    subvecs = _subvectors(src, m, dim // m)
+    return (
+        _assign(subvecs, codebooks)
+        .groupBy("id")
+        .agg(F.array_sort(F.collect_list(F.struct("sub", "code"))).alias("sc"))
+        .select(
+            "id", F.transform("sc", lambda s: s.getField("code")).alias("codes")
+        )
+    )
+
+
+def _assign_arrow(vectors, centroids, id_col):
+    """The assignment ivf._assign replaced (crossJoin k-fan → Arrow
+    cosine kernel → max_by groupBy) — the reference the JVM fold must
+    equal. The argmax is a ``max_by`` over the (sim, -centroid_id)
+    struct, the same winner as the desc-sim/asc-id window including
+    exact ties and the all-NULL zero-vector row."""
+    from itdb_spark.operators.similarity import cosine_pandas
+    from itdb_spark.plans.library import scan_parallelism_floor
+
+    vectors = scan_parallelism_floor(vectors)
+    scored = vectors.crossJoin(F.broadcast(centroids)).select(
+        F.col(id_col),
+        "vec",
+        F.col("centroid_id"),
+        cosine_pandas(F.col("vec"), F.col("cvec")).alias("sim"),
+    )
+    return (
+        scored.groupBy(id_col)
+        .agg(
+            F.max_by(
+                F.struct("vec", "centroid_id"),
+                F.struct(F.col("sim"), (-F.col("centroid_id")).alias("nid")),
+            ).alias("w")
+        )
+        .select(
+            id_col,
+            F.col("w.vec").alias("vec"),
+            F.col("w.centroid_id").alias("centroid_id"),
+        )
+    )
+
+
 def _vecs(spark):
     """Small embedding frame with the adversarial corners: a zero
     vector (dropped by _normalize on every path), an exact-tie vector
@@ -31,7 +90,7 @@ def test_pq_encode_expression_equals_join_form(spark):
     arrays of the explode→join→min_by→groupBy form it replaced —
     normalized path (zero vector dropped on both) and as-is residual
     path alike."""
-    from itdb_spark.operators.pq import _pq_encode_join, pq_encode, train_pq
+    from itdb_spark.operators.pq import pq_encode, train_pq
 
     vecs = _vecs(spark)
     cb = train_pq(vecs, m=2, k=2, iters=2)
@@ -71,7 +130,7 @@ def test_ivf_assign_expression_equals_arrow_form(spark):
     every row — including the all-NULL-sim zero vector (falls to the
     smallest centroid id on both paths) and exact cosine ties (id
     tie-break)."""
-    from itdb_spark.operators.ivf import _assign, _assign_arrow, build_ivf_index
+    from itdb_spark.operators.ivf import _assign, build_ivf_index
 
     vecs = _vecs(spark)
     _, cents = build_ivf_index(vecs, k=3, iters=2)
