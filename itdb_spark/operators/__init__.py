@@ -1,5 +1,4 @@
 from itdb_spark.operators.dedup import (  # noqa: F401
-    band_structs,
     exact_dup_groups,
     minhash_candidates,
     minhash_signatures,

@@ -12,6 +12,15 @@ All hashing uses ``portable_hash64`` (md5-prefix → int64) so the DuckDB
 oracle reproduces every bucket assignment bit-for-bit. At pure-Spark scale
 swap in ``xxhash64`` — same structure, cheaper hash.
 
+MinHash/LSH band spine — every MinHash head is a composition of:
+  shingle_frame → minhash_signatures → minhash_bands (the band table)
+  → bucket groupBy (minhash_candidates) | over-cap window
+    (minhash_template_channel) | _bucket_keys → _hit_bands (the
+    band_collision_counts* screens; persist/append_band_index publish
+    _bucket_keys as the ``<root>_keys`` sibling).
+Verification (ngram_jaccard_pairs) intersects the in-row shingle-set
+arrays of doc_shingle_sets per candidate pair.
+
 Scale notes (100 TB):
 * exact_dup_groups: one shuffle on the fingerprint; fingerprints are
   near-unique so no skew.
@@ -76,11 +85,11 @@ def exact_dup_groups(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def shingle_frame(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc, w) exploded word-3-gram shingle frame — the shared input of
-    MinHash signatures and exact Jaccard verification. Build it ONCE and
-    cache when both stages run in the same pipeline (dedup-jaccard,
-    pipe-curate): the explode is the dominant intermediate (≈ corpus token
-    count) and recomputing it per stage doubles the heaviest scan."""
+    """(doc, w) exploded word-3-gram shingle frame — the input of
+    ``minhash_signatures`` (its one consumer in the MinHash family;
+    verification builds per-doc arrays in-row, ``doc_shingle_sets``) and
+    of exhaustive-mode ``ngram_jaccard_pairs``. The explode is the
+    dominant intermediate (≈ corpus token count)."""
     return docs.select(
         F.col(id_col).alias("doc"),
         F.explode(word_shingles(text_col)).alias("w"),
@@ -143,7 +152,6 @@ def minhash_signatures(
     id_col: str,
     text_col: str,
     num_perm: int = NUM_PERM,
-    shingles: DataFrame | None = None,
     hash_fn: str = "portable",
 ) -> DataFrame:
     """(doc, m0..m{num_perm-1}) MinHash signature over word-3-gram shingles.
@@ -151,11 +159,13 @@ def minhash_signatures(
     explode(shingle set) → shingle hash (see ``_shingle_hash``) →
     ``num_perm`` min-aggregations in a single groupBy (one shuffle;
     map-side combine keeps the shuffle at one row per doc per
-    partition). Pass a pre-built ``shingles`` frame (``shingle_frame``)
-    to share the explode with other consumers."""
-    words = shingles if shingles is not None else shingle_frame(docs, id_col, text_col)
+    partition). The partial_min aggregations run in whole-stage
+    codegen, which measured ~2× faster than a per-row higher-order
+    (no-explode) band expression, whose lambdas run interpreted."""
     h = _shingle_hash(hash_fn)
-    hashed = words.select("doc", (h(F.col("w")) % HASH_PRIME).alias("h"))
+    hashed = shingle_frame(docs, id_col, text_col).select(
+        "doc", (h(F.col("w")) % HASH_PRIME).alias("h")
+    )
     aggs = []
     for j in range(num_perm):
         a, b = _perm_coeffs(j)
@@ -190,72 +200,12 @@ def minhash_bands(signatures: DataFrame, num_bands: int = NUM_BANDS) -> DataFram
     ).select("doc", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash"))
 
 
-def band_structs(
-    text_col: str, num_perm: int = NUM_PERM, num_bands: int = NUM_BANDS
-) -> Column:
-    """array<struct<band,band_hash>> LSH band keys computed NARROWLY per
-    row: text → distinct word-3-gram shingles → portable hashes → per-band
-    concat of the band's permutation minima — one higher-order expression,
-    NO explode and NO signature groupBy shuffle. The shingle and hashed
-    arrays are each bound once via a single-element transform so the md5
-    work runs once per shingle, not once per permutation.
-
-    MEASURED trade-off (sf0.1, local[32], min-of-5): this form is ~2×
-    slower than the exploded ``minhash_signatures`` + groupBy path (1.06 s
-    vs 0.53 s for the band table) — higher-order lambdas evaluate
-    interpreted per element, while the exploded path's 16 partial_min
-    aggregations run in whole-stage codegen and win despite paying a
-    shuffle of the exploded shingle table. ``minhash_candidates`` therefore
-    registers the exploded path; equivalence of the two is pinned by
-    test_band_structs_matches_exploded_signature_path. Revisit if Spark
-    gains codegen for HOF lambdas, or on clusters where shuffle IO (not
-    CPU) is the binding constraint."""
-    if num_perm % num_bands != 0:
-        raise ValueError(f"num_perm={num_perm} not divisible by num_bands={num_bands}")
-    per_band = num_perm // num_bands
-
-    def hash_one(s: Column) -> Column:
-        return (
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % HASH_PRIME
-        )
-
-    def perm_min(hs: Column, j: Column) -> Column:
-        a = j * 2 + F.lit(1)
-        b = j * 101 + F.lit(17)
-        return F.array_min(F.transform(hs, lambda h: (h * a + b) % HASH_PRIME))
-
-    def bands_of(hs: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(num_bands - 1)),
-            lambda band: F.struct(
-                band.cast("int").alias("band"),
-                F.concat_ws(
-                    "_",
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(per_band - 1)),
-                        lambda r: perm_min(hs, band * per_band + r).cast("string"),
-                    ),
-                ).alias("band_hash"),
-            ),
-        )
-
-    bound = F.transform(
-        F.array(word_shingles(text_col)),
-        lambda sh: F.transform(
-            F.array(F.transform(sh, hash_one)),
-            bands_of,
-        ),
-    )
-    return bound[0][0]
-
-
 def minhash_candidates(
     docs: DataFrame,
     id_col: str,
     text_col: str,
     num_perm: int = NUM_PERM,
     max_bucket: int | None = None,
-    shingles: DataFrame | None = None,
     distinct_pairs: bool = True,
     bands: DataFrame | None = None,
     hash_fn: str = "portable",
@@ -269,17 +219,15 @@ def minhash_candidates(
     shuffle cheaper; keep the default for anything that counts or verifies
     pairs.
 
-    Band table: exploded shingles → codegen'd 16-min groupBy (one shuffle;
-    measured faster than the narrow ``band_structs`` HOF form — see its
-    docstring). Pair generation is ONE further shuffle: groupBy (band,
+    Band table: ``minhash_bands(minhash_signatures(...))`` (one
+    shuffle). Pair generation is ONE further shuffle: groupBy (band,
     band_hash) collects each bucket's doc ids and in-bucket pairs come
     from an array comprehension (transform × slice over the sorted id
     array — JVM-side, no Python), followed by a pair-level distinct. A
     band-table self-join would shuffle the table twice (or broadcast one
     side, recomputing the signature pipeline) and need a cache to avoid
     double compute; the groupBy form needs neither, so nothing is left
-    resident after the action. Pass ``shingles`` (a cached
-    ``shingle_frame``) to share the explode with other consumers.
+    resident after the action.
 
     ``max_bucket`` caps hot buckets (boilerplate/template corpora where one
     band hash collects thousands of docs — each contributes O(size²) pairs).
@@ -295,7 +243,7 @@ def minhash_candidates(
     the banding pass between both outputs)."""
     if bands is None:
         bands = minhash_bands(
-            minhash_signatures(docs, id_col, text_col, num_perm, shingles, hash_fn)
+            minhash_signatures(docs, id_col, text_col, num_perm, hash_fn)
         )
     if max_bucket is not None:
         bucket_n = F.count("*").over(Window.partitionBy("band", "band_hash"))
@@ -350,7 +298,6 @@ def minhash_template_channel(
     text_col: str,
     num_perm: int = NUM_PERM,
     max_bucket: int = 4,
-    shingles: DataFrame | None = None,
     bands: DataFrame | None = None,
 ) -> DataFrame:
     """(band, band_hash, doc_id, template_id, n_members): the hot-bucket
@@ -369,7 +316,7 @@ def minhash_template_channel(
     (band, band_hash) keys the candidate groupBy uses (SCALE.md "hot
     buckets")."""
     if bands is None:
-        bands = minhash_bands(minhash_signatures(docs, id_col, text_col, num_perm, shingles))
+        bands = minhash_bands(minhash_signatures(docs, id_col, text_col, num_perm))
     return _overcap_channel(bands, ["band", "band_hash"], "doc", max_bucket)
 
 
@@ -444,27 +391,20 @@ def ngram_decontam(
     )
 
 
-def _folded(sh: DataFrame) -> DataFrame:
-    """(doc, w) with string shingles folded to xxhash64 longs; a frame
-    the caller already folded to bigint passes through unhashed."""
-    if dict(sh.dtypes)["w"] == "bigint":
-        return sh.select("doc", "w")
-    return sh.select("doc", F.xxhash64("w").alias("w"))
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
     candidates: DataFrame | None = None,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Exact word-3-gram-shingle Jaccard verification → (id1, id2, jaccard).
 
     With ``candidates`` (an (id1, id2) frame, normally
     ``minhash_candidates``): intersections are computed ONLY for those
     pairs — the scale path; work is O(candidates × shingles-per-doc).
+    Each pair intersects the two docs' in-row shingle-set arrays
+    (``doc_shingle_sets`` — no explode, no groupBy(doc) exchange).
 
     Without: all-pairs via shingle co-occurrence self-join — exact but
     inherently quadratic once the shingle space saturates (at sf0.1 the
@@ -476,56 +416,19 @@ def ngram_jaccard_pairs(
     pair's count by 1 — negligible. The verified-pair result is
     materialized with an eager localCheckpoint so nothing (cache or
     multiply-referenced lineage) stays resident in the caller's session
-    (plans.library.materialized). Pass ``shingles`` (a cached
-    ``shingle_frame``) only when the caller is ALREADY amortizing the
-    explode across another consumer; the self-built candidates path
-    computes per-doc shingle arrays in-row instead (shingle_set_col — no
-    explode, no groupBy(doc) exchange, r15). ``shingles`` may carry string
-    shingles or ones already folded to bigint (``_folded``)."""
+    (plans.library.materialized)."""
     from itdb_spark.plans.library import materialized, truncate_lineage
 
     if candidates is not None:
-        # per-doc hash ARRAYS, intersected per candidate row — replaces
-        # the exploded (pair x shingle) join+groupBy: same-session A/B
-        # at sf0.1 measured the verification stage alone 2.3x faster
-        # (1.39 s -> 0.60 s warm over cached inputs) and the registered
-        # end-to-end query ~10% faster (3.38/2.73 s -> 3.04/2.52 s,
-        # identical 17,274 output rows — candidate generation dominates
-        # the rest). Fewer shuffled bytes: each pair ships two
-        # doc-bounded arrays once instead of one row per candidate-side
-        # shingle plus an aggregation.
-        if shingles is not None:
-            # caller-shared cached explode: fold + collect per doc (the
-            # caller is amortizing the explode across the candidate
-            # stage, so consume it rather than re-shingle)
-            arrs = _folded(shingles).groupBy("doc").agg(
-                F.collect_list("w").alias("ws")
-            )
-        else:
-            # r15: the shingle-hash array is a PER-ROW fact, so the
-            # self-built path computes it in-row (shingle_set_col — no
-            # Generate, no groupBy(doc) exchange; the containment family's
-            # measured win, commit "in-row shingle sets"). Row-identical to
-            # explode→collect_list up to element ORDER, which
-            # array_intersect/size never observe. Deliberately NOT
-            # checkpointed even though it feeds BOTH join sides below:
-            # recomputing the scan+transform per side beat a
-            # localCheckpoint's block write+read in the interleaved A/B
-            # (tools/jaccard_ab_r15.py: nockpt 1.84-2.05 s vs 2.29-2.77 s
-            # checkpointed, every round) — and recompute-from-columnar-
-            # parquet is the 100 TB posture anyway. NULL-text guard
-            # matches the explode form (explode drops NULL-shingle docs —
-            # see doc_shingle_sets for why the filter is on text, not ws).
-            arrs = docs.where(F.col(text_col).isNotNull()).select(
-                F.col(id_col).alias("doc"),
-                shingle_set_col(text_col).alias("ws"),
-            )
-        a = arrs.select(F.col("doc").alias("id1"), F.col("ws").alias("ws1"))
-        b = arrs.select(F.col("doc").alias("id2"), F.col("ws").alias("ws2"))
-        # sz1/sz2 are size(ws) on plain attributes — the separate
-        # groupBy(doc).count() aggregation and its two sa/sb joins the
-        # pre-r15 form paid are gone (collect_list length == count(*)
-        # per doc by construction, xxhash64 collisions included).
+        # per-doc hash ARRAYS intersected per candidate row: each pair
+        # ships two doc-bounded arrays once instead of one row per
+        # candidate-side shingle plus an aggregation. Not checkpointed
+        # although it feeds both join sides: recomputing the
+        # scan+transform per side measured faster than a
+        # localCheckpoint's block write+read.
+        arrs = doc_shingle_sets(docs, id_col, text_col)
+        a = arrs.select(F.col("doc").alias("id1"), F.col("ts").alias("ws1"))
+        b = arrs.select(F.col("doc").alias("id2"), F.col("ts").alias("ws2"))
         common = (
             candidates.select("id1", "id2")
             .join(a, "id1")
@@ -540,13 +443,13 @@ def ngram_jaccard_pairs(
         )
     else:
         # exhaustive all-pairs via shingle co-occurrence self-join (small
-        # corpora/tests only): keeps the exploded form — the self-join IS
-        # over exploded rows. words feeds 4 references (a/b/sa/sb), so the
-        # r14 checkpoint discipline stays.
-        base = (
-            shingles if shingles is not None else shingle_frame(docs, id_col, text_col)
+        # corpora/tests only) over exploded rows; words feeds 4
+        # references (a/b/sa/sb), so it is checkpointed.
+        words = truncate_lineage(
+            shingle_frame(docs, id_col, text_col).select(
+                "doc", F.xxhash64("w").alias("w")
+            )
         )
-        words = truncate_lineage(_folded(base))
         sizes = words.groupBy("doc").agg(F.count("*").alias("sz"))
         a = words.alias("a")
         b = words.alias("b")
@@ -1080,6 +983,20 @@ def chunk_dup_stats(
     )
 
 
+def _bucket_keys(bands: DataFrame) -> DataFrame:
+    """The DISTINCT (band, band_hash) bucket keys of a band table."""
+    return bands.select("band", "band_hash").distinct()
+
+
+def _hit_bands(hits: DataFrame) -> DataFrame:
+    """(doc_id, n_hit_bands) over batch band rows that hit an index
+    bucket: the distinct colliding bands per doc, so a batch band row
+    delivered twice counts once."""
+    return hits.groupBy(F.col("doc").alias("doc_id")).agg(
+        F.count_distinct("band").cast("long").alias("n_hit_bands")
+    )
+
+
 def band_collision_counts(new_bands: DataFrame, index_bands: DataFrame) -> DataFrame:
     """(doc_id, n_hit_bands): incremental-ingest dedup — for each NEW
     document, how many of its LSH bands collide with any bucket of the
@@ -1092,11 +1009,8 @@ def band_collision_counts(new_bands: DataFrame, index_bands: DataFrame) -> DataF
     batch is small — broadcast it or rely on the index bucketing so only
     matching buckets are read. No pairwise work at all: collision is
     detected against bucket KEYS (one distinct pass), not member lists."""
-    idx = index_bands.select("band", "band_hash").distinct()
-    return (
-        new_bands.join(idx, ["band", "band_hash"])
-        .groupBy(F.col("doc").alias("doc_id"))
-        .agg(F.count_distinct("band").cast("long").alias("n_hit_bands"))
+    return _hit_bands(
+        new_bands.join(_bucket_keys(index_bands), ["band", "band_hash"])
     )
 
 
@@ -1107,31 +1021,25 @@ def band_collision_counts_onepass(
     SPLITS OF ONE BAND TABLE (the rebuild form's shape): instead of
     filtering the table twice, distinct-ing the index side and joining
     the batch side back (which plants TWO copies of the whole signature
-    pipeline in the plan — measured r14: the composed plan cost ~1.3 s
-    of driver planning per call, the query's single largest component),
-    flag each (band, band_hash) bucket with a window max of ``is_idx``
-    and keep batch rows in flagged buckets. ONE copy of the pipeline,
-    ONE bucket-keyed shuffle in place of distinct + join — the same
-    rows survive: a batch band row joins a distinct index key iff its
-    bucket contains >= 1 index row, which is exactly ``max(is_idx) =
-    1`` over the bucket. At scale this also drops the join's second
-    corpus-scale shuffle (the window and the removed distinct shuffle
-    the same band table once).
+    pipeline in the plan and measured ~1.3 s of driver planning per
+    call), flag each (band, band_hash) bucket with a window max of
+    ``is_idx`` and keep batch rows in flagged buckets. ONE copy of the
+    pipeline, ONE bucket-keyed shuffle in place of distinct + join — the
+    same rows survive: a batch band row joins a distinct index key iff
+    its bucket contains >= 1 index row, which is exactly ``max(is_idx)
+    = 1`` over the bucket.
 
-    NULL keys (r14 ADVICE): an equi-join drops NULL-keyed rows while
+    NULL keys: an equi-join drops NULL-keyed rows while
     ``Window.partitionBy`` groups them together, so rows with a NULL
     ``band``/``band_hash`` are filtered up front to keep the
     join-equivalence claim exact for ANY caller (minhash_bands itself
-    can never produce them — concat_ws never yields NULL — so this
-    filter drops nothing on the registered paths)."""
+    never produces them — concat_ws never yields NULL)."""
     w = Window.partitionBy("band", "band_hash")
     flag = F.max(F.when(is_idx, 1).otherwise(0)).over(w)
-    return (
+    return _hit_bands(
         bands.where(F.col("band").isNotNull() & F.col("band_hash").isNotNull())
         .withColumn("_hit", flag)
         .where((~is_idx) & (F.col("_hit") == 1))
-        .groupBy(F.col("doc").alias("doc_id"))
-        .agg(F.count_distinct("band").cast("long").alias("n_hit_bands"))
     )
 
 
@@ -1156,29 +1064,22 @@ def persist_band_index(bands: DataFrame, root: str) -> str:
     in-session form (gated in tests).
 
     A sibling versioned table at ``<root>_keys`` holds the DISTINCT
-    bucket keys (band, band_hash) — round 12: the sf10 probe profile
-    put ~2 s of its 11.8 s wall in re-deriving the key set from the
-    4M-row member table EVERY call, a corpus-scale distinct that
-    belongs at publish time (collision screening needs keys only; the
-    member rows stay for verification routing). The keys table is
-    derived and read alone by the probe, so single-table manifest
-    atomicity still covers every reader.
+    bucket keys (``_bucket_keys``): collision screening needs keys
+    only, so the corpus-scale distinct runs once at publish instead of
+    on every probe (it measured ~2 s of an 11.8 s sf10 probe); the
+    member rows stay for verification routing.
 
-    Publish ORDER (ADVICE r12): member table FIRST, keys sibling
-    SECOND. The two manifests have no cross-table atomicity, so the
-    order picks which torn state a crash between them leaves: keys
-    without members would route collision hits to members that do not
-    exist (over-report, wrong), while members without keys just means
-    the probe's fallback derives keys from the member table (fully
-    live, merely unamortized) — fail toward under-claiming."""
+    Publish ORDER: member table FIRST, keys sibling SECOND. The two
+    manifests have no cross-table atomicity, so the order picks which
+    torn state a crash between them leaves: keys without members would
+    route collision hits to members that do not exist (over-report,
+    wrong), while members without keys just means the probe's fallback
+    derives keys from the member table (fully live, merely unamortized)
+    — fail toward under-claiming."""
     from itdb_spark.sinks.versioned import write_version
 
     v = write_version(bands, root, partition_by=["band"])
-    write_version(
-        bands.select("band", "band_hash").distinct(),
-        root + "_keys",
-        partition_by=["band"],
-    )
+    write_version(_bucket_keys(bands), root + "_keys", partition_by=["band"])
     return v
 
 
@@ -1188,12 +1089,13 @@ def band_collision_counts_persisted(
     """``band_collision_counts`` against a ``persist_band_index`` table:
     the amortized incremental-ingest path — per-call work is the new
     batch's signatures plus one key-join against the on-disk DISTINCT
-    bucket-key table (``<root>_keys``, written at publish; no member
-    lists, no pairs, no corpus recompute OR corpus-scale distinct per
-    call). Reader is pinned to the currently-published version, so a
-    concurrent index refresh never perturbs an in-flight probe. Falls
-    back to deriving keys from the member table for pre-round-12 roots
-    published without the sibling. Both reads follow the append chain
+    bucket-key table (``<root>_keys``; no member lists, no pairs, no
+    corpus recompute OR corpus-scale distinct per call). Reader is
+    pinned to the currently-published version, so a concurrent index
+    refresh never perturbs an in-flight probe. When the keys sibling is
+    not published (a crash between the member-first sibling publishes
+    of ``persist_band_index``), the keys are the bucket keys of the
+    member chain. Both reads follow the append chain
     (read_current_chain — identical to read_current for tables only
     ever replaced), so an ``append_band_index``-maintained index serves
     without compaction."""
@@ -1201,27 +1103,20 @@ def band_collision_counts_persisted(
 
     keys_root = index_root + "_keys"
     if current_version(keys_root) is not None:
-        keys = read_current_chain(spark, keys_root).select(
-            "band", "band_hash"
-        )
-        return (
-            new_bands.join(keys, ["band", "band_hash"])
-            .groupBy(F.col("doc").alias("doc_id"))
-            .agg(F.count_distinct("band").cast("long").alias("n_hit_bands"))
-        )
-    return band_collision_counts(
-        new_bands, read_current_chain(spark, index_root)
-    )
+        keys = read_current_chain(spark, keys_root).select("band", "band_hash")
+    else:
+        keys = _bucket_keys(read_current_chain(spark, index_root))
+    return _hit_bands(new_bands.join(keys, ["band", "band_hash"]))
 
 
 def append_band_index(
     spark: SparkSession, root: str, new_bands: DataFrame,
     tag: str | None = None,
 ) -> str:
-    """BATCH-BOUNDED refresh of a ``persist_band_index`` table (round
-    12 — the containment index's append_containment_index discipline
-    applied to the MinHash family): after a screened batch is accepted,
-    its band rows land as a DELTA version of the member table and its
+    """BATCH-BOUNDED refresh of a ``persist_band_index`` table (the
+    containment index's append_containment_index discipline applied to
+    the MinHash family): after a screened batch is accepted, its band
+    rows land as a DELTA version of the member table and its
     NOT-YET-PRESENT bucket keys as a delta of the sibling keys table —
     two append_version publishes, each an atomic pointer swap, write
     cost bounded by the batch. The novelty anti-join is batch-bounded
@@ -1231,22 +1126,22 @@ def append_band_index(
     is scanned once, never shuffled. Returns the member table's new
     version name.
 
-    Publish ORDER (ADVICE r12): member delta FIRST, keys delta SECOND
-    — a crash between the two sibling publishes then leaves a keys
-    table that merely UNDER-reports (the batch screens as not yet
-    accepted; probes stay correct-toward-novelty), instead of keys
-    claiming buckets whose member rows do not exist. The novelty
-    anti-join reads the keys CHAIN as of entry, which the member
-    append never touches, so the swap changes no published content.
+    Publish ORDER: member delta FIRST, keys delta SECOND — a crash
+    between the two sibling publishes then leaves a keys table that
+    merely UNDER-reports (the batch screens as not yet accepted; probes
+    stay correct-toward-novelty), instead of keys claiming buckets
+    whose member rows do not exist. The novelty anti-join reads the
+    keys CHAIN as of entry, which the member append never touches, so
+    the swap changes no published content.
 
-    ``tag`` (round 13) makes acceptance idempotent under at-least-once
-    delivery: the tag publishes atomically with the KEYS delta — the
-    LAST of the two sibling publishes, so a replay after a crash
-    between them REDOES both (completing the torn pair) rather than
-    skipping forever with the keys half missing. The redo's only
-    artifact is a duplicate member delta, which every probe path
-    absorbs (collision screening reads the keys SET; counts are
-    count_distinct) — exactly-once for the pair's visible semantics."""
+    ``tag`` makes acceptance idempotent under at-least-once delivery:
+    the tag publishes atomically with the KEYS delta — the LAST of the
+    two sibling publishes, so a replay after a crash between them REDOES
+    both (completing the torn pair) rather than skipping forever with
+    the keys half missing. The redo's only artifact is a duplicate
+    member delta, which every probe path absorbs (collision screening
+    reads the keys SET; counts are count_distinct) — exactly-once for
+    the pair's visible semantics."""
     from itdb_spark.sinks.versioned import (
         append_version,
         chain_tags,
@@ -1257,7 +1152,7 @@ def append_band_index(
     keys_root = root + "_keys"
     if tag and tag in chain_tags(keys_root):
         return current_version(root)  # replay of a COMPLETED accept
-    bkeys = new_bands.select("band", "band_hash").distinct()
+    bkeys = _bucket_keys(new_bands)
     matched = (
         read_current_chain(spark, keys_root)
         .select("band", "band_hash")

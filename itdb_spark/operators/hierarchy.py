@@ -22,15 +22,18 @@ def expand_hierarchy(
     Each level is checkpoint-free and lazily unioned; the loop stops early
     when a level is empty (fixpoint). At scale, `nodes` is the small
     playlist dimension — every join broadcasts.
+
+    Raises ``ValueError`` instead of returning a partial closure when
+    level ``max_depth + 1`` is non-empty: the message says whether the
+    hierarchy has a cycle (some node is its own ancestor) or is deeper
+    than ``max_depth``. A tree exactly ``max_depth`` deep returns.
     """
     edges = nodes.select(
         F.col(parent_col).alias("ancestor"), F.col(id_col).alias("descendant")
     ).where(F.col(parent_col).isNotNull())
 
-    level = edges.withColumn("depth", F.lit(1))
-    out = level
-    for _ in range(1, max_depth):
-        level = (
+    def deeper(level: DataFrame) -> DataFrame:
+        return (
             level.alias("l")
             .join(edges.alias("e"), F.col("l.descendant") == F.col("e.ancestor"))
             .select(
@@ -39,7 +42,28 @@ def expand_hierarchy(
                 (F.col("l.depth") + 1).alias("depth"),
             )
         )
+
+    level = edges.withColumn("depth", F.lit(1))
+    out = level
+    for _ in range(1, max_depth):
+        level = deeper(level)
         if level.isEmpty():
-            break
+            return out
         out = out.unionByName(level)
-    return out
+    level = deeper(level)
+    if level.isEmpty():
+        return out
+    cyclic = not (
+        out.unionByName(level)
+        .where(F.col("ancestor") == F.col("descendant"))
+        .isEmpty()
+    )
+    cause = (
+        "a cycle (a node is its own ancestor)"
+        if cyclic
+        else f"a hierarchy deeper than max_depth={max_depth}"
+    )
+    raise ValueError(
+        f"expand_hierarchy: level {max_depth + 1} is non-empty — {cause}; "
+        "the closure would be partial"
+    )

@@ -910,7 +910,24 @@ def build_ivfpq_res_index(
     construction, and encoding — only training is sampled. Bit-identity
     with the distributed trainer is gated in
     tests/test_ivf_merge.py::test_ivfpq_res_train_backends_bit_identical."""
-    dim = _probe_dim(vectors, vec_col)
+    return _build_ivfpq_res_index(
+        vectors, _probe_dim(vectors, vec_col), id_col, vec_col, n_cells, m, k,
+        max_train, train_backend,
+    )
+
+
+def _build_ivfpq_res_index(
+    vectors: DataFrame,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    n_cells: int,
+    m: int,
+    k: int,
+    max_train: int | None,
+    train_backend: str,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """``build_ivfpq_res_index`` for a caller that already probed ``dim``."""
     assignments, centroids = _coarse_quantizer(
         vectors, id_col, vec_col, n_cells, max_train, train_backend
     )
@@ -1121,9 +1138,8 @@ def ivfpq_residual_search(
     max_train) runs both Lloyd's loops in numpy over the one collected
     sample — the FAISS deployment shape; see build_ivfpq_res_index."""
     dim = _probe_dim(vectors, vec_col)
-    coded, centroids, anchors, codebooks = build_ivfpq_res_index(
-        vectors, id_col, vec_col, n_cells=n_cells, m=m, k=k,
-        max_train=max_train, train_backend=train_backend,
+    coded, centroids, anchors, codebooks = _build_ivfpq_res_index(
+        vectors, dim, id_col, vec_col, n_cells, m, k, max_train, train_backend
     )
     probed = _probe_cells(queries, centroids, id_col, vec_col, n_probe)
     return _adc_stages(

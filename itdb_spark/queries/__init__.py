@@ -15,6 +15,10 @@ two (row count + schema + order-insensitive value hash), so:
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -41,6 +45,25 @@ class Query:
 
 
 REGISTRY: dict[str, Query] = {}
+
+_BUILT: dict[tuple[str, str], str] = {}
+
+
+def built_once(prefix: str, sf_dir: str, build: Callable[[str], str]) -> str:
+    """Per-process memoized scratch build (persisted indexes, embedded
+    databases): the first call for ``(prefix, abspath(sf_dir))`` makes a
+    private ``mkdtemp`` dir (unique, mode 0700 — a fixed /tmp path is
+    pre-creatable by another local user and races concurrent
+    sessions), registers its removal at interpreter exit (returned
+    DataFrames read the path lazily) and returns ``build(dir)``; later
+    calls return that same value, so a long session holds one copy per
+    corpus instead of one per call."""
+    key = (prefix, os.path.abspath(sf_dir))
+    if key not in _BUILT:
+        d = tempfile.mkdtemp(prefix=prefix)
+        atexit.register(shutil.rmtree, d, True)
+        _BUILT[key] = build(d)
+    return _BUILT[key]
 
 
 def register(

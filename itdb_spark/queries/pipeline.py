@@ -42,7 +42,7 @@ from itdb_spark.operators.similarity import (
     lsh_candidate_ctes,
     lsh_knn,
 )
-from itdb_spark.queries import register
+from itdb_spark.queries import built_once, register
 
 # --- shared derived corpus ---------------------------------------------------
 
@@ -135,6 +135,21 @@ def _minhash_bands_ctes() -> str:
     bands AS (
       {bands}
     )"""
+
+
+def _band_hits_oracle(bound: int) -> str:
+    """(doc_id, n_hit_bands) oracle of the band-collision screens: batch
+    docs (doc % 300000 >= ``bound``) count their distinct bands that hit
+    a bucket key of the index docs (doc % 300000 < ``bound``)."""
+    return f"""
+    WITH {_minhash_bands_ctes()}
+    SELECT i.doc AS doc_id, CAST(count(DISTINCT i.band) AS BIGINT) AS n_hit_bands
+    FROM bands i
+    JOIN (SELECT DISTINCT band, band_hash FROM bands WHERE doc % 300000 < {bound}) e
+      ON i.band = e.band AND i.band_hash = e.band_hash
+    WHERE i.doc % 300000 >= {bound}
+    GROUP BY 1
+    """
 
 
 def _minhash_oracle() -> str:
@@ -244,14 +259,8 @@ def _dedup_jaccard_impl(
     spark: SparkSession, sf_dir: str, hash_fn: str
 ) -> DataFrame:
     c = corpus(spark, sf_dir)
-    # r15: verification builds its per-doc shingle arrays IN-ROW
-    # (ngram_jaccard_pairs' self-built path — shingle_set_col, no explode),
-    # so the candidate stage is the explode's ONLY consumer and the shared
-    # shingle cache became pure overhead (population + unpersist per run
-    # for a single reader) — dropped; minhash_candidates builds its own
-    # shingle_frame exactly as dedup-minhash does. hash_fn only changes
-    # the candidate buckets (verification joins on xxhash64 keys either
-    # way).
+    # hash_fn only changes the candidate buckets (verification
+    # intersects xxhash64 shingle arrays either way)
     cands = minhash_candidates(c, "doc_id", "text", hash_fn=hash_fn)
     return ngram_jaccard_pairs(c, "doc_id", "text", candidates=cands)
 
@@ -481,9 +490,6 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_knn(spark, emb, queries, k=5, n_cells=8, n_probe=3)
 
 
-_IVF_PERSIST_INDEX_CACHE: dict[str, str] = {}
-
-
 @register(
     "sim-knn-ivf-persist",
     oracle=_ivf_oracle(),
@@ -511,34 +517,20 @@ def sim_knn_ivf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_persist_root(spark: SparkSession, sf_dir: str) -> str:
-    """Memoized per-sf_dir persisted IVF index path. Private mkdtemp dir
-    (unique, mode 0700 — a fixed world-predictable /tmp path is
-    pre-creatable/symlinkable by another local user and races concurrent
-    sessions; round-8 ADVICE), MEMOIZED per sf_dir like the ivfpq-res
-    cache: the build is deterministic per corpus, and without the memo a
-    long-lived session accumulates one index copy on disk per invocation
-    until interpreter exit (round-9 ADVICE). Cleanup stays deferred to
-    exit because returned DataFrames read the path lazily. Shared by
-    sim-knn-ivf-persist and the round-12 streaming server twin
-    stream-knn-live."""
-    import atexit
+    """Persisted IVF index path, built once per process and sf_dir
+    (``built_once``). Shared by sim-knn-ivf-persist and its streaming
+    server twin stream-knn-live."""
     import os
-    import shutil
-    import tempfile
 
     from itdb_spark.operators.ivf import build_ivf_index, persist_ivf_index
 
-    key = os.path.abspath(sf_dir)
-    if key not in _IVF_PERSIST_INDEX_CACHE:
-        emb = Tables(spark, sf_dir).embeddings
-        assignments, centroids = build_ivf_index(emb, k=8)
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="itdb_spark_ivf_persist_"), "index"
-        )
-        atexit.register(shutil.rmtree, os.path.dirname(path), True)
+    def build(d: str) -> str:
+        path = os.path.join(d, "index")
+        assignments, centroids = build_ivf_index(Tables(spark, sf_dir).embeddings, k=8)
         persist_ivf_index(assignments, centroids, path)
-        _IVF_PERSIST_INDEX_CACHE[key] = path
-    return _IVF_PERSIST_INDEX_CACHE[key]
+        return path
+
+    return built_once("itdb_spark_ivf_persist_", sf_dir, build)
 
 
 @register(
@@ -1715,15 +1707,7 @@ def _dedup_incremental_impl(
 
 @register(
     "dedup-incremental",
-    oracle=f"""
-    WITH {_minhash_bands_ctes()}
-    SELECT i.doc AS doc_id, CAST(count(DISTINCT i.band) AS BIGINT) AS n_hit_bands
-    FROM bands i
-    JOIN (SELECT DISTINCT band, band_hash FROM bands WHERE doc % 300000 < 100000) e
-      ON i.band = e.band AND i.band_hash = e.band_hash
-    WHERE i.doc % 300000 >= 100000
-    GROUP BY 1
-    """,
+    oracle=_band_hits_oracle(100000),
     bench=True,
     bench_spark=lambda spark, sf_dir: _dedup_incremental_impl(
         spark, sf_dir, "xxhash64"
@@ -1750,22 +1734,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup_incremental_impl(spark, sf_dir, "portable")
 
 
-# Memoized per-(sf_dir, hash_fn) persisted band index for the
-# incremental-dedup serving twin — the ivfpq-res/ivf-persist cache
-# discipline: built ONCE per process in a private mkdtemp dir (round-8
-# ADVICE: fixed /tmp paths are pre-creatable; round-9 ADVICE: memoize
-# or a long session accumulates an index copy per call), published via
-# the versioned manifest kernel, swept at interpreter exit. bench.py's
-# warmup pays the build; the timed runs measure the amortized
-# increment-only probe, the production serving shape.
-_BAND_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _band_index_root(spark: SparkSession, sf_dir: str, hash_fn: str) -> str:
-    import atexit
+    """Persisted band index of the incremental-dedup serving twin, built
+    once per process, sf_dir and hash_fn (``built_once``): the index is
+    the base + near-variant replicas (doc_id % 300000 < 200000), so the
+    batch fraction is constant at every SF."""
     import os
-    import shutil
-    import tempfile
 
     from itdb_spark.operators.dedup import (
         minhash_bands,
@@ -1773,26 +1747,18 @@ def _band_index_root(spark: SparkSession, sf_dir: str, hash_fn: str) -> str:
         persist_band_index,
     )
 
-    key = (os.path.abspath(sf_dir), hash_fn)
-    if key not in _BAND_INDEX_CACHE:
-        # replica-keyed split (round 12, VERDICT r11 #3): index = base +
-        # near-variant replicas, batch = the exact-copy replica — keyed
-        # on (doc_id % 300000) so the batch fraction is constant by
-        # construction at every SF (identical to the old doc_id < 200000
-        # at grading SFs, where base ids stay below 100000)
+    def build(d: str) -> str:
+        root = os.path.join(d, "index")
         idx = minhash_bands(
             minhash_signatures(
                 corpus(spark, sf_dir).where(F.col("doc_id") % 300000 < 200000),
                 "doc_id", "text", hash_fn=hash_fn,
             )
         )
-        root = os.path.join(
-            tempfile.mkdtemp(prefix="itdb_spark_band_idx_"), "index"
-        )
-        atexit.register(shutil.rmtree, os.path.dirname(root), True)
         persist_band_index(idx, root)
-        _BAND_INDEX_CACHE[key] = root
-    return _BAND_INDEX_CACHE[key]
+        return root
+
+    return built_once(f"itdb_spark_band_idx_{hash_fn}_", sf_dir, build)
 
 
 def _dedup_incr_persist_impl(
@@ -1816,15 +1782,7 @@ def _dedup_incr_persist_impl(
 
 @register(
     "dedup-incr-persist",
-    oracle=f"""
-    WITH {_minhash_bands_ctes()}
-    SELECT i.doc AS doc_id, CAST(count(DISTINCT i.band) AS BIGINT) AS n_hit_bands
-    FROM bands i
-    JOIN (SELECT DISTINCT band, band_hash FROM bands WHERE doc % 300000 < 200000) e
-      ON i.band = e.band AND i.band_hash = e.band_hash
-    WHERE i.doc % 300000 >= 200000
-    GROUP BY 1
-    """,
+    oracle=_band_hits_oracle(200000),
     bench=True,
     bench_spark=lambda spark, sf_dir: _dedup_incr_persist_impl(
         spark, sf_dir, "xxhash64"
@@ -3460,7 +3418,6 @@ def _srcsim_frames(spark: SparkSession, sf_dir: str):
     # ONE hashed-shingle frame for all four consumers (sig, sizes, both
     # sides of the inter self-join) — the corpus-wide explode+distinct is
     # the dominant scan; cached here, released via materialized() below
-    # (shingle_frame's own "build it ONCE and cache" discipline)
     hashed = (
         t.documents.select("source", F.explode(word_shingles("text")).alias("w"))
         .select("source", (portable_hash64(F.col("w")) % HASH_PRIME).alias("h"))
@@ -3793,22 +3750,17 @@ def agg_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     "'measure, don't guess' applied to the dedup pipeline itself: "
     "re-tune NUM_PERM/NUM_BANDS and this query states the new "
     "precision/recall next to the one CORRECTNESS history recorded. "
-    "One shared shingle explode feeds candidates, sizes, and "
-    "verification (released before return); per-pair work is confined "
-    "to the eval pairs exactly like dedup-jaccard's candidate path.",
+    "Per-pair work is confined to the eval pairs exactly like "
+    "dedup-jaccard's candidate path: sizes and intersections come from "
+    "the in-row shingle-set arrays (doc_shingle_sets).",
 )
 def pipe_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from itdb_spark.operators.dedup import shingle_frame
+    from itdb_spark.operators.dedup import doc_shingle_sets
 
     c = corpus(spark, sf_dir)
-    sh = shingle_frame(c, "doc_id", "text").cache()
     # cached: consumed by evalp AND the flags marker join — uncached, the
-    # whole signature+banding pipeline would execute twice (code review)
-    cand = (
-        minhash_candidates(c, "doc_id", "text", shingles=sh)
-        .select("id1", "id2")
-        .cache()
-    )
+    # whole signature+banding pipeline would execute twice
+    cand = minhash_candidates(c, "doc_id", "text").select("id1", "id2").cache()
     base_ids = Tables(spark, sf_dir).documents.select("doc_id")
     planted = (
         base_ids.select(
@@ -3840,13 +3792,12 @@ def pipe_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("in_planted", F.lit(0)).alias("in_planted"),
         )
     )
-    # per-doc shingle SETS as arrays: sizes AND intersections come from
-    # the same frame (the array_intersect verify shape dedup-jaccard
-    # measured 2.3x faster than the exploded join)
-    arrs = sh.groupBy("doc").agg(F.collect_list("w").alias("ws"))
+    # per-doc shingle SETS as in-row arrays: sizes AND intersections
+    # come from the same frame (ngram_jaccard_pairs' verify shape)
+    arrs = doc_shingle_sets(c, "doc_id", "text")
     judged = (
-        flags.join(arrs.select(F.col("doc").alias("id1"), F.col("ws").alias("ws1")), "id1")
-        .join(arrs.select(F.col("doc").alias("id2"), F.col("ws").alias("ws2")), "id2")
+        flags.join(arrs.select(F.col("doc").alias("id1"), F.col("ts").alias("ws1")), "id1")
+        .join(arrs.select(F.col("doc").alias("id2"), F.col("ts").alias("ws2")), "id2")
         .select(
             "in_cand",
             "in_planted",
@@ -3876,7 +3827,7 @@ def pipe_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from itdb_spark.plans.library import materialized
 
-    return materialized(out, sh, cand)
+    return materialized(out, cand)
 
 
 def _pagerank_oracle(iters: int = 3) -> str:
@@ -4891,16 +4842,6 @@ def sim_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_search(emb, queries, top_k=10)
 
 
-# Memoized per-(sf_dir) persisted residual index for the bench twin:
-# built ONCE per process (driver-trained, mkdtemp-private), searched on
-# every subsequent call — so bench.py's warmup pays the build and the
-# timed runs measure the AMORTIZED search cost, the production serving
-# shape (an index is built once and served many times; rebuilding the
-# quantizer per request is the grading harness's statelessness, not a
-# deployment design). Cleaned at interpreter exit.
-_IVFPQ_RES_INDEX_CACHE: dict[str, str] = {}
-
-
 def _sim_knn_ivfpq_res_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deploy twin for the bench ONLY (round-8 VERDICT #2): the residual
     search with BOTH deploy levers its raw sibling already benches —
@@ -4910,35 +4851,27 @@ def _sim_knn_ivfpq_res_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-partitioned index (FAISS index-reuse shape; pruning + bit-
     identity gated in test_ivfpq_res_persisted_search_prunes_partitions).
     CORRECTNESS still grades the full-corpus in-session form whose
-    DuckDB oracle replays without a sample CTE."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    DuckDB oracle replays without a sample CTE. The index is built once
+    per process (``built_once``), so the timed runs measure the
+    amortized search."""
     from itdb_spark.operators.pq import (
         build_ivfpq_res_index,
         ivfpq_res_search_persisted,
         persist_ivfpq_res_index,
     )
 
-    t = Tables(spark, sf_dir)
-    emb = t.embeddings
-    key = os.path.abspath(sf_dir)
-    if key not in _IVFPQ_RES_INDEX_CACHE:
+    emb = Tables(spark, sf_dir).embeddings
+
+    def build(d: str) -> str:
         coded, centroids, anchors, codebooks = build_ivfpq_res_index(
             emb, max_train=1024, train_backend="driver"
         )
-        root = tempfile.mkdtemp(prefix="itdb_spark_ivfpq_res_")
-        atexit.register(shutil.rmtree, root, True)
-        persist_ivfpq_res_index(
-            coded, centroids, anchors, codebooks, f"{root}/index"
-        )
-        _IVFPQ_RES_INDEX_CACHE[key] = f"{root}/index"
+        persist_ivfpq_res_index(coded, centroids, anchors, codebooks, f"{d}/index")
+        return f"{d}/index"
+
+    root = built_once("itdb_spark_ivfpq_res_", sf_dir, build)
     queries = emb.where(F.col("vec_id") < 5)
-    return ivfpq_res_search_persisted(
-        spark, _IVFPQ_RES_INDEX_CACHE[key], emb, queries, top_k=10
-    )
+    return ivfpq_res_search_persisted(spark, root, emb, queries, top_k=10)
 
 
 @register(
@@ -7790,30 +7723,20 @@ def dedup_contain_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_join_incremental(c, "doc_id", "text", "is_new")
 
 
-# Memoized per-sf_dir persisted containment index — the _band_index_root
-# discipline (private mkdtemp, atexit sweep, one build per process;
-# bench warmup pays it, timed runs measure the amortized probe).
-_CONTAIN_INDEX_CACHE: dict[str, str] = {}
-
-
 def _contain_index_root(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
+    """Persisted containment index of the old docs (doc_id % 5 != 4),
+    built once per process and sf_dir (``built_once``)."""
     import os
-    import shutil
-    import tempfile
 
     from itdb_spark.operators.dedup import persist_containment_index
 
-    key = os.path.abspath(sf_dir)
-    if key not in _CONTAIN_INDEX_CACHE:
+    def build(d: str) -> str:
+        root = os.path.join(d, "index")
         old = corpus(spark, sf_dir).where(F.col("doc_id") % 5 != 4)
-        root = os.path.join(
-            tempfile.mkdtemp(prefix="itdb_spark_contain_idx_"), "index"
-        )
-        atexit.register(shutil.rmtree, os.path.dirname(root), True)
         persist_containment_index(old, "doc_id", "text", root)
-        _CONTAIN_INDEX_CACHE[key] = root
-    return _CONTAIN_INDEX_CACHE[key]
+        return root
+
+    return built_once("itdb_spark_contain_idx_", sf_dir, build)
 
 
 def _dedup_contain_incr_persist_impl(

@@ -22,8 +22,8 @@ from itdb_spark.queries import register
 from itdb_spark.queries.pipeline import (
     _BLOOM_ORACLE,
     _SHINGLE_CTES,
+    _band_hits_oracle,
     _ivf_oracle,
-    _minhash_bands_ctes,
     ORACLE_CORPUS,
 )
 from itdb_spark.streaming.events import (
@@ -801,18 +801,10 @@ def stream_contain_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream-minhash-ingest-live",
-    # dedup-incremental's oracle VERBATIM: every batch doc's hit set is
+    # dedup-incr-persist's oracle: every batch doc's hit set is
     # provably arrival-order-invariant (docstring), so the live union
     # equals the one-shot batch-vs-index result
-    oracle=f"""
-    WITH {_minhash_bands_ctes()}
-    SELECT i.doc AS doc_id, CAST(count(DISTINCT i.band) AS BIGINT) AS n_hit_bands
-    FROM bands i
-    JOIN (SELECT DISTINCT band, band_hash FROM bands WHERE doc % 300000 < 200000) e
-      ON i.band = e.band AND i.band_hash = e.band_hash
-    WHERE i.doc % 300000 >= 200000
-    GROUP BY 1
-    """,
+    oracle=_band_hits_oracle(200000),
     doc="STREAMING MinHash ingest loop (round 13) — completes the "
     "ingest-loop trilogy (containment r12, ANN r13): the corpus band "
     "index (originals + near-dups, doc % 300000 < 200000) publishes "

@@ -1,6 +1,5 @@
 """Containment family edge cases: every head against the pure-Python
-exhaustive engine on one small edge corpus, and the pre-folded shingle
-input of ngram_jaccard_pairs."""
+exhaustive engine on one small edge corpus."""
 
 from __future__ import annotations
 
@@ -90,34 +89,3 @@ def test_every_containment_head_matches_python_on_edge_corpus(spark, tmp_path):
     append_containment_index(spark, chain, _docs(spark, {1}), "doc_id", "text")
     probe2 = containment_probe_persisted(spark, chain, _docs(spark, {2}), "doc_id", "text")
     assert _got(probe2) == _expected(every, {2})
-
-
-def test_ngram_jaccard_prefolded_shingles_match(spark):
-    """A string shingle_frame and its xxhash64-folded twin give the same
-    rows in candidates and exhaustive mode; the folded frame is not
-    hashed a second time."""
-    from itdb_spark.operators.dedup import _folded, ngram_jaccard_pairs, shingle_frame
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog today"),
-            (2, "the quick brown fox jumps over the lazy dog today"),
-            (3, "the quick brown fox jumps over the lazy cat today"),
-            (4, "completely different text with no shared shingles at all"),
-            (5, "short doc"),
-            (6, None),
-        ],
-        "doc_id long, text string",
-    )
-    sh = shingle_frame(docs, "doc_id", "text")
-    folded = sh.select("doc", F.xxhash64("w").alias("w"))
-    assert sorted(_folded(folded).collect()) == sorted(folded.collect())
-    ids = docs.select(F.col("doc_id").alias("id1"))
-    cands = ids.crossJoin(ids.select(F.col("id1").alias("id2"))).where(
-        F.col("id1") < F.col("id2")
-    )
-    for kw in ({"candidates": cands}, {}):
-        a = ngram_jaccard_pairs(docs, "doc_id", "text", 0.3, shingles=sh, **kw)
-        b = ngram_jaccard_pairs(docs, "doc_id", "text", 0.3, shingles=folded, **kw)
-        assert a.count() > 0
-        assert sorted(a.collect()) == sorted(b.collect())

@@ -33,6 +33,41 @@ def test_hierarchy_expansion(spark, playlists):
     assert all(r.ancestor != r.descendant for r in rows)
 
 
+def _chain(spark, links: int):
+    """(id, parent) frame of a single chain root → ... with ``links`` edges."""
+    rows = [("n0", None)] + [(f"n{i}", f"n{i - 1}") for i in range(1, links + 1)]
+    return spark.createDataFrame(rows, "id string, parent string")
+
+
+def test_hierarchy_exact_max_depth_returns(spark):
+    from itdb_spark.operators.hierarchy import expand_hierarchy
+
+    rows = expand_hierarchy(_chain(spark, 3), "id", "parent", max_depth=3).collect()
+    # a 3-link chain has 3 + 2 + 1 (ancestor, descendant) pairs
+    assert sorted(r.depth for r in rows) == [1, 1, 1, 2, 2, 3]
+
+
+def test_hierarchy_deeper_than_max_depth_raises(spark):
+    import pytest
+
+    from itdb_spark.operators.hierarchy import expand_hierarchy
+
+    with pytest.raises(ValueError, match="deeper than max_depth=3"):
+        expand_hierarchy(_chain(spark, 4), "id", "parent", max_depth=3)
+
+
+def test_hierarchy_cycle_raises(spark):
+    import pytest
+
+    from itdb_spark.operators.hierarchy import expand_hierarchy
+
+    two_cycle = spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("c", None)], "id string, parent string"
+    )
+    with pytest.raises(ValueError, match="cycle"):
+        expand_hierarchy(two_cycle, "id", "parent", max_depth=5)
+
+
 def test_playlist_stats_equivalence(spark, tracks, playlist_tracks):
     """Materialization ≡ re-aggregation (agg-pl-stats vs agg-pl-restat,
     itdb2html.py:478-493) and ≡ direct library-wide histogram."""
@@ -282,31 +317,6 @@ def test_decode_jpeg_padding_and_terminators():
     assert decode_image_header(b"\xff\xd8" + b"\xff\xe0\x00\x01" + sof0) is None
     # truncated SOF payload (length field promises more than exists)
     assert decode_image_header(b"\xff\xd8" + sof0[:7]) is None
-
-
-def test_band_structs_matches_exploded_signature_path(spark):
-    """The narrow per-row band expression (band_structs) must produce
-    exactly the (doc, band, band_hash) table the exploded
-    shingle→signature→groupBy path produces — same hashes, same buckets."""
-    from pyspark.sql import functions as F
-
-    from itdb_spark.operators.dedup import band_structs, minhash_bands, minhash_signatures
-    from tests.conftest import SF_DIR
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text").limit(200)
-    narrow = {
-        (r.doc, r.band, r.band_hash)
-        for r in docs.select(
-            F.col("doc_id").alias("doc"), F.explode(band_structs("text")).alias("bb")
-        )
-        .select("doc", "bb.band", "bb.band_hash")
-        .collect()
-    }
-    exploded = {
-        (r.doc, r.band, r.band_hash)
-        for r in minhash_bands(minhash_signatures(docs, "doc_id", "text")).collect()
-    }
-    assert narrow == exploded and len(narrow) == 200 * 4
 
 
 def test_fswalk_synth_tree_reconciles_stale_files(tmp_path):

@@ -14,9 +14,11 @@ JVMs produced a single wrong-valued pipe-dedup-eval row that could not
 be reproduced in four targeted sequential/isolated attempts (including
 the exact preceding query sequences) and vanished in a clean full-sweep
 re-run (253/253). The registry itself is deterministic (no rand, no
-order-dependent aggregates feeding values); the suspect surface is the
+order-dependent aggregates feeding values); the suspect surface was the
 shared-session cache/unpersist race among same-plan cached frames under
-memory pressure. Keep sweeps off a loaded machine.
+memory pressure (pipe-dedup-eval no longer caches a shared shingle
+frame; it still caches its candidate pairs). Keep sweeps off a loaded
+machine.
 """
 
 from __future__ import annotations

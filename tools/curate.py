@@ -56,7 +56,6 @@ def main(argv: list[str] | None = None) -> dict:
         minhash_candidates,
         ngram_jaccard_pairs,
         remove_duplicate_spans,
-        shingle_frame,
     )
     from itdb_spark.operators.packing import pack_chunks
     from itdb_spark.plans.library import ranged_row_number
@@ -127,14 +126,11 @@ def main(argv: list[str] | None = None) -> dict:
     report["stages"]["exact_dedup"] = {"rows": n1, "removed": n0 - n1}
 
     # 3. near dedup: LSH -> verify -> CC -> keep component min
-    sh = shingle_frame(docs1, "doc_id", "text").cache()
-    cands = minhash_candidates(docs1, "doc_id", "text", shingles=sh)
+    cands = minhash_candidates(docs1, "doc_id", "text")
     verified = ngram_jaccard_pairs(
-        docs1, "doc_id", "text", threshold=args.jaccard,
-        candidates=cands, shingles=sh,
+        docs1, "doc_id", "text", threshold=args.jaccard, candidates=cands
     )
     comp = connected_components(verified.select("id1", "id2"))
-    sh.unpersist()  # verified is materialized by ngram_jaccard_pairs
     keepers = elect_keepers(comp).select(F.col("keeper").alias("doc_id"))
     members = comp.select(F.col("node").alias("doc_id"))
     docs2 = (
