@@ -103,9 +103,14 @@ def connected_components(
     # storage) or reliable checkpoint() (HDFS/S3) depending on whether the
     # session has a checkpoint dir configured — set one on clusters whose
     # executors can be reclaimed mid-job (SCALE.md "checkpoint posture").
-    # LAZY checkpoints: the round's single count() action both materializes
-    # the checkpoint and returns the convergence signal — one job per round
-    # instead of eager-checkpoint + count (two full passes).
+    # Lazy checkpoints (eager=False) are NOT free under AQE: the
+    # localCheckpoint call itself finalizes the adaptive plan, so every
+    # shuffle map stage of the round (the neighbor join's and groupBy's
+    # exchanges) runs as its own job right there, during construction.
+    # Only the final result stage waits for the round's count(), whose
+    # jobs then write the checkpoint blocks and return the convergence
+    # signal. What laziness saves is a second pass over the result
+    # stage, not the round's shuffle-stage jobs.
     labels = truncate_lineage(labels, eager=False)
     rounds = 0
     for _ in range(MAX_ITER):

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from itdb_spark.plans.library import model_df
+from itdb_spark.plans.library import collect_model, model_df
 from itdb_spark.plans.library import read_parquet_pinned as _read_pinned
 
 from itdb_spark.functions.core import hash_ranked_sample, portable_hash64
@@ -51,7 +51,7 @@ def _cents_nested(centroids: DataFrame) -> DataFrame:
     plan-audit gate forbids). Driver-side fold of a k-row table — the
     coarse quantizer is broadcast-sized by definition; floats
     round-trip exactly."""
-    rows = centroids.select("centroid_id", "cvec").collect()
+    rows = collect_model(centroids.select("centroid_id", "cvec"), "centroid table")
     cents = [
         (int(r.centroid_id), [float(x) for x in r.cvec])
         for r in sorted(rows, key=lambda r: int(r.centroid_id))

@@ -61,7 +61,7 @@ from itdb_spark.operators.ivf import (
     _top_n,
     build_ivf_index,
 )
-from itdb_spark.plans.library import invalidate_pinned_schemas, model_df
+from itdb_spark.plans.library import collect_model, invalidate_pinned_schemas, model_df
 from itdb_spark.plans.library import read_parquet_pinned as _read_pinned
 from itdb_spark.plans.library import truncate_lineage
 
@@ -332,7 +332,7 @@ def _cb_nested(codebooks: DataFrame) -> DataFrame:
     every encode plan — the scale anti-pattern the plan-audit CI gate
     forbids. Floats round-trip exactly (collect → Python float → double
     is bit-preserving)."""
-    rows = codebooks.select("sub", "code", "cvec").collect()
+    rows = collect_model(codebooks.select("sub", "code", "cvec"), "codebook")
     by_sub: dict[int, list[tuple[int, list[float]]]] = {}
     for r in rows:
         by_sub.setdefault(int(r.sub), []).append(

@@ -278,6 +278,27 @@ def invalidate_pinned_schemas(path: str) -> None:
         del _PINNED_SCHEMAS[k]
 
 
+# Rows a driver-side model collect (centroids, codebooks) may bring back.
+# A model table is broadcast-sized by definition (k centroids, m·k codebook
+# entries); a larger one is a wrong input, such as a corpus passed where a
+# model was expected, and must fail instead of filling the driver.
+MODEL_ROWS_MAX = 1 << 16
+
+
+def collect_model(df: DataFrame, table: str) -> list:
+    """Collect a model-sized table to the driver: at most
+    ``MODEL_ROWS_MAX + 1`` rows are fetched, and a table larger than the
+    bound raises ``ValueError`` naming it instead of being collected.
+    ``coalesce(1)`` keeps the collect one job: a bare ``limit`` over a
+    multi-partition table scans its partitions in growing rounds, one job
+    each (measured: one extra job per distributed-codebook collect on
+    sim-knn-pq)."""
+    rows = df.coalesce(1).limit(MODEL_ROWS_MAX + 1).collect()
+    if len(rows) > MODEL_ROWS_MAX:
+        raise ValueError(f"{table} has more than {MODEL_ROWS_MAX} rows (MODEL_ROWS_MAX); not a model-sized table")
+    return rows
+
+
 def model_df(spark: SparkSession, data, schema: str) -> DataFrame:
     """createDataFrame for a MODEL-sized driver-side list (centroids,
     codebooks, merge tables) as ONE slice. Plain
@@ -322,7 +343,17 @@ def truncate_lineage(df: DataFrame, *, eager: bool = True, reliable: bool | None
     blocks to executor storage — fine on local mode and on clusters with a
     stable executor set, fatal under aggressive dynamic allocation
     (SCALE.md "checkpoint posture"). Pass ``reliable=True/False`` to force
-    either path."""
+    either path.
+
+    ``eager=False`` does not make the call free. Under AQE the call
+    finalizes the adaptive plan, which runs every shuffle map stage of
+    ``df`` as its own job right away; only the final result stage waits
+    for the first action on the returned frame, which then writes the
+    checkpoint blocks. A lazy call on a join of two aggregates was
+    measured to launch 3 jobs (4-6 s cold, 4-vCPU host) and its later
+    ``count()`` 2 more. Count a lazy truncation point as its shuffle
+    stages' jobs at the call, and its result stage inside the first
+    action."""
     sc = df.sparkSession.sparkContext
     if reliable is None:
         reliable = sc.getCheckpointDir() is not None

@@ -952,3 +952,39 @@ def test_ivfpq_res_persisted_search_prunes_partitions(spark, tmp_path):
     allowed_dirs = tuple(f"/centroid_id={c}/" for c in probed_cells)
     for f in files:
         assert any(a in f for a in allowed_dirs), f
+
+
+def _oversized_model(spark, key: str, vec: str):
+    """A table one row past the model-row bound: ``key`` runs 0..bound
+    and every ``vec`` is the same 2-d vector."""
+    from itdb_spark.plans.library import MODEL_ROWS_MAX
+
+    return spark.range(MODEL_ROWS_MAX + 1).select(
+        F.col("id").alias(key), F.array(F.lit(1.0), F.lit(0.0)).alias(vec)
+    )
+
+
+def _two_vectors(spark):
+    return spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>")
+
+
+def test_ivf_oversized_centroid_table_raises(spark):
+    """A centroid table larger than the model-row bound is refused before
+    it is collected to the driver, naming the table and the bound."""
+    from itdb_spark.operators.ivf import ivf_assign_incremental
+    from itdb_spark.plans.library import MODEL_ROWS_MAX
+
+    cents = _oversized_model(spark, "centroid_id", "cvec")
+    with pytest.raises(ValueError, match=f"centroid table has more than {MODEL_ROWS_MAX} rows"):
+        ivf_assign_incremental(_two_vectors(spark), cents)
+
+
+def test_pq_missized_codebook_raises(spark):
+    """A codebook with more entries than the model-row bound (one sub,
+    bound + 1 codes) is refused before it is collected to the driver."""
+    from itdb_spark.operators.pq import pq_encode
+    from itdb_spark.plans.library import MODEL_ROWS_MAX
+
+    cb = _oversized_model(spark, "code", "cvec").select(F.lit(0).alias("sub"), "code", "cvec")
+    with pytest.raises(ValueError, match=f"codebook has more than {MODEL_ROWS_MAX} rows"):
+        pq_encode(_two_vectors(spark), cb, dim=2, m=1)
