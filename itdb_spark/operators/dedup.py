@@ -1326,20 +1326,27 @@ def append_containment_index(
     )
     sets = _kind(table, "set")
 
+    bkeys = braw.select("kh").distinct()
+
     def rehashed(rows: DataFrame) -> DataFrame:
         return rows.select(
             F.col("sid").alias("esid"), "ts", F.xxhash64("ts").alias("kh")
-        ).join(F.broadcast(braw.select("kh").distinct()), "kh")
+        ).join(F.broadcast(bkeys), "kh")
 
     if use_stored_kh and "kh" in table.columns:
         stored = sets.where(F.col("kh").isNotNull()).select(
             F.col("sid").alias("esid"), "ts", "kh"
         )
-        bkh = [r["kh"] for r in braw.select("kh").distinct().collect()]
+        # one job fetching at most one key past the bound (the
+        # collect_model idiom): a bulk batch is never collected whole
+        bkh = [
+            r["kh"]
+            for r in bkeys.coalesce(1).limit(_KH_PUSHDOWN_MAX + 1).collect()
+        ]
         if len(bkh) <= _KH_PUSHDOWN_MAX:
             matched = stored.where(F.col("kh").isin(bkh) if bkh else F.lit(False))
         else:
-            matched = stored.join(F.broadcast(braw.select("kh").distinct()), "kh")
+            matched = stored.join(F.broadcast(bkeys), "kh")
         found = matched.unionByName(rehashed(sets.where(F.col("kh").isNull())))
     else:
         found = rehashed(sets)

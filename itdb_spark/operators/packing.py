@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from itdb_spark.plans.library import ranged_cumsum
+from itdb_spark.plans.library import model_df, ranged_cumsum
 
 
 def pack_sequences(
@@ -314,20 +314,12 @@ def learn_bpe(
         state = truncate_lineage(
             state.select("c", new_syms.alias("syms")), eager=True
         )
-    schema = (
+    # a merge table is model-sized at any corpus scale
+    return model_df(
+        spark,
+        merges,
         "rank long, left_sym string, right_sym string, "
-        "merged string, pair_count long"
-    )
-    # ONE slice at the source: createDataFrame slices the list across
-    # default parallelism, so this <= n_merges-row MODEL table
-    # materialized as 32 near-empty Python tasks (0.32 s of pure
-    # scheduling at bench, r14 profile). A merge table is model-sized
-    # at any corpus scale — one partition is the right layout
-    # everywhere. NOT coalesce(1), which measured 5.5 s: the coalesced
-    # task pulls every parent slice through the Python worker
-    # SEQUENTIALLY (32 worker round-trips in one task).
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(merges, 1), schema
+        "merged string, pair_count long",
     )
 
 

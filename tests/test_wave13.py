@@ -298,6 +298,44 @@ def test_containment_append_stored_kh(spark, tmp_path):
     assert emitted(root_c) == emitted(root_a)
 
 
+def test_containment_append_kh_bound_branches_publish_identical_rows(
+    spark, tmp_path, monkeypatch
+):
+    """The batch-key collect is bounded at _KH_PUSHDOWN_MAX + 1 rows; a
+    batch past the bound takes the broadcast join on the stored kh
+    instead of the literal IN filter. Both branches must publish the
+    same delta rows."""
+    from itdb_spark.operators import dedup
+    from itdb_spark.sinks.versioned import read_current
+
+    docs = spark.createDataFrame(
+        [
+            (i, " ".join(f"tok{j}" for j in range(i % 4, i % 4 + 12)))
+            for i in range(12)
+        ],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [
+            (100, " ".join(f"tok{j}" for j in range(0, 12))),  # dup of doc 0/4/8
+            (101, "entirely novel words " + " ".join(f"n{j}" for j in range(10))),
+            (102, "other novel words " + " ".join(f"m{j}" for j in range(10))),
+        ],
+        "doc_id long, text string",
+    )
+
+    def published(root):
+        dedup.persist_containment_index(docs, "doc_id", "text", root)
+        dedup.append_containment_index(spark, root, batch, "doc_id", "text")
+        return sorted(repr(tuple(r)) for r in read_current(spark, root).collect())
+
+    in_filter = published(str(tmp_path / "in"))
+    monkeypatch.setattr(dedup, "_KH_PUSHDOWN_MAX", 1)
+    broadcast = published(str(tmp_path / "bc"))
+    assert in_filter == broadcast
+    assert any("'member'" in r for r in in_filter)
+
+
 def test_band_ingest_loop_pieces(spark, tmp_path):
     """stream-minhash-ingest-live's machinery, triangulated: (a) a
     tagged append replayed with the same tag is a no-op (the tag rides

@@ -5,6 +5,7 @@ kernel form, and the pinned-reader / index-meta cache invalidation the
 r14 ADVICE asked for. Every rewrite must be row-identical to the form
 it replaced, including the zero-vector and exact-tie corners."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -224,6 +225,45 @@ def test_read_parquet_pinned_abspath_and_invalidation(spark, tmp_path):
         F.col("id").alias("a"), F.lit("x").alias("b")
     ).write.mode("overwrite").parquet(p)
     assert set(read_parquet_pinned(spark, p).columns) == {"a", "b"}
+
+
+@pytest.mark.parametrize(
+    "schema,rows",
+    [
+        (
+            "rank long, left_sym string, right_sym string, "
+            "merged string, pair_count long",
+            [(1, "a", "b", "ab", 7), (2, None, "c", None, None), (3, "é", "\x01", "é\x01", 2)],
+        ),
+        (
+            "centroid_id long, cvec array<double>",
+            [(0, [0.5, -1.0]), (1, [float("nan"), 0.0]), (2, None), (3, [None, 1e-300])],
+        ),
+        (
+            "sub int, code int, cvec array<double>",
+            [(0, 0, [1.0]), (0, 1, [float("nan")]), (1, 0, None)],
+        ),
+        (
+            "cb array<struct<sub:int,entries:array<struct<code:int,cvec:array<double>>>>>",
+            [([(0, [(0, [0.25, float("nan")]), (1, None)]), (1, [])],), (None,)],
+        ),
+        ("centroid_id long, cvec array<double>", []),
+    ],
+    ids=["merge-table", "centroids", "codebook", "nested-codebook", "empty"],
+)
+def test_model_df_local_relation_matches_parallelize(spark, schema, rows):
+    """model_df builds its table in the JVM (a LocalRelation leaf, no
+    Python worker behind its scans) with exactly the rows the one-slice
+    parallelize form gave, NULL and NaN values included."""
+    from itdb_spark.plans.library import model_df
+
+    df = model_df(spark, rows, schema)
+    plan = df._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    old = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    assert df.schema == old.schema
+    assert repr(df.collect()) == repr(old.collect())
+    assert repr(df.orderBy(*df.columns).collect()) == repr(old.orderBy(*old.columns).collect())
 
 
 def test_band_collision_onepass_null_keys_match_join_form(spark):

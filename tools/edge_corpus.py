@@ -148,7 +148,14 @@ EDGE_EMBEDDINGS_SQL = """
 
 def build_edge_dir(src: str, dst: str) -> str:
     """Copy every table from src; rebuild documents.parquet with the
-    degenerate rows appended. Deterministic — same src → same dst."""
+    degenerate rows appended. Deterministic — same src → same dst.
+
+    The tables are rewritten in place, so the schemas this process
+    pinned for them (catalog.load_table reads through
+    read_parquet_pinned) are dropped first."""
+    from itdb_spark.plans.library import invalidate_pinned_schemas
+
+    invalidate_pinned_schemas(dst)
     os.makedirs(dst, exist_ok=True)
     synth = ("documents.parquet", "events.parquet", "embeddings.parquet")
     for f in glob.glob(os.path.join(src, "*.parquet")):
