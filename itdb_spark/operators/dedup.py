@@ -1046,7 +1046,8 @@ def band_collision_counts_onepass(
 def persist_band_index(bands: DataFrame, root: str) -> str:
     """Publish the corpus LSH band table (doc, band, band_hash) as a
     versioned on-disk index — the build-once/probe-many serving shape
-    the ANN family already has (persist_ivf_index): at 100 TB the
+    of the ANN indexes (persist_ivf_index and persist_ivfpq_res_index
+    publish through the same versioned kernel): at 100 TB the
     corpus-side signatures are computed ONCE at ingest and every
     subsequent batch probes the persisted table instead of re-shingling
     the whole corpus (the rebuild form's per-call cost, linear in the

@@ -64,12 +64,13 @@ from itdb_spark.operators.ivf import (
 from itdb_spark.plans.library import collect_model, invalidate_pinned_schemas, model_df
 from itdb_spark.plans.library import read_parquet_pinned as _read_pinned
 from itdb_spark.plans.library import truncate_lineage
+from itdb_spark.sinks.versioned import read_current_chain, write_version
 
 # Per-process (m, dim) memo per persisted-index path — index constants
 # read once per process like a server loading its index parameters
 # (see ivfpq_res_search_persisted). Holds two ints, never data. Keyed
-# on abspath; invalidated by persist_ivfpq_res_index so a same-path
-# rebuild cannot serve stale m/dim (r14 ADVICE).
+# on abspath; invalidated by persist_ivfpq_res_index so a root deleted
+# and rebuilt in one process cannot serve stale m/dim (r14 ADVICE).
 _INDEX_META_CACHE: dict[str, tuple[int, int]] = {}
 
 
@@ -895,7 +896,7 @@ def build_ivfpq_res_index(
     """Build the residual IVF-PQ index components: (coded, centroids,
     anchors, codebooks), where ``coded`` is the searchable payload
     (id, centroid_id, codes) — residual PQ codes co-located with their
-    cell, the frame persist_ivfpq_res_index writes partitionBy(cell).
+    cell, the frame persist_ivfpq_res_index publishes partitioned by cell.
 
     ``train_backend="driver"`` (requires max_train) is the FAISS
     deployment lever ivfpq_search also has: BOTH iterative Lloyd's
@@ -1020,26 +1021,28 @@ def persist_ivfpq_res_index(
     codebooks: DataFrame,
     path: str,
 ) -> None:
-    """Write a residual IVF-PQ index in its production layout (the
+    """Publish a residual IVF-PQ index in its production layout (the
     persist_ivf_index pattern, FAISS index-reuse shape): the code table
-    partitioned by centroid_id — an ADC scan reads ONLY probed cells'
-    files, m bytes per vector, partition pruning does the cell
-    selection at any index size — and the three small frames
+    as a sinks/versioned.py table at ``<path>/codes``, hive-partitioned
+    by centroid_id inside its immutable version dir — an ADC scan reads
+    ONLY probed cells' files, m bytes per vector, partition pruning does
+    the cell selection at any index size — and the three small frames
     (centroids / anchors / codebooks) as single broadcastable files.
 
-    Overwrites in place, so any reader state memoized for this path is
-    invalidated first (r14 ADVICE): a same-path rebuild in one driver
-    process must re-read schema and (m, dim) from the NEW index, not
-    serve the stale memo — stale m/dim would silently mis-slice query
-    subvectors."""
+    The small frames are the FROZEN quantizer: written once,
+    ``errorifexists``, BEFORE the codes publish (persist_ivf_index's
+    contract), so a re-publish over a populated root raises instead of
+    pairing new quantizer tables with old codes. Reader state memoized
+    for this path (pinned schemas, the (m, dim) memo) is dropped first,
+    for a root that was deleted and rebuilt in the same driver process:
+    stale m/dim would silently mis-slice query subvectors."""
     _INDEX_META_CACHE.pop(os.path.abspath(path), None)
     invalidate_pinned_schemas(path)
-    coded.write.mode("overwrite").partitionBy("centroid_id").parquet(
-        f"{path}/codes"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-    anchors.write.mode("overwrite").parquet(f"{path}/anchors")
-    codebooks.write.mode("overwrite").parquet(f"{path}/codebooks")
+    for name, frame in (
+        ("centroids", centroids), ("anchors", anchors), ("codebooks", codebooks)
+    ):
+        frame.write.mode("errorifexists").parquet(f"{path}/{name}")
+    write_version(coded, f"{path}/codes", partition_by=["centroid_id"])
 
 
 def ivfpq_res_search_persisted(
@@ -1091,7 +1094,7 @@ def ivfpq_res_search_persisted(
         _INDEX_META_CACHE[meta_key] = meta
     m, dim = meta
     probed = _probe_cells(queries, centroids, id_col, vec_col, n_probe)
-    coded = _in_probed_cells(_read_pinned(spark, f"{path}/codes"), probed)
+    coded = _in_probed_cells(read_current_chain(spark, f"{path}/codes"), probed)
     return _adc_stages(
         coded, probed, anchors, codebooks, vectors, queries,
         id_col, vec_col, m, dim, candidates, top_k,

@@ -271,10 +271,11 @@ _PINNED_SCHEMAS: dict[str, object] = {}
 
 
 def invalidate_pinned_schemas(path: str) -> None:
-    """Drop every memoized schema at or under ``path`` — the hook the
-    mode('overwrite') persist_* writers call (r14 ADVICE): rebuilding an
-    index at a REUSED path in one driver process would otherwise read
-    back with the stale pinned schema of the overwritten files."""
+    """Drop every memoized schema at or under ``path`` (r14 ADVICE): a
+    directory rewritten in place (``tools/edge_corpus.py``'s testdata
+    rebuild) or an index root deleted and rebuilt in one driver process
+    (the persist_* writers call it) would otherwise read back with the
+    stale pinned schema of the old files."""
     root = os.path.abspath(path)
     prefix = root + os.sep
     for k in [k for k in _PINNED_SCHEMAS if k == root or k.startswith(prefix)]:
@@ -337,8 +338,10 @@ def read_parquet_pinned(spark: SparkSession, path: str) -> DataFrame:
     pass dirs whose content is immutable by construction: a published
     version dir (the sinks/versioned.py contract: it never changes) or a
     catalog table (``catalog.load_table``; testdata is read-only by
-    TESTDATA.md's rule). Writers that DO overwrite a dir in place call
-    invalidate_pinned_schemas first."""
+    TESTDATA.md's rule). The one in-place rewriter, ``tools/edge_corpus.py``
+    (testdata, not an index), calls invalidate_pinned_schemas first; a
+    persisted index writes each of its dirs once (``errorifexists`` or a
+    new version dir) and never overwrites one."""
     key = os.path.abspath(path)
     s = _PINNED_SCHEMAS.get(key)
     if s is None:

@@ -495,11 +495,12 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_ivf_oracle(),
     doc="PERSISTED-index similarity search (round 8, VERDICT r7 #4): at "
     "100 TB a search request hits an index on disk, not one rebuilt "
-    "in-session — build → persist_ivf_index (assignments "
-    "write.partitionBy(centroid_id), centroids as one small file) → "
-    "re-read → ivf_search_persisted. The probed cell ids (bounded by "
-    "the CELL count, never the corpus) become a STATIC IN-filter on "
-    "the partitioned scan, so unprobed cells' files are never read — "
+    "in-session — build → persist_ivf_index (assignments published "
+    "as a versioned table partitioned by centroid_id, centroids as "
+    "one small file) → re-read → ivf_search_persisted. The probed "
+    "cell ids (bounded by the CELL count, never the corpus) become a "
+    "STATIC IN-filter on the partitioned scan, so unprobed cells' "
+    "files are never read — "
     "PartitionFilters + file-set proof in tests/test_ivf_merge.py::"
     "test_ivf_persisted_search_prunes_partitions. The detour through "
     "parquet is bit-exact (doubles round-trip), so the oracle is the "

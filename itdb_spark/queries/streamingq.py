@@ -899,7 +899,7 @@ def stream_minhash_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     "chain behind one atomic manifest swap (append_ivf_index), "
     "acceptance keyed on the batch id via an atomically-published tag "
     "(at-least-once replay safe) — then (b) SERVES the fixed 15-query "
-    "set against the just-published chain (ivf_search_chain: probed "
+    "set against the just-published chain (ivf_search_persisted: probed "
     "cells become partition IN-filters in EVERY chain link), and (c) "
     "runs the compaction policy (maybe_compact_chain max_links=2 — "
     "one fold happens mid-stream, layout and tags preserved). The "
@@ -915,8 +915,8 @@ def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itdb_spark.operators.ivf import (
         append_ivf_index,
         build_ivf_index,
-        ivf_search_chain,
-        persist_ivf_index_versioned,
+        ivf_search_persisted,
+        persist_ivf_index,
     )
     from itdb_spark.sinks.versioned import chain_tags, maybe_compact_chain
 
@@ -928,7 +928,7 @@ def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         root = os.path.join(work, "index")
         chain_root = os.path.join(root, "assignments")
         assignments, centroids = build_ivf_index(base, k=8)
-        persist_ivf_index_versioned(assignments, centroids, root)
+        persist_ivf_index(assignments, centroids, root)
 
         def ingest(bdf, batch_id, out):
             # accept once (the tag publishes with the delta); serve and
@@ -938,7 +938,7 @@ def stream_ann_ingest_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             if tag not in chain_tags(chain_root):
                 append_ivf_index(spark, root, bdf, tag=tag)
             # serve BETWEEN refreshes, against the just-published chain
-            ivf_search_chain(
+            ivf_search_persisted(
                 spark, root, queries, k=5, n_probe=3
             ).write.mode("overwrite").parquet(out)
             # vacuum_min_age_s=0: sole-owner loop, per-trigger readers

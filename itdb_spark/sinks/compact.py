@@ -35,7 +35,8 @@ For a table that cannot tolerate the recoverable-but-real window (or
 needs readers isolated from the swap entirely), use the versioned
 form: ``sinks/versioned.py`` publishes immutable version directories
 behind one atomically-replaced manifest line — zero crash window,
-snapshot-isolated readers, compaction as a new version.
+snapshot-isolated readers — and its ``compact_chain`` folds a table
+into a new version behind the same parity gates as this module.
 """
 
 from __future__ import annotations

@@ -20,9 +20,10 @@ entirely by never mutating data in place:
   a long-running job keeps reading ITS version even if a writer
   publishes meanwhile (snapshot isolation for free, the property the
   rename-swap can never give: it deletes the old data under readers).
-* Compaction = write_version(read_current(), ...) with the same parity
-  gates as compact_parquet; old versions remain until vacuum(keep=N)
-  — retention is an explicit policy, not a side effect of the swap.
+* Compaction is ``compact_chain``: the published chain folded into one
+  new version behind the same parity gates as compact_parquet; old
+  versions remain until vacuum(keep=N) — retention is an explicit
+  policy, not a side effect of the swap.
 
 At 100 TB the same protocol holds on any store with atomic single-key
 replace (POSIX rename, HDFS rename, S3 PUT-overwrite of the manifest
@@ -33,10 +34,13 @@ delta directory (new rows + a ``_PARENT`` marker) behind the same
 manifest swap, ``read_current_chain`` unions the immutable ancestry,
 and ``vacuum`` treats published ancestors as load-bearing. Write cost
 becomes the delta, never the table — the refresh shape an incremental
-index needs. Compaction of a long chain is just
-``write_version(read_current_chain(...), root)``: the replace version
-has no parent, terminating the chain, after which vacuum may sweep the
-old links.
+index needs. ``compact_chain`` folds a chain of any length (a replaced
+root is a one-link chain) into a replace version with no parent,
+terminating the chain, after which vacuum may sweep the old links.
+
+Both writers stage through ``_stage`` (schema gate, version naming,
+parquet write); they differ only in the ``_PARENT`` marker and in
+``append_version`` requiring a published base.
 """
 
 from __future__ import annotations
@@ -49,7 +53,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from itdb_spark.sinks.compact import _content_checksum, parquet_file_stats
+from itdb_spark.sinks.compact import _content_checksum
 
 # vacuum's default retention floor (seconds): a superseded version dir
 # younger than this is never swept, whatever ``keep`` says — it may
@@ -124,11 +128,60 @@ def chain_tags(root: str) -> set[str]:
     return out
 
 
+def _stage(
+    df: DataFrame,
+    root: str,
+    cur: str | None,
+    partition_by: list[str] | None,
+    writer_options: dict[str, str] | None,
+) -> tuple[str, str]:
+    """Write ``df`` into the next unpublished version dir after ``cur``
+    and return (version, path); publishing is the caller's manifest
+    swap. The schema gate is the table-format compatibility rule: a new
+    version may ADD columns (pinned-schema readers see the additions as
+    invisible, mergeSchema readers as NULL-backfilled history — the
+    SCALE.md evolution postures), but dropping or retyping an existing
+    column is refused BEFORE any data is written — the mistake that
+    silently breaks every downstream pinned reader."""
+    if cur is not None:
+        # gate against the CHAIN's schema, not the head dir alone: the
+        # head may be a DATA-LESS delta (an append that contributed no
+        # rows writes no parquet files), which schema inference cannot
+        # read; a chain with no data anywhere has nothing to be
+        # compatible with
+        try:
+            old = read_current_chain(df.sparkSession, root).schema.fields
+        except FileNotFoundError:
+            old = []
+        new_fields = {f.name: f.dataType for f in df.schema.fields}
+        dropped = sorted(f.name for f in old if f.name not in new_fields)
+        retyped = sorted(
+            f.name for f in old
+            if f.name in new_fields and new_fields[f.name] != f.dataType
+        )
+        if dropped or retyped:
+            raise ValueError(
+                "incompatible schema for new version "
+                f"(dropped={dropped}, retyped={retyped}); additions are fine"
+            )
+    n = int(cur[1:]) + 1 if cur else 1
+    while os.path.exists(os.path.join(root, f"v{n}")):
+        n += 1  # orphan from a crashed writer
+    version = f"v{n}"
+    path = os.path.join(root, version)
+    writer = df.write.mode("errorifexists")
+    for k, v in (writer_options or {}).items():
+        writer = writer.option(k, v)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return version, path
+
+
 def write_version(
     df: DataFrame,
     root: str,
     n_files: int | None = None,
-    enforce_schema: bool = True,
     partition_by: list[str] | None = None,
     tags=None,
     writer_options: dict[str, str] | None = None,
@@ -138,14 +191,8 @@ def write_version(
     the unpublished v{N} directory; the publish is one atomic manifest
     replace — there is NO crash window in which the table is absent or
     partial (a crash before publish leaves an orphan dir for vacuum).
-
-    ``enforce_schema`` (default on) is the table-format compatibility
-    gate: a new version may ADD columns (pinned-schema readers see the
-    additions as invisible, mergeSchema readers as NULL-backfilled
-    history — the SCALE.md evolution postures), but dropping or
-    retyping an existing column is refused BEFORE any data is written
-    — the mistake that silently breaks every downstream pinned reader
-    must be an explicit ``enforce_schema=False`` decision.
+    The version has no parent: it replaces the published chain. Schema
+    changes pass ``_stage``'s gate (additions only).
 
     ``partition_by`` lays the version directory out hive-partitioned on
     those columns (each version is still one immutable dir; the atomic
@@ -160,46 +207,10 @@ def write_version(
     min/max pruning has granularity to work with; the SCALE.md §r13
     switch-point made selectable)."""
     os.makedirs(root, exist_ok=True)
-    cur = current_version(root)
-    if enforce_schema and cur is not None:
-        # gate against the CHAIN's schema, not the head dir alone: the
-        # head may be a DATA-LESS delta (an append that contributed no
-        # rows writes no parquet files), which schema inference cannot
-        # read; a chain with no data anywhere has nothing to be
-        # compatible with
-        try:
-            old_schema = read_current_chain(df.sparkSession, root).schema
-        except FileNotFoundError:
-            old_schema = None
-        old_fields = {
-            f.name: f.dataType for f in (old_schema.fields if old_schema else [])
-        }
-        new_fields = {f.name: f.dataType for f in df.schema.fields}
-        dropped = sorted(set(old_fields) - set(new_fields))
-        retyped = sorted(
-            n for n, t in old_fields.items()
-            if n in new_fields and new_fields[n] != t
-        )
-        if dropped or retyped:
-            raise ValueError(
-                "incompatible schema for new version "
-                f"(dropped={dropped}, retyped={retyped}); additions are "
-                "fine — pass enforce_schema=False to force a break"
-            )
-    n = int(cur[1:]) + 1 if cur else 1
-    version = f"v{n}"
-    path = os.path.join(root, version)
-    while os.path.exists(path):  # orphan from a crashed writer
-        n += 1
-        version = f"v{n}"
-        path = os.path.join(root, version)
     out = df.repartition(n_files) if n_files else df
-    writer = out.write.mode("errorifexists")
-    for k, v in (writer_options or {}).items():
-        writer = writer.option(k, v)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    version, path = _stage(
+        out, root, current_version(root), partition_by, writer_options
+    )
     if tags:
         _write_tags(path, tags)
     _publish(root, version)
@@ -242,44 +253,15 @@ def append_version(
     which unions the parent chain — every directory in the chain is
     immutable, so snapshot isolation is unchanged (a pinned reader's
     chain can never mutate under it), and ``vacuum`` refuses to delete
-    any ancestor of the published chain. The schema gate matches
-    write_version's: additions fine, drops/retypes refused."""
+    any ancestor of the published chain. The schema gate is
+    write_version's (``_stage``): additions fine, drops/retypes refused."""
     cur = current_version(root)
     if cur is None:
         raise FileNotFoundError(
             f"no published version at {root!r} to append to — "
             "write_version the base first"
         )
-    # gate against the CHAIN's schema (read_current_chain skips empty
-    # deltas — the head itself may be one)
-    old_fields = {
-        f.name: f.dataType
-        for f in read_current_chain(df.sparkSession, root).schema.fields
-    }
-    new_fields = {f.name: f.dataType for f in df.schema.fields}
-    dropped = sorted(set(old_fields) - set(new_fields))
-    retyped = sorted(
-        n for n, t in old_fields.items()
-        if n in new_fields and new_fields[n] != t
-    )
-    if dropped or retyped:
-        raise ValueError(
-            "incompatible schema for appended version "
-            f"(dropped={dropped}, retyped={retyped})"
-        )
-    n = int(cur[1:]) + 1
-    version = f"v{n}"
-    path = os.path.join(root, version)
-    while os.path.exists(path):  # orphan from a crashed writer
-        n += 1
-        version = f"v{n}"
-        path = os.path.join(root, version)
-    writer = df.write.mode("errorifexists")
-    for k, v in (writer_options or {}).items():
-        writer = writer.option(k, v)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    version, path = _stage(df, root, cur, partition_by, writer_options)
     with open(os.path.join(path, _PARENT), "w") as fh:
         fh.write(cur + "\n")
         fh.flush()
@@ -390,53 +372,6 @@ def _detect_partition_cols(root: str, version: str) -> list[str]:
             return cols
         dirnames.sort()  # deterministic walk
     return []
-
-
-def compact_version(
-    spark: SparkSession, root: str, target_bytes: int = 128 * 1024 * 1024
-) -> dict:
-    """Compaction, versioned-table form: rewrite the current version
-    size-aware into a new version, publish only after the SAME parity
-    gates compact_parquet uses (row count + full content checksum) —
-    but with zero crash window and no reader disruption, because
-    nothing is renamed or deleted. Returns the compact_parquet-shaped
-    stats dict plus the new version name."""
-    v = current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no published version at {root!r}")
-    src_path = os.path.join(root, v)
-    files_before, bytes_before = _tree_parquet_stats(src_path)
-    n_out = max(1, math.ceil(bytes_before / target_bytes))
-    rows_before, ck_before = _content_checksum(spark, src_path)
-    part_cols = _detect_partition_cols(root, v)
-    src = spark.read.parquet(src_path)
-    if part_cols:
-        # keep the index layout: cluster by the partition key so the
-        # rewrite emits ~one file per partition value, not n_out each
-        src = src.repartition(n_out, *part_cols)
-        new_v = write_version(src, root, partition_by=part_cols)
-    else:
-        new_v = write_version(src, root, n_files=n_out)
-    new_path = os.path.join(root, new_v)
-    rows_after, ck_after = _content_checksum(spark, new_path)
-    if (rows_after, ck_after) != (rows_before, ck_before):
-        # roll the pointer back and drop the bad version — the old
-        # version was never touched, so this is a pure metadata undo
-        _publish(root, v)
-        shutil.rmtree(new_path)
-        raise RuntimeError(
-            "compaction parity mismatch: "
-            f"rows {rows_before} -> {rows_after}, "
-            f"checksum {ck_before} -> {ck_after}"
-        )
-    files_after, _ = _tree_parquet_stats(new_path)
-    return {
-        "files_before": files_before,
-        "bytes_before": bytes_before,
-        "files_after": files_after,
-        "rows": rows_before,
-        "version": new_v,
-    }
 
 
 def maybe_compact_chain(
@@ -575,17 +510,19 @@ def compact_chain(
     partition_by: list[str] | None = None,
     writer_options: dict[str, str] | None = None,
 ) -> dict:
-    """Fold an append chain into ONE replace version — the maintenance
-    half of the append story (a chain grows one dir per accepted batch;
-    compaction resets read amplification and makes the old links
-    vacuum-eligible, since the replace version has no parent). Publishes
-    only after the SAME parity gates compact_version uses — exploiting
-    that the content checksum is a SUM, hence exactly additive across
-    the chain's disjoint delta dirs: expected (rows, checksum) is the
-    per-dir sum, compared against the rewritten dir before the pointer
-    moves. On mismatch the pointer is rolled back and the bad dir
-    dropped — the chain was never touched. Returns the compact_version-
-    shaped stats dict plus the folded chain.
+    """Fold the published chain into ONE replace version — the one
+    compaction of this table format (a chain grows one dir per accepted
+    batch; a replaced root is a one-link chain). Compaction resets read
+    amplification and makes the old links vacuum-eligible, since the
+    replace version has no parent. Publishes only after the SAME parity
+    gates compact_parquet uses (row count + full content checksum) —
+    exploiting that the content checksum is a SUM, hence exactly
+    additive across the chain's disjoint delta dirs: expected (rows,
+    checksum) is the per-dir sum, compared against the rewritten dir
+    before the pointer moves. On mismatch the pointer is rolled back and
+    the bad dir dropped — the chain was never touched. Returns the
+    compact_parquet-shaped stats dict plus the new version name and the
+    folded chain.
 
     ``partition_by`` defaults to the NEWEST data dir's detected hive
     layout (ADVICE r12: a plain rewrite of a band-/kind-partitioned

@@ -715,7 +715,9 @@ def test_ivf_persisted_search_prunes_partitions(spark, tmp_path, form):
     pfs = _re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert any("centroid_id" in pf and " IN " in pf for pf in pfs), plan
     # ... and only probed cells' files are touched
-    idx = spark.read.parquet(f"{path}/assignments")
+    from itdb_spark.sinks.versioned import read_current_chain
+
+    idx = read_current_chain(spark, f"{path}/assignments")
     all_cells = {int(r.centroid_id) for r in idx.select("centroid_id").distinct().collect()}
     from itdb_spark.operators.ivf import _probe_cells
     probed = {
@@ -931,7 +933,9 @@ def test_ivfpq_res_persisted_search_prunes_partitions(spark, tmp_path):
     plan = one_df._jdf.queryExecution().executedPlan().toString()
     pfs = _re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert any("centroid_id" in pf and " IN " in pf for pf in pfs), plan
-    idx = spark.read.parquet(f"{path}/codes")
+    from itdb_spark.sinks.versioned import read_current_chain
+
+    idx = read_current_chain(spark, f"{path}/codes")
     all_cells = {
         int(r.centroid_id)
         for r in idx.select("centroid_id").distinct().collect()

@@ -249,9 +249,10 @@ def test_versioned_table_atomic_pointer(spark, tmp_path):
     (a crash BEFORE publish leaves the old version fully live and an
     orphan dir; simulated), (b) a pinned reader survives a concurrent
     publish (snapshot isolation the rename-swap cannot give),
-    (c) compact_version passes the same parity gates and never touches
-    the old version, (d) a corrupted rewrite rolls the pointer back,
-    (e) vacuum keeps the published version and sweeps orphans."""
+    (c) compact_chain folds a root with a tagged append on top under
+    the same parity gates, keeps every row and the tag, and never
+    touches the old versions, (d) a corrupted rewrite rolls the pointer
+    back, (e) vacuum keeps the published version and sweeps orphans."""
     import os
 
     import pytest
@@ -281,10 +282,20 @@ def test_versioned_table_atomic_pointer(spark, tmp_path):
     v4 = V.write_version(df1, root)
     assert v4 == "v4" and V.read_current(spark, root).count() == 5_000
 
-    # (c) compaction: new version, old one intact, fragmented -> few
-    stats = V.compact_version(spark, root, target_bytes=10**12)
-    assert stats["rows"] == 5_000 and stats["files_after"] == 1
-    assert stats["version"] == "v5"
+    # (c) compaction of an appended root: the fold reads the whole
+    # chain, so the delta's rows and its tag survive; old dirs intact,
+    # fragmented -> few
+    V.append_version(
+        spark.range(5_000, 5_010).selectExpr("id", "id % 11 AS g"), root,
+        tag="batch-0",
+    )
+    assert V.chain_versions(root) == ["v5", "v4"]
+    stats = V.compact_chain(spark, root, target_bytes=10**12)
+    assert stats["rows"] == 5_010 and stats["files_after"] == 1
+    assert stats["version"] == "v6" and stats["folded_chain"] == ["v5", "v4"]
+    assert V.chain_versions(root) == ["v6"]
+    assert V.read_current_chain(spark, root).count() == 5_010
+    assert V.chain_tags(root) == {"batch-0"}
     assert spark.read.parquet(os.path.join(root, "v4")).count() == 5_000
 
     # (d) corrupted rewrite: pointer rolls back, bad version dropped
@@ -292,25 +303,25 @@ def test_versioned_table_atomic_pointer(spark, tmp_path):
 
     def tamper(sp, path):
         n, ck = real(sp, path)
-        if "/v6" in path:
-            return n, "corrupted"
+        if "/v7" in path:
+            return n, str(int(ck) + 1)
         return n, ck
 
     V._content_checksum = tamper
     try:
         with pytest.raises(RuntimeError, match="parity mismatch"):
-            V.compact_version(spark, root, target_bytes=10**12)
+            V.compact_chain(spark, root, target_bytes=10**12)
     finally:
         V._content_checksum = real
-    assert V.current_version(root) == "v5"
-    assert not os.path.exists(os.path.join(root, "v6"))
-    assert V.read_current(spark, root).count() == 5_000
+    assert V.current_version(root) == "v6"
+    assert not os.path.exists(os.path.join(root, "v7"))
+    assert V.read_current(spark, root).count() == 5_010
 
     # (e) vacuum: sweeps old + orphans, never the published version
     removed = V.vacuum(root, keep=1, min_age_s=0)
-    assert V.current_version(root) == "v5"
-    assert V.read_current(spark, root).count() == 5_000
-    assert "v5" not in removed and "v3" in removed
+    assert V.current_version(root) == "v6"
+    assert V.read_current(spark, root).count() == 5_010
+    assert "v6" not in removed and "v3" in removed
 
     # (f) a version dir NEWER than the published pointer is a crashed
     # writer's orphan (data written, pointer never swapped) — vacuum
@@ -320,8 +331,8 @@ def test_versioned_table_atomic_pointer(spark, tmp_path):
     removed = V.vacuum(root, keep=1, min_age_s=0)
     assert "v9" in removed
     assert not os.path.exists(os.path.join(root, "v9"))
-    assert V.current_version(root) == "v5"
-    assert V.read_current(spark, root).count() == 5_000
+    assert V.current_version(root) == "v6"
+    assert V.read_current(spark, root).count() == 5_010
 
     # (g) lost/corrupted manifest + surviving version dirs: vacuum must
     # REFUSE (round-10 ADVICE — cur_n=-1 classified every dir as an
@@ -333,17 +344,16 @@ def test_versioned_table_atomic_pointer(spark, tmp_path):
     os.remove(manifest)
     with pytest.raises(RuntimeError, match="refusing to vacuum"):
         V.vacuum(root, keep=1, min_age_s=0)
-    assert os.path.exists(os.path.join(root, "v5"))  # nothing swept
+    assert os.path.exists(os.path.join(root, "v6"))  # nothing swept
     with open(manifest, "w") as fh:
         fh.write(saved)
-    assert V.read_current(spark, root).count() == 5_000
+    assert V.read_current(spark, root).count() == 5_010
 
 
 def test_versioned_table_schema_gate(spark, tmp_path):
     """write_version's compatibility gate: adding a column publishes
     fine (pinned readers unaffected), dropping or retyping one is
-    refused BEFORE any data is written, and enforce_schema=False is
-    the explicit override."""
+    refused BEFORE any data is written."""
     import pytest
 
     from itdb_spark.sinks import versioned as V
@@ -373,8 +383,3 @@ def test_versioned_table_schema_gate(spark, tmp_path):
     import os
 
     assert not os.path.exists(os.path.join(root, "v3"))
-    # explicit break
-    V.write_version(
-        spark.range(0, 10).selectExpr("id"), root, enforce_schema=False
-    )
-    assert V.current_version(root) == "v3"

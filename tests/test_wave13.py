@@ -471,7 +471,7 @@ def test_ivf_versioned_chain_ingest_and_serve(spark, tmp_path):
     """r12 VERDICT #5 — the ANN ingest loop's pieces, triangulated
     against the in-memory engine: (a) append_ivf_index publishes
     batch-assigned deltas whose union equals in-memory incremental
-    assignment; (b) ivf_search_chain over the chain is BIT-IDENTICAL to
+    assignment; (b) ivf_search_persisted over the chain is BIT-IDENTICAL to
     ivf_search over the unioned in-memory assignments; (c) the probed-
     cell IN filter reaches every chain link's scan as PartitionFilters;
     (d) maybe_compact_chain folds the chain keeping the centroid_id
@@ -484,8 +484,8 @@ def test_ivf_versioned_chain_ingest_and_serve(spark, tmp_path):
         build_ivf_index,
         ivf_assign_incremental,
         ivf_search,
-        ivf_search_chain,
-        persist_ivf_index_versioned,
+        ivf_search_persisted,
+        persist_ivf_index,
     )
     from itdb_spark.sinks import versioned as V
 
@@ -498,7 +498,7 @@ def test_ivf_versioned_chain_ingest_and_serve(spark, tmp_path):
     assignments, centroids = build_ivf_index(base, k=8)
     root = str(tmp_path / "ivf")
     chain_root = os.path.join(root, "assignments")
-    persist_ivf_index_versioned(assignments, centroids, root)
+    persist_ivf_index(assignments, centroids, root)
     append_ivf_index(spark, root, b0, tag="batch-0")
     append_ivf_index(spark, root, b1, tag="batch-1")
     assert V.chain_tags(chain_root) == {"batch-0", "batch-1"}
@@ -511,13 +511,13 @@ def test_ivf_versioned_chain_ingest_and_serve(spark, tmp_path):
         tuple(r)
         for r in ivf_search(merged, centroids, queries, k=5, n_probe=3).collect()
     )
-    chain_df = ivf_search_chain(spark, root, queries, k=5, n_probe=3)
+    chain_df = ivf_search_persisted(spark, root, queries, k=5, n_probe=3)
     got = sorted(tuple(r) for r in chain_df.collect())
     assert got == want and got
 
     # (c) pruning proof: one query at n_probe=2 — the IN filter must be
     # a PartitionFilter on EVERY chain link's scan (3 links here)
-    one_df = ivf_search_chain(
+    one_df = ivf_search_persisted(
         spark, root, emb.where(F.col("vec_id") == 0), k=5, n_probe=2
     )
     one_df.collect()
@@ -535,6 +535,6 @@ def test_ivf_versioned_chain_ingest_and_serve(spark, tmp_path):
     assert V.chain_tags(chain_root) == {"batch-0", "batch-1"}
     refolded = sorted(
         tuple(r)
-        for r in ivf_search_chain(spark, root, queries, k=5, n_probe=3).collect()
+        for r in ivf_search_persisted(spark, root, queries, k=5, n_probe=3).collect()
     )
     assert refolded == want

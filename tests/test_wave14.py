@@ -172,31 +172,37 @@ def test_containment_append_mixed_chain_hybrid(spark, tmp_path):
     assert members[21] == members[10]
 
 
-def test_ivf_versioned_publish_refuses_populated_root(spark, tmp_path):
-    """r13 ADVICE (low): persist_ivf_index_versioned used
-    mode('overwrite') on <root>/centroids — a re-publish over a live
-    root could pair new centroids with the still-published old
-    assignment chain (probes against a quantizer the assignments were
-    not built under: silently wrong neighbors). The frozen-quantizer
-    contract is now enforced at the write: re-publishing to a populated
-    root raises instead of overwriting."""
+@pytest.mark.parametrize("index", ["ivf", "ivfpq-res"])
+def test_ivf_versioned_publish_refuses_populated_root(spark, tmp_path, index):
+    """r13 ADVICE (low): a persist that overwrote <root>/centroids could
+    pair new centroids with the still-published old assignment (or code)
+    chain — probes against a quantizer the index was not built under:
+    silently wrong neighbors. Both persisted ANN indexes publish through
+    the versioned sink with a write-once quantizer, so re-publishing to
+    a populated root raises and leaves the published chain as it was."""
     import numpy as np
 
-    from itdb_spark.operators.ivf import (
-        build_ivf_index,
-        persist_ivf_index_versioned,
-    )
+    from itdb_spark.operators.ivf import build_ivf_index, persist_ivf_index
+    from itdb_spark.operators.pq import build_ivfpq_res_index, persist_ivfpq_res_index
+    from itdb_spark.sinks.versioned import current_version
 
     rng = np.random.default_rng(7)
     vecs = spark.createDataFrame(
         [(i, [float(x) for x in rng.normal(size=4)]) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
-    root = str(tmp_path / "ivf")
-    assignments, centroids = build_ivf_index(vecs, "vec_id", "embedding", k=4)
-    persist_ivf_index_versioned(assignments, centroids, root)
+    root = str(tmp_path / index)
+    if index == "ivf":
+        parts = build_ivf_index(vecs, "vec_id", "embedding", k=4)
+        persist, chain = persist_ivf_index, "assignments"
+    else:
+        parts = build_ivfpq_res_index(vecs, n_cells=4, m=2, k=2)
+        persist, chain = persist_ivfpq_res_index, "codes"
+    persist(*parts, root)
+    assert current_version(f"{root}/{chain}") == "v1"
     with pytest.raises(Exception, match="(?i)exist"):
-        persist_ivf_index_versioned(assignments, centroids, root)
+        persist(*parts, root)
+    assert current_version(f"{root}/{chain}") == "v1"
 
 
 def test_vacuum_retention_floor_protects_pinned_reader(spark, tmp_path):

@@ -165,40 +165,6 @@ def test_ivfpq_search_cell_carry_matches_id_join_rows(spark):
     assert all(r.neighbor_id in ids and r.neighbor_id != r.query_id for r in out)
 
 
-def test_persist_invalidates_pinned_reader_state(spark, tmp_path):
-    """r14 ADVICE (medium): rebuilding an index at a REUSED path in one
-    driver process must not serve stale pinned schemas or stale (m,
-    dim) — persist_ivfpq_res_index / persist_ivf_index invalidate the
-    per-process memos before overwriting."""
-    from itdb_spark.operators.pq import (
-        build_ivfpq_res_index,
-        ivfpq_res_search_persisted,
-        persist_ivfpq_res_index,
-    )
-
-    path = str(tmp_path / "idx")
-    queries = _vecs(spark).where(F.col("vec_id") == 2)
-
-    def build_and_search(m):
-        coded, cents, anchors, books = build_ivfpq_res_index(
-            _vecs(spark), n_cells=2, m=m, k=2
-        )
-        persist_ivfpq_res_index(coded, cents, anchors, books, path)
-        return ivfpq_res_search_persisted(
-            spark, path, _vecs(spark), queries, top_k=3, n_probe=2,
-            candidates=10,
-        )
-
-    first = build_and_search(m=2).collect()
-    assert len(first) > 0
-    # same path, different m: a stale (m, dim) memo would mis-slice
-    # query subvectors (wrong scores) or fail; the rebuild must serve
-    # the NEW index's parameters
-    second = build_and_search(m=4).collect()
-    assert len(second) > 0
-    assert {r.query_id for r in second} == {2}
-
-
 def test_read_parquet_pinned_abspath_and_invalidation(spark, tmp_path):
     """r14 ADVICE (low): relative and absolute spellings of one dir
     share a pinned-schema entry, and invalidate_pinned_schemas drops
