@@ -2,36 +2,19 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {id: sec}, "sf": ...}.
+"queries": {id: sec}, "paths": {id: "graded" | "deploy"}, "sf": ...}.
 
 Each query is timed over a full action (noop write — computes everything,
 collects nothing), after a JVM/reader warmup pass.
 
-Load canary (round-10 VERDICT #5, rebuilt round 13 per r12 #2): this
-host carries a measured ±40% same-day wall envelope (BASELINE.md
-§Round 8/§Round 10 — uniform inflation with byte-identical plans).
-The single-query instrument (dedup-minhash vs its BENCH_r10 idle
-wall) failed its one job in BENCH_r12: nearly every untouched plan
-read 1.2-1.5× its r11 wall while minhash — the one query that did NOT
-slow down — declared the host idle (load_factor 0.994). Ambient load
-is evidently non-uniform across query shapes, so the instrument is
-now the MEDIAN of five untouched shape-spanning headline plans
-(scan-agg, join, window, shuffle+UDF, broadcast-grid eval), each
-against its committed BENCH_r10 near-idle wall; the per-query ratio
-spread is emitted alongside so a single-plan regression (one outlier,
-tight median) is distinguishable from host load (uniform shift).
-``load_factor`` scales every wall into ``queries_loadnorm``/
-``value_loadnorm``. RAW fields are unchanged and remain the record;
-the normalized ones are the adjudication aid — a future drift is a
-plan/code regression only if it survives normalization (and the plan
-diff agrees).
+Walls are raw; host load is adjudicated by perfbench's interleaved
+parent/change pairs (perfbench/README.md), not by reference walls here.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
@@ -42,24 +25,6 @@ from itdb_spark.session import default_parallelism, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Ambient-load canary: committed reference walls from the BENCH_r10
-# driver record (near-idle: its 18-query total 24.55 s sits 0.8% over
-# the same-day round-close idle reading of 24.36 s, BASELINE.md
-# §Round 10). Five untouched plans spanning execution shapes — a
-# median over shapes is robust to the non-uniform ambient load that
-# blinded the single-query form in BENCH_r12 (r12 VERDICT #2). All
-# five plans are stable since r10 (PLANS.md, CI-gated). The refs are
-# only meaningful at sf0.1; at any other SF the canary reports raw
-# walls with load_factor null.
-CANARY_REFS = {  # BENCH_r10 record walls, sf0.1, local[32]
-    "agg-hist-genre": 0.332,  # scan-agg (group-by over one table)
-    "join-pt": 0.545,  # shuffle join
-    "win-topk-group": 0.375,  # window function
-    "dedup-minhash": 1.212,  # shuffle + Arrow-UDF mix (deploy twin)
-    "eval-chrf": 1.261,  # broadcast grid + higher-order exprs
-}
-CANARY_REF_RECORD = "BENCH_r10"
-CANARY_REF_SF = 0.1
 
 def run_action(df) -> int:
     # noop sink: full computation, zero driver materialization
@@ -121,38 +86,6 @@ def main() -> None:
         "paths": paths,
         "sf": sf_val,
     }
-
-    # Self-adjudicating load canary (module docstring): raw walls above
-    # are the record; a UNIFORM ratio shift across the five shapes is
-    # the host-load signature (normalize and compare), while a tight
-    # median with one outlying ratio fingers that plan specifically.
-    ratios = {
-        qid: round(timings[qid] / ref, 3)
-        for qid, ref in CANARY_REFS.items()
-        if timings.get(qid) and sf_val == CANARY_REF_SF
-    }
-    # load_factor only from the COMPLETE canary set: a canary qid
-    # missing or timed 0.0 silently shifts the median (r13 ADVICE: the
-    # old upper-middle pick biased it upward on even-sized sets), so a
-    # partial set reports raw walls with load_factor null instead
-    lf = None
-    if ratios and len(ratios) == len(CANARY_REFS):
-        lf = round(statistics.median(ratios.values()), 3)
-    out["canary"] = {
-        "method": f"median-of-{len(CANARY_REFS)}",
-        "refs": CANARY_REFS,
-        "ref_record": CANARY_REF_RECORD,
-        "ratios": ratios,
-        "spread": [min(ratios.values()), max(ratios.values())]
-        if ratios
-        else None,
-        "load_factor": lf,
-    }
-    if lf:
-        out["queries_loadnorm"] = {
-            qid: round(w / lf, 3) for qid, w in timings.items()
-        }
-        out["value_loadnorm"] = round(sum(timings.values()) / lf, 3)
 
     print(json.dumps(out))
     spark.stop()

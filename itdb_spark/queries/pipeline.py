@@ -1678,9 +1678,9 @@ def _dedup_incremental_impl(
     from itdb_spark.plans.library import scan_parallelism_floor
 
     # Parallelism floor (r14): localized HERE, not inside
-    # minhash_signatures — dedup-minhash is a load canary whose plan
-    # must stay untouched. The profile showed the whole shingle+hash
-    # pipeline as one 3-task stage (the corpus scan's row groups).
+    # minhash_signatures, so the rest of the MinHash family keeps its
+    # plans. The profile showed the whole shingle+hash pipeline as one
+    # 3-task stage (the corpus scan's row groups).
     bands = minhash_bands(
         minhash_signatures(
             scan_parallelism_floor(corpus(spark, sf_dir)),
@@ -4942,6 +4942,24 @@ def sim_knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 from itdb_spark.operators.texteval import rouge_oracle_sql as _rouge_oracle_sql  # noqa: E402
 
 
+def _consecutive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The eval family's (pair_id, cand_text, ref_text) pairing: doc d
+    against doc d+1 for d < 30, plus every consecutive pair at ids >=
+    EDGE_ID_FLOOR, where the edge corpus plants its degenerate docs
+    (empty/whitespace/unicode/CJK) so the adversarial sweep probes the
+    metrics' floors. The floor is the shared catalog constant — the
+    invariants gate keeps real testdata ids below it, so this predicate
+    can never silently pair unintended real docs."""
+    d = Tables(spark, sf_dir).documents
+    cand = d.select(F.col("doc_id").alias("pair_id"),
+                    F.col("text").alias("cand_text"))
+    ref = d.select((F.col("doc_id") - 1).alias("pair_id"),
+                   F.col("text").alias("ref_text"))
+    return cand.where(
+        (F.col("pair_id") < 30) | (F.col("pair_id") >= EDGE_ID_FLOOR)
+    ).join(ref, "pair_id")
+
+
 @register(
     "eval-rouge",
     oracle=_rouge_oracle_sql(n=1, n_pairs=30),
@@ -4950,32 +4968,18 @@ from itdb_spark.operators.texteval import rouge_oracle_sql as _rouge_oracle_sql 
     "decontamination-scoring shape: clipped multiset unigram overlap "
     "with precision/recall/F1 in exact integer micro-units (F1 via the "
     "count-level identity 2*overlap/(n_cand+n_ref) — ONE integer floor "
-    "division, never compounded rounded ratios). Each side's grams "
-    "explode once; both union into a single (pair, gram)-keyed groupBy "
-    "(one gram-postings shuffle) then a bounded per-pair aggregate — "
-    "no join back to the corpus. Empty/degenerate texts yield explicit "
-    "zero rows (explode_outer + division guards), edge-corpus-proof by "
-    "construction.",
+    "division, never compounded rounded ratios). Runs the eval "
+    "family's one clipped-count stage (texteval._clipped_counts) at "
+    "n=1: one explode per side, one (pair, n, gram)-keyed groupBy (the "
+    "single gram-postings shuffle), a bounded per-pair clip fold, and "
+    "a left join from the broadcast pairs x n grid, so empty/"
+    "degenerate texts keep explicit zero rows (division guards give 0, "
+    "not NULL), edge-corpus-proof by construction.",
 )
 def eval_rouge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itdb_spark.operators.texteval import rouge_n
 
-    t = Tables(spark, sf_dir)
-    d = t.documents
-    cand = d.select(F.col("doc_id").alias("pair_id"),
-                    F.col("text").alias("cand_text"))
-    ref = d.select((F.col("doc_id") - 1).alias("pair_id"),
-                   F.col("text").alias("ref_text"))
-    # < 30 on normal testdata; >= EDGE_ID_FLOOR additionally pairs the
-    # edge corpus's consecutive planted degenerate docs (empty/
-    # whitespace/unicode/CJK), so the adversarial sweep probes ROUGE's
-    # floors. The floor is the shared catalog constant — the invariants
-    # gate keeps real testdata ids below it, so this predicate can
-    # never silently pair unintended real docs (round-6 ADVICE).
-    pairs = cand.where(
-        (F.col("pair_id") < 30) | (F.col("pair_id") >= EDGE_ID_FLOOR)
-    ).join(ref, "pair_id")
-    return rouge_n(pairs, n=1)
+    return rouge_n(_consecutive_pairs(spark, sf_dir), n=1)
 
 
 from itdb_spark.operators.texteval import bleu_oracle_sql as _bleu_oracle_sql  # noqa: E402
@@ -4993,29 +4997,23 @@ from itdb_spark.operators.texteval import bleu_oracle_sql as _bleu_oracle_sql  #
     "arithmetic; the irrational geometric-mean/exp fold a BLEU "
     "consumer applies is a driver-side afterthought over these "
     "integers, never inside the relation (the eval-rouge/eval-"
-    "retrieval integer-micros discipline). One tokenization per side "
-    "emits all four gram levels through a single explode (concat of "
+    "retrieval integer-micros discipline). The eval-rouge clipped-"
+    "count stage at n = 1..4, folded wide per pair: all four gram "
+    "levels leave each side through a single explode (concat of "
     "level-tagged transforms — NOTE F.transform's two-arg lambda form "
     "binds the element INDEX, so level tags use one-arg closures), "
-    "then one (pair, n, gram)-keyed map-side-combined shuffle and two "
-    "bounded per-pair folds. Empty/degenerate texts keep explicit "
-    "zero-count rows (explode_outer + guards), and the edge corpus's "
+    "then one (pair, n, gram)-keyed map-side-combined shuffle, the "
+    "per-(pair, n) clip fold, the broadcast pairs x n grid join and "
+    "one per-pair fold; c_len/r_len are the unigram totals (the n=1 "
+    "grams are the tokens). Empty/degenerate texts keep explicit "
+    "zero-count rows and zero-guarded ratios, and the edge corpus's "
     "planted degenerate pairs at ids >= EDGE_ID_FLOOR exercise them "
     "adversarially.",
 )
 def eval_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itdb_spark.operators.texteval import bleu_counts
 
-    t = Tables(spark, sf_dir)
-    d = t.documents
-    cand = d.select(F.col("doc_id").alias("pair_id"),
-                    F.col("text").alias("cand_text"))
-    ref = d.select((F.col("doc_id") - 1).alias("pair_id"),
-                   F.col("text").alias("ref_text"))
-    pairs = cand.where(
-        (F.col("pair_id") < 30) | (F.col("pair_id") >= EDGE_ID_FLOOR)
-    ).join(ref, "pair_id")
-    return bleu_counts(pairs, max_n=4)
+    return bleu_counts(_consecutive_pairs(spark, sf_dir), max_n=4)
 
 
 def _kcore_oracle(k: int = 2, rounds: int = 4) -> str:
@@ -5483,16 +5481,7 @@ from itdb_spark.operators.texteval import chrf_oracle_sql as _chrf_oracle_sql  #
 def eval_chrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itdb_spark.operators.texteval import chrf_counts
 
-    t = Tables(spark, sf_dir)
-    d = t.documents
-    cand = d.select(F.col("doc_id").alias("pair_id"),
-                    F.col("text").alias("cand_text"))
-    ref = d.select((F.col("doc_id") - 1).alias("pair_id"),
-                   F.col("text").alias("ref_text"))
-    pairs = cand.where(
-        (F.col("pair_id") < 30) | (F.col("pair_id") >= EDGE_ID_FLOOR)
-    ).join(ref, "pair_id")
-    return chrf_counts(pairs, max_n=6)
+    return chrf_counts(_consecutive_pairs(spark, sf_dir), max_n=6)
 
 
 @register(

@@ -72,6 +72,21 @@ _PLIST_ORACLE = """
 """
 
 
+def _built_file(prefix: str, sf_dir: str, name: str, write) -> str:
+    """Path of a fixture file ``write(path)`` fills once per process in a
+    private scratch dir (``built_once``); the oracles that check these
+    sources are pure arithmetic and never read the file."""
+    def build(d: str) -> str:
+        write(os.path.join(d, name))
+        return os.path.join(d, name)
+
+    return built_once(prefix, sf_dir, build)
+
+
+def _plist_fixture(sf_dir: str) -> str:
+    return _built_file("itdb_spark_plist_", sf_dir, "library.xml", _synth_library)
+
+
 @register(
     "src-plist",
     oracle=_PLIST_ORACLE,
@@ -81,11 +96,7 @@ _PLIST_ORACLE = """
     "library file, parses it distributed, returns the tracks DataFrame.",
 )
 def src_plist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = os.path.join(tempfile.gettempdir(), "itdb_spark_plist")
-    os.makedirs(d, exist_ok=True)
-    lib = os.path.join(d, "library.xml")
-    if not os.path.exists(lib):
-        _synth_library(lib)
+    lib = _plist_fixture(sf_dir)
     rels = read_itunes_library(spark, lib, user_id=1)
     return rels["tracks"].select("User_ID", "Track_ID", "Name", "Artist", "Genre", "Rating")
 
@@ -104,11 +115,7 @@ def src_plist(spark: SparkSession, sf_dir: str) -> DataFrame:
 def src_plist_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itdb_spark.sources.plist import read_itunes_tracks_chunked
 
-    d = os.path.join(tempfile.gettempdir(), "itdb_spark_plist")
-    os.makedirs(d, exist_ok=True)
-    lib = os.path.join(d, "library.xml")
-    if not os.path.exists(lib):
-        _synth_library(lib)
+    lib = _plist_fixture(sf_dir)
     tracks = read_itunes_tracks_chunked(spark, lib, user_id=1, chunk_bytes=4096)
     return tracks.select("User_ID", "Track_ID", "Name", "Artist", "Genre", "Rating")
 
@@ -125,11 +132,7 @@ def src_plist_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
 def src_plist_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itdb_spark.sources.plist_datasource import PlistDataSource
 
-    d = os.path.join(tempfile.gettempdir(), "itdb_spark_plist")
-    os.makedirs(d, exist_ok=True)
-    lib = os.path.join(d, "library.xml")
-    if not os.path.exists(lib):
-        _synth_library(lib)
+    lib = _plist_fixture(sf_dir)
     spark.dataSource.register(PlistDataSource)
     tracks = (
         spark.read.format("itunes_plist")
@@ -143,30 +146,11 @@ def src_plist_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _synth_tree(root: str, n: int = 40) -> None:
     """Deterministic file tree (seedless formula): file f{i:03d}.bin holds
     exactly i*37 % 991 + 1 bytes — so a DuckDB oracle can predict the
-    listing without touching the filesystem.
-
-    Reconciles the directory to EXACTLY the expected set (ADVICE r3): any
-    stale file from an older layout (e.g. a previous n>40 config) or a
-    process squatting the well-known path would otherwise add rows and
-    break the hash gate. Removals tolerate concurrent reconcilers — two
-    processes converging on the same expected set cannot fight."""
-    expected = {f"f{i:03d}.bin": i * 37 % 991 + 1 for i in range(1, n + 1)}
+    listing without touching the filesystem. ``root`` must be empty."""
     os.makedirs(root, exist_ok=True)
-    for name in os.listdir(root):
-        if name not in expected:
-            stale = os.path.join(root, name)
-            try:
-                if os.path.isdir(stale) and not os.path.islink(stale):
-                    shutil.rmtree(stale)  # a squatting subdir would perturb
-                else:  # the listing just like a stale file (ADVICE r4)
-                    os.remove(stale)
-            except FileNotFoundError:
-                pass  # concurrent reconciler already removed it
-    for name, size in expected.items():
-        p = os.path.join(root, name)
-        if not (os.path.exists(p) and os.path.getsize(p) == size):
-            with open(p, "wb") as fh:
-                fh.write(b"x" * size)
+    for i in range(1, n + 1):
+        with open(os.path.join(root, f"f{i:03d}.bin"), "wb") as fh:
+            fh.write(b"x" * (i * 37 % 991 + 1))
 
 
 @register(
@@ -184,8 +168,7 @@ def _synth_tree(root: str, n: int = 40) -> None:
     "wrong length column) breaks the hash gate.",
 )
 def src_fswalk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root = os.path.join(tempfile.gettempdir(), "itdb_spark_fswalk")
-    _synth_tree(root)
+    root = _built_file("itdb_spark_fswalk_", sf_dir, "tree", _synth_tree)
     files = scan_files(spark, root, glob="*.bin")
     return files.select(
         F.regexp_extract("path", r"([^/]+)$", 1).alias("filename"), "size"
@@ -406,14 +389,11 @@ def _synth_jsonl(path: str, n: int = 60) -> None:
     """Deterministic JSON-lines checksum cache shaped like the reference's
     checksums.dat (dupes/dedup.py:37-75): one object per line with
     formula-predictable path/mtime and an md5 checksum of the path — so a
-    DuckDB oracle recomputes every field without touching the file.
-    Rewritten atomically from scratch each run (same hygiene as
-    _synth_tree: a stale or squatted file cannot perturb the gate)."""
+    DuckDB oracle recomputes every field without touching the file."""
     import hashlib
     import json
 
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
+    with open(path, "w") as fh:
         for i in range(1, n + 1):
             p = f"/media/f{i:03d}.bin"
             fh.write(
@@ -427,7 +407,6 @@ def _synth_jsonl(path: str, n: int = 60) -> None:
                 )
                 + "\n"
             )
-    os.replace(tmp, path)
 
 
 @register(
@@ -452,8 +431,8 @@ def _synth_jsonl(path: str, n: int = 60) -> None:
 def src_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
-    path = os.path.join(tempfile.gettempdir(), "itdb_spark_checksums.jsonl")
-    _synth_jsonl(path)
+    path = _built_file(
+        "itdb_spark_checksums_", sf_dir, "checksums.jsonl", _synth_jsonl)
     schema = T.StructType(
         [
             T.StructField("path", T.StringType(), False),

@@ -260,84 +260,6 @@ def funnel_stream(events_stream: DataFrame) -> DataFrame:
     )
 
 
-def funnel_stream_tws(events_stream: DataFrame) -> DataFrame:
-    """The transformWithStateInPandas form of funnel_stream — Spark 4's
-    arbitrary-state API (SPARK-49568): the same set-once transitions as
-    _funnel_update, but state lives in a named ValueState on the RocksDB
-    state-store provider, which buys schema evolution, state TTL, and
-    multiple typed state variables per key over applyInPandasWithState's
-    single tuple. Requires the protobuf runtime (the TWS driver worker
-    speaks protobuf to the JVM) — absent in this container, so the call
-    raises ImportError with the dependency named rather than failing
-    deep inside a stream; tests/test_stateful.py gates on the import and
-    asserts equivalence with funnel_stream when it is available."""
-    try:
-        import google.protobuf  # noqa: F401  TWS driver-worker dependency
-        from pyspark.sql.streaming import StatefulProcessor
-    except ImportError as e:  # pragma: no cover - exercised only w/o protobuf
-        raise ImportError(
-            "transformWithStateInPandas needs the protobuf runtime "
-            "(pip install protobuf) — use funnel_stream (applyInPandasWithState) "
-            "where it is unavailable"
-        ) from e
-
-    class _FunnelProcessor(StatefulProcessor):
-        def init(self, handle):
-            self._st = handle.getValueState(
-                "funnel", "t_view_us long, t_click_us long, t_purchase_us long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            # NULL-key rule mirrors _funnel_update: the LEFT JOIN oracle
-            # never matches a NULL user, so this group stays at stage 0.
-            null_key = key[0] is None or pd.isna(key[0])
-            tv, tc, tp = (
-                self._st.get()
-                if self._st.exists() and not null_key
-                else (None, None, None)
-            )
-            batch = pd.concat(list(rows), ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            if null_key:
-                batch = batch.iloc[0:0]
-            for r in batch.itertuples(index=False):
-                if pd.isna(r.ts):  # defense: pre-filtered below
-                    continue
-                ts_us = r.ts.value // 1000
-                if r.event_type == "view":
-                    if tv is None:
-                        tv = ts_us
-                elif r.event_type == "click":
-                    if tv is not None and tc is None and ts_us > tv:
-                        tc = ts_us
-                elif r.event_type == "purchase":
-                    if tc is not None and tp is None and ts_us > tc:
-                        tp = ts_us
-            self._st.update((tv, tc, tp))
-            stage = 3 if tp is not None else 2 if tc is not None else 1 if tv is not None else 0
-            yield pd.DataFrame(
-                [(key[0], tv, tc, tp, stage)],
-                columns=[
-                    "user_id", "t_view_us", "t_click_us", "t_purchase_us", "stage",
-                ],
-            )
-
-        def close(self):
-            pass
-
-    filtered = events_stream.where(
-        events_stream["event_type"].isin("view", "click", "purchase")
-        & events_stream["ts"].isNotNull()
-    )
-    return filtered.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_FunnelProcessor(),
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 # --- streaming EWMA (win-ewma's stateful twin) -------------------------------
 
 # W[i] = 3^i * 4^(7-i), D[s] = sum(W[:s]) — INTEGER literals, the same

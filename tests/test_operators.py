@@ -319,22 +319,25 @@ def test_decode_jpeg_padding_and_terminators():
     assert decode_image_header(b"\xff\xd8" + sof0[:7]) is None
 
 
-def test_fswalk_synth_tree_reconciles_stale_files(tmp_path):
-    """A stale *.bin from an older layout (or a squatter on the well-known
-    tmp path) must be removed, not listed — the hash gate counts rows."""
+def test_src_plist_ignores_planted_library(spark, tmp_path, monkeypatch):
+    """A library.xml planted at the old shared tmp path is never read:
+    src-plist parses its own private fixture and returns the oracle's
+    50 rows, not the planted one-track library."""
     import os
+    import tempfile
 
-    from itdb_spark.queries.scans import _synth_tree
+    import duckdb
 
-    root = str(tmp_path / "walk")
-    os.makedirs(root)
-    stale = os.path.join(root, "f999.bin")
-    with open(stale, "wb") as fh:
-        fh.write(b"x" * 123)
-    _synth_tree(root)
-    names = sorted(os.listdir(root))
-    assert len(names) == 40 and "f999.bin" not in names
-    assert os.path.getsize(os.path.join(root, "f001.bin")) == 1 * 37 % 991 + 1
+    import itdb_spark.queries as queries
+    from itdb_spark.queries.scans import _PLIST_ORACLE, _synth_library, src_plist
+
+    os.makedirs(tmp_path / "itdb_spark_plist")
+    _synth_library(str(tmp_path / "itdb_spark_plist" / "library.xml"), n_tracks=1, n_playlists=1)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(queries, "_BUILT", {})
+    got = sorted(tuple(r) for r in src_plist(spark, str(tmp_path)).collect())
+    want = sorted(duckdb.sql(_PLIST_ORACLE).fetchall())
+    assert len(got) == 50 and got == want
 
 
 def test_ranged_cumsum_matches_global_window(spark):
@@ -2107,6 +2110,69 @@ def test_chrf_hand_counts_and_identity(spark):
         r = rows[(3, n)]
         assert r.m == 0 and r.tc == 0 and r.p_micros == 0
     assert rows[(3, 1)].tr == 2 and rows[(3, 2)].tr == 1
+
+
+def test_texteval_heads_match_pure_python_reference(spark):
+    """rouge_n (n=1..3), bleu_counts (max_n=4) and chrf_counts (max_n=6)
+    against a pure-Python clipped-count reference on degenerate text:
+    NULL, empty and whitespace-only sides, texts shorter than n,
+    repeated grams (clipping), CJK, and precomposed vs decomposed
+    accents (distinct code points, so they must NOT match)."""
+    import re
+    from collections import Counter
+
+    from itdb_spark.operators.texteval import bleu_counts, chrf_counts, rouge_n
+
+    data = [
+        (0, None, "a b"),
+        (1, "", "   "),
+        (2, " \t\n ", "x"),
+        (3, "one two", "one two"),
+        (4, "a a a b", "a b b a"),
+        (5, "the cat the cat the cat", "the cat sat"),
+        (6, "漢字語 漢語", "漢語"),
+        (7, "caf\u00e9 Na\u00efve", "cafe\u0301 na\u00efve"),
+        (8, "\u00c9COLE \u00c9cole", "\u00e9cole"),
+    ]
+    pairs = spark.createDataFrame(
+        data, "pair_id long, cand_text string, ref_text string")
+    ws = r"[ \t\n\x0b\f\r]+"  # Java regex \s: ASCII whitespace only
+
+    def words(t, n):
+        toks = [w for w in re.split(ws, (t or "").lower()) if w]
+        return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+    def chars(t, n):
+        s = re.sub(ws, "", (t or "").lower())
+        return [s[i:i + n] for i in range(len(s) - n + 1)]
+
+    def clip(c, r):
+        return sum((Counter(c) & Counter(r)).values()), len(c), len(r)
+
+    def mu(num, den):
+        return num * 10**6 // den if den > 0 else 0
+
+    for n in (1, 2, 3):
+        want = []
+        for pid, c, r in data:
+            m, tc, tr = clip(words(c, n), words(r, n))
+            want.append((pid, tc, tr, m, mu(m, tc), mu(m, tr), mu(2 * m, tc + tr)))
+        got = sorted(tuple(x) for x in rouge_n(pairs, n=n).collect())
+        assert got == want, n
+
+    want = []
+    for pid, c, r in data:
+        cl = [clip(words(c, n), words(r, n)) for n in range(1, 5)]
+        want.append((pid, cl[0][1], cl[0][2], *[v for m, t, _ in cl for v in (m, t)],
+                     *[mu(m, t) for m, t, _ in cl]))
+    assert sorted(tuple(x) for x in bleu_counts(pairs, max_n=4).collect()) == want
+
+    want = []
+    for pid, c, r in data:
+        for n in range(1, 7):
+            m, tc, tr = clip(chars(c, n), chars(r, n))
+            want.append((pid, n, m, tc, tr, mu(m, tc), mu(m, tr), mu(5 * m, 4 * tr + tc)))
+    assert sorted(tuple(x) for x in chrf_counts(pairs, max_n=6).collect()) == want
 
 
 def test_mannwhitney_matches_pure_python_reference(spark):

@@ -269,81 +269,6 @@ def test_stream_funnel_carries_state_across_batches(spark, tmp_path):
     assert all(e.stage >= 0 for e in em)
 
 
-def test_funnel_tws_equivalence_or_gated(spark, tmp_path):
-    """funnel_stream_tws (transformWithStateInPandas) must equal
-    funnel_stream when the protobuf runtime exists; without it the
-    operator must fail FAST with the dependency named (not deep inside
-    a running stream)."""
-    import pytest as _pytest
-
-    from itdb_spark.streaming.stateful import funnel_stream, funnel_stream_tws
-
-    try:
-        import google.protobuf  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    from itdb_spark.catalog import EVENTS_RAW_SCHEMA
-    import datetime as dt
-
-    T0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    rows = [
-        (1, T0, 7, "view", 0.0, "{}"),
-        (2, T0 + dt.timedelta(minutes=1), 7, "click", 0.0, "{}"),
-        (3, T0 + dt.timedelta(minutes=2), 7, "purchase", 0.0, "{}"),
-    ]
-    d = str(tmp_path / "tws")
-    spark.createDataFrame(rows, EVENTS_RAW_SCHEMA).coalesce(1).write.parquet(d)
-    stream = spark.readStream.format("parquet").schema(EVENTS_RAW_SCHEMA).load(d)
-
-    if not has_protobuf:
-        # Hard-assert branch (round-12, VERDICT r11 #7 — this was the
-        # suite's one permanent skip): on THIS host the documented
-        # contract is the absence path itself — protobuf is not
-        # installed and package installs are out of scope, so what the
-        # operator owes the caller is a FAST ImportError that names the
-        # missing runtime and the working fallback, raised at call time
-        # rather than deep inside a running stream. Verify exactly
-        # that, in full, and pass: nothing testable on this host is
-        # being waved through. The tws-vs-applyInPandasWithState
-        # equivalence branch below runs whenever a protobuf runtime
-        # exists (it is the same test body, not a separate suite).
-        with _pytest.raises(ImportError, match="protobuf") as exc:
-            funnel_stream_tws(stream)
-        msg = str(exc.value)
-        assert "funnel_stream" in msg and "applyInPandasWithState" in msg, (
-            f"fail-fast message must name the working fallback: {msg!r}"
-        )
-        return
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    def drive(df, name):
-        q = (df.writeStream.outputMode("update").format("memory")
-             .queryName(name).start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return {
-            r.user_id: (r.t_view_us, r.t_click_us, r.t_purchase_us, r.stage)
-            for r in spark.sql(
-                f"""SELECT user_id, max(t_view_us) t_view_us,
-                           max(t_click_us) t_click_us,
-                           max(t_purchase_us) t_purchase_us, max(stage) stage
-                    FROM {name} GROUP BY user_id"""
-            ).collect()
-        }
-
-    assert drive(funnel_stream_tws(stream), "tws_funnel_sink") == drive(
-        funnel_stream(stream), "aip_funnel_sink"
-    )
-
-
 def test_stream_ewma_carries_window_across_batches(spark, tmp_path):
     """EWMA state carry: 6 values in micro-batch 1 + 4 in batch 2 must
     yield the EWMA of the LAST 8 across the batch boundary (values 3..10
